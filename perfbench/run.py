@@ -2,27 +2,33 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload hot_bands --seed 1 --seconds 1 --trace 0
+    python3 perfbench/run.py --workload hot_bands --seed 1 --seconds 15 --trace 0
 
 Each run:
 
 1. prepares its input from ``--seed`` with ``sources.datagen`` (cached under
    ``.perfbench_cache/``, never timed);
-2. sets up: launches the JVM and a SparkSession, then runs one warm-up pass
-   on the input. ``setup_s`` is start plus warm-up. The first pass of a JVM
-   pays JIT compilation and Python worker start-up, 2-4x a steady pass;
-3. runs timed passes for ``--seconds`` (at least ``MIN_PASSES``). A batch
-   pass is ``DedupPipeline.run`` until the cluster assignment is collected;
-   a stream pass feeds the input to ``IncrementalNearDup.process_batch`` as
-   ``STREAM_BATCHES`` micro-batches (by ``row_idx``) with a fresh state
-   directory. Releasing caches and state between passes is not timed;
+2. sets up: launches the JVM and a SparkSession, then runs one warm-up
+   pass (``WARMUP_PASSES``) on the input. ``setup_s`` is start plus
+   warm-up. The first pass of a JVM pays JIT compilation and Python worker
+   start-up, about 2.5x a later pass; from the second pass on, passes are
+   flat (see the JIT note in ``configure_env``);
+3. runs timed passes for ``--seconds`` (at least ``MIN_PASSES``) and reports
+   their median. A batch pass is ``DedupPipeline.run`` until the cluster
+   assignment is collected; a stream pass feeds the input to
+   ``IncrementalNearDup.process_batch`` as ``STREAM_BATCHES`` micro-batches
+   (by ``row_idx``) with a fresh state directory. Releasing caches and state
+   between passes is not timed;
 4. checks every pass, the warm-up included, against the generator's
-   ``truth_cluster``: a pass whose dup-pair recall is below 0.99 or whose
-   precision is below ``MIN_PRECISION`` is failed. Failed passes are kept and
-   lower ``ok_frac``.
+   ``truth_cluster``: a pass whose dup-pair recall is below 0.99, whose
+   precision is below ``MIN_PRECISION``, or whose cluster assignment does
+   not hold exactly one row per input file is failed. Recall counts against
+   every same-truth pair of the input. Failed passes are kept and lower
+   ``ok_frac``.
 
 With ``--trace 1`` the timed passes alternate untraced and traced (see
-tracing.py) and the run reports the per-layer metrics instead.
+tracing.py), at least ``MIN_TRACE_PASSES`` of them, and the run reports the
+per-layer metrics instead.
 
 Every pass prints a ``pass`` line with its timings and its host window
 (steal seconds, load average), so a noisy window shows in the output. The
@@ -44,8 +50,9 @@ ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(ROOT, ".perfbench_cache")
 
 CORES = 4
-WARMUP_PASSES = 2
-MIN_PASSES = 2
+WARMUP_PASSES = 1
+MIN_PASSES = 3
+MIN_TRACE_PASSES = 2       # one untraced, one traced
 MIN_RECALL = 0.99          # the north rule's dup-pair recall
 MIN_PRECISION = 0.9
 STREAM_BATCHES = 3
@@ -97,16 +104,25 @@ def configure_env() -> None:
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS_OVERRIDE"] = os.path.join(CACHE, "spark-local")
-    # a fixed, pre-touched 4g heap: otherwise the JVM's share of the peak
-    # RSS depends on how much heap the collector happened to touch, which
-    # varied by a third between identical runs
+    # a 4g heap cap (the session default of 12g is most of a 16 GB host),
+    # a fixed young generation, and heap growth only when the live data
+    # needs it (GCTimeRatio=1 turns off growth to cut GC time). With the
+    # adaptive defaults the collector grew the heap by 0.3 or 0.75 GB in
+    # the first timed pass, at random, so the peak RSS of identical runs
+    # fell into two levels a third apart. The heap is not pre-touched, so
+    # RSS follows what the program uses.
     os.environ["SPARK_DRIVER_MEM"] = "4g"
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    # C1 only: with the C2 compiler on, passes of this size kept getting
+    # faster for minutes (C2 still compiling 1-2 s of CPU a pass at the
+    # sixth pass), and the pass time two identical JVMs settled at differed
+    # by up to a quarter. With C1 alone a pass is 20-40% slower than the
+    # best C2 pass, but flat from the second pass on and alike across JVMs.
     os.environ["SPARK_SUBMIT_OPTS"] = " ".join(filter(None, (
         os.environ.get("SPARK_SUBMIT_OPTS"),
-        f"-Djava.io.tmpdir={tmp}", "-XX:-UsePerfData", "-Xms4g",
-        "-XX:+AlwaysPreTouch")))
+        f"-Djava.io.tmpdir={tmp}", "-XX:-UsePerfData", "-Xmn768m",
+        "-XX:GCTimeRatio=1", "-XX:TieredStopAtLevel=1")))
     os.environ["SPARK_LAUNCHER_OPTS"] = " ".join(filter(None, (
         os.environ.get("SPARK_LAUNCHER_OPTS"), "-XX:-UsePerfData")))
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
@@ -120,15 +136,19 @@ def _pairs(sizes) -> int:
     return int(sum(n * (n - 1) // 2 for n in sizes))
 
 
-def cluster_pair_scores(truth, pred) -> tuple[float, float]:
+class GateError(ValueError):
+    """The program's output is not a valid answer for the input."""
+
+
+def cluster_pair_scores(truth, pred, t_pairs: int) -> tuple[float, float]:
     """Dup-pair recall and precision of a clustering: two files form a pair
-    when they share a cluster. ``truth`` and ``pred`` are aligned series."""
+    when they share a cluster. ``truth`` and ``pred`` are aligned series;
+    ``t_pairs`` is the number of same-truth pairs of the whole input."""
     import pandas as pd
 
     cells = pd.DataFrame({"t": truth.values, "p": pred.values}) \
         .value_counts().values
     tp = _pairs(cells)
-    t_pairs = _pairs(truth.value_counts().values)
     p_pairs = _pairs(pred.value_counts().values)
     return (tp / t_pairs if t_pairs else 1.0,
             tp / p_pairs if p_pairs else 1.0)
@@ -246,7 +266,11 @@ class Runner:
                 rec["cpu_s"] = tree_cpu_s(self.jvm_pid) - cpu0
                 rec["peak_rss_mb"] = self.rss.peak()
             rec["steal_s"], rec["load_1m"] = host.steal_s, host.load_1m
-            rec["recall"], rec["precision"] = check()
+            try:
+                rec["recall"], rec["precision"] = check()
+            except GateError as e:
+                rec["recall"] = rec["precision"] = 0.0
+                rec["gate"] = str(e)
         except Exception as e:              # a failed pass is counted, not fatal
             rec["error"] = f"{type(e).__name__}: {e}"[:500]
         rec["ok"] = "error" not in rec and gate_ok(rec["recall"], rec["precision"])
@@ -267,9 +291,15 @@ class Runner:
         pipe.close()
 
         def check():
-            truth = self.inputs.truth_by_path.reindex(pdf["path"])
-            return cluster_pair_scores(truth.reset_index(drop=True),
-                                       pdf["cluster_id"])
+            known = self.inputs.truth_by_path
+            paths = pdf["path"]
+            if (len(pdf) != len(known) or not paths.is_unique
+                    or not paths.isin(known.index).all()):
+                raise GateError(
+                    f"{len(pdf)} assignment rows, {paths.nunique()} distinct "
+                    f"paths; want one row per input path ({len(known)})")
+            return cluster_pair_scores(known.reindex(paths), pdf["cluster_id"],
+                                       self.inputs.truth_pairs)
         return check
 
     def _stream(self, rec: dict, tracer):
@@ -458,7 +488,8 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
                 tracer = Tracer(spark)
             deadline = time.monotonic() + seconds
             k = 0
-            while k < MIN_PASSES or time.monotonic() < deadline:
+            min_passes = MIN_TRACE_PASSES if trace else MIN_PASSES
+            while k < min_passes or time.monotonic() < deadline:
                 traced = trace and k % 2 == 1
                 if traced:
                     tracer.begin_pass(str(k))

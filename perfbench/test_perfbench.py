@@ -77,17 +77,41 @@ def test_corrupted_assignment_trips_the_gate(monkeypatch):
     assert result["metrics"]["dup_pair_recall"]["value"] == 0.0
 
 
+def test_lost_cluster_trips_the_gate(monkeypatch):
+    from pyspark.sql import functions as F
+
+    from deduplipy_spark.plans import pipeline
+
+    truth = bench.Inputs("hot_bands", "tiny", seed=3).truth_by_path
+    biggest = truth.value_counts().index[0]
+    lost = truth.index[truth == biggest].tolist()
+    real_run = pipeline.DedupPipeline.run
+
+    def lossy(self, files):
+        # the rows of one whole cluster go missing from the assignment
+        return real_run(self, files).where(~F.col("path").isin(lost))
+
+    monkeypatch.setattr(pipeline.DedupPipeline, "run", lossy)
+    result = bench.run("hot_bands", seed=3, seconds=0, trace=False,
+                       size="tiny", log=lambda _: None)
+    assert not result["correct"]
+    assert result["failed"] == result["attempted"]
+    assert result["metrics"]["dup_pair_recall"]["value"] == 0.0
+
+
 def test_cluster_pair_scores():
     truth = pd.Series([1, 1, 1, 2, 2, 3])
-    assert bench.cluster_pair_scores(truth, truth) == (1.0, 1.0)
+    assert bench.cluster_pair_scores(truth, truth, 4) == (1.0, 1.0)
     # one member split off: 2 of the 4 truth pairs are lost
     split = pd.Series([1, 1, 9, 2, 2, 3])
-    assert bench.cluster_pair_scores(truth, split) == (0.5, 1.0)
+    assert bench.cluster_pair_scores(truth, split, 4) == (0.5, 1.0)
     # everything merged: recall 1, precision 4 of 15 pairs
     merged = pd.Series([0] * 6)
-    assert bench.cluster_pair_scores(truth, merged) == (1.0, 4 / 15)
-    assert not bench.gate_ok(*bench.cluster_pair_scores(truth, split))
-    assert not bench.gate_ok(*bench.cluster_pair_scores(truth, merged))
+    assert bench.cluster_pair_scores(truth, merged, 4) == (1.0, 4 / 15)
+    # recall counts against the whole input, not the rows scored
+    assert bench.cluster_pair_scores(truth, truth, 8) == (0.5, 1.0)
+    assert not bench.gate_ok(*bench.cluster_pair_scores(truth, split, 4))
+    assert not bench.gate_ok(*bench.cluster_pair_scores(truth, merged, 4))
 
 
 def test_matched_pair_scores():
