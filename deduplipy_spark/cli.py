@@ -10,7 +10,8 @@ Packaged run on a cluster (north rule's deployment form):
 In local mode (sandbox): python -m deduplipy_spark.cli run --input ... .
 Subcommands: run (flagship pipeline; --model applies a fitted Deduplicator),
 fit (active-learning console loop -> model JSON), datagen (synthesize a
-planted-cluster corpus). Repo-root bench.py is the benchmark entrypoint.
+planted-cluster corpus). Repo-root bench.py is the benchmark entrypoint;
+perfbench/run.py (--trace 1 for per-layer times) measures the pipeline.
 """
 
 from __future__ import annotations

@@ -53,7 +53,6 @@ class EngineConfig:
     hot_band_star: bool = True      # overflow members get star edges to the
                                     # band min id: linear output, CC
                                     # connectivity never silently severed
-    shuffle_partitions: int = 32
 
     # --- scoring / clustering (mirrors deduplicator.py:167 defaults) ---
     score_threshold: float = 0.1
@@ -108,7 +107,6 @@ class EngineConfig:
         d = asdict(self)
         d.pop("checkpoint_dir", None)       # location doesn't change semantics
         d.pop("save_intermediate_steps", None)
-        d.pop("shuffle_partitions", None)   # parallelism must not change results
         d.pop("driver_cc_max_edges", None)  # execution strategy, not semantics
         d["_kernel_version"] = KERNEL_VERSION
         blob = json.dumps(d, sort_keys=True, default=str).encode()

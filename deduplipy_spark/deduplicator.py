@@ -296,6 +296,9 @@ class Deduplicator:
             blob = json.load(f)
         c = blob["config"]
         c["id_cols"] = tuple(c["id_cols"])
+        # models saved before the unused shuffle_partitions field was
+        # removed still carry it; it never entered the config hash
+        c.pop("shuffle_partitions", None)
         dd = cls(col_names=blob["col_names"], config=EngineConfig(**c),
                  field_info=blob.get("field_info"),
                  interaction=bool(blob.get("interaction", False)),

@@ -20,6 +20,8 @@ class).
 
 from __future__ import annotations
 
+from numbers import Integral, Real
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,8 +74,22 @@ class PairClassifier:
         from pyspark.ml.feature import StandardScaler
         from pyspark.ml.functions import array_to_vector
 
-        counts = dict(label_counts) if label_counts else {
-            r[0]: r[1] for r in pairs.groupBy(label_col).count().collect()}
+        if label_counts:
+            # caller-supplied counts become class weights n / (k * n_c): a
+            # zero count divides by zero, a negative one flips its class
+            for c, cnt in label_counts.items():
+                if (isinstance(cnt, bool) or not isinstance(cnt, Integral)
+                        or cnt <= 0):
+                    raise ValueError(
+                        f"label_counts[{c!r}] = {cnt!r}: counts must be "
+                        f"positive integers")
+                if isinstance(c, bool) or not isinstance(c, Real):
+                    raise ValueError(
+                        f"label_counts key {c!r}: labels must be numeric")
+            counts = dict(label_counts)
+        else:
+            counts = {r[0]: r[1]
+                      for r in pairs.groupBy(label_col).count().collect()}
         classes = list(counts)
         if len(classes) == 1:
             # reference: no-op fit on single-class y (classifier_pipeline.py)

@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
 The Spark-side dataflow is real and tested — schemas, Arrow batch shapes,
-partitioning, UDF signatures. The actual codec work (image decode, resample,
-frame extraction) is STUBBED: the decode libs (PIL/ffmpeg/librosa) are not in
-this container, so `decode_stub=True` (default) produces deterministic fake
-features derived from the bytes, and `decode_stub=False` raises
-NotImplementedError at the exact call site a real codec would plug into.
+partitioning, UDF signatures. The feature encoder is STUBBED: no decode libs
+(PIL/ffmpeg/librosa) are bundled, so `decode_stub=True` (default) produces
+deterministic fake features derived from the bytes, and `decode_stub=False`
+raises NotImplementedError at the exact call site a real codec would plug
+into.
 
 Schema conventions:
   media(file_id long, kind string, payload binary,
@@ -23,10 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "file_id long, kind string, payload binary, "
-    "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
-)
 FEATURE_SCHEMA = "file_id long, kind string, feature array<float>, feat_dim int"
 
 FEAT_DIM = 32
@@ -69,52 +65,6 @@ def extract_features(media: DataFrame, decode_stub: bool = True,
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int,
-                  decode_stub: bool = True) -> DataFrame:
-    """Resize stub: passes payload through, rewrites meta dims (the real
-    implementation decodes/resizes/re-encodes inside the same mapInPandas)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError("plug PIL resize here")
-            meta = [
-                {"width": width, "height": height, "sample_rate": None,
-                 "duration_ms": None}
-                for _ in range(len(pdf))
-            ]
-            out = pdf.copy()
-            out["meta"] = meta
-            yield out
-
-    return media.where(F.col("kind") == "image").mapInPandas(run, MEDIA_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000,
-                  decode_stub: bool = True) -> DataFrame:
-    """Frame sampling stub for video: emits one row per sampled frame with a
-    deterministic pseudo-frame payload (sha-derived), real schema."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError("plug ffmpeg frame extraction here")
-            rows = []
-            for r in pdf.itertuples():
-                duration = (r.meta or {}).get("duration_ms") or 0
-                n_frames = max(1, duration // every_ms)
-                for i in range(int(n_frames)):
-                    fake = hashlib.sha256(
-                        (r.payload or b"") + i.to_bytes(4, "little")
-                    ).digest()
-                    rows.append((r.file_id, i * every_ms, fake))
-            yield pd.DataFrame(rows, columns=["file_id", "ts_ms", "frame"])
-
-    return media.where(F.col("kind") == "video").mapInPandas(
-        run, "file_id long, ts_ms long, frame binary"
-    )
 
 
 def media_dedup_features(media: DataFrame) -> DataFrame:

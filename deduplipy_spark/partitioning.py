@@ -14,7 +14,8 @@ def ensure_parallelism(df: DataFrame, tasks_per_core: int = 2) -> DataFrame:
     into fewer partitions than cores and pin the whole pass to them
     (measured in r6: the single-split sf0.1 documents table ran every
     narrow gram/fingerprint stage on ONE core). A real deployment scans
-    thousands of splits and never takes the branch."""
+    thousands of splits and never takes the branch. Returns `df` itself
+    when it is already partitioned enough, so callers can test `is`."""
     min_parts = df.sparkSession.sparkContext.defaultParallelism * tasks_per_core
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)

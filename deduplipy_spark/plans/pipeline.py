@@ -33,11 +33,11 @@ from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.ids import with_identity
 from deduplipy_spark.operators.agglomerate import cluster_components
 from deduplipy_spark.operators.components import connected_components
-from deduplipy_spark.operators.exact_dedup import representatives
 from deduplipy_spark.operators.minhash import band_keys, with_signatures
-from deduplipy_spark.operators.pairs import candidate_pairs, skew_summary
+from deduplipy_spark.operators.pairs import candidate_pairs
 from deduplipy_spark.operators.scoring import score_pairs
-from deduplipy_spark.sources.io import TableIO
+from deduplipy_spark.partitioning import ensure_parallelism
+from deduplipy_spark.sources.io import TableIO, input_fingerprint
 
 
 class DedupPipeline:
@@ -65,7 +65,6 @@ class DedupPipeline:
         self.rules_selected = rules_selected or None
         self.pair_strategy = pair_strategy
         self.io: TableIO | None = None   # constructed per-run (input-keyed)
-        self.metrics: dict = {}
         # persisted stage cuts of THIS instance's most recent run: released
         # at the start of its next run, or via close(). Per-instance (ADVICE
         # r4 #5): a process-global registry let any pipeline's run() unpersist
@@ -132,28 +131,21 @@ class DedupPipeline:
     def run(self, files: DataFrame) -> DataFrame:
         self.close()            # release THIS instance's previous-run caches
         cfg = self.cfg
-        if cfg.checkpoint_dir:
+        if cfg.checkpoint_dir or cfg.save_intermediate_steps:
             # resume key = config hash + INPUT identity (+ learned rules):
             # same checkpoint_dir with different data must recompute, not
-            # silently serve stale stage outputs
-            from deduplipy_spark.sources.io import input_fingerprint
-
-            self.io = TableIO(
-                self.spark, cfg.checkpoint_dir, cfg.config_hash(),
-                input_key=input_fingerprint(files, extra=self._variant_key()),
-            )
-        elif cfg.save_intermediate_steps:
-            # the reference's debug-dump flag (blocking.py:132-133): every
-            # stage table is written fresh to a cwd-relative dir — stage
-            # DUMPS for inspection, not resume (no manifest skip)
-            from deduplipy_spark.sources.io import input_fingerprint
-
+            # silently serve stale stage outputs. Without a checkpoint_dir,
+            # save_intermediate_steps is the reference's debug-dump flag
+            # (blocking.py:132-133): every stage table is written fresh to a
+            # cwd-relative dir — stage DUMPS for inspection, not resume (no
+            # manifest skip)
             self.io = TableIO(
                 self.spark,
-                os.path.abspath("deduplipy_intermediate_steps"),
+                cfg.checkpoint_dir
+                or os.path.abspath("deduplipy_intermediate_steps"),
                 cfg.config_hash(),
                 input_key=input_fingerprint(files, extra=self._variant_key()),
-                resume=False,
+                resume=bool(cfg.checkpoint_dir),
             )
         # The per-input conf overrides below (shuffle sizing + AQE coalesce
         # toggle) are restored on exit (ADVICE r4 #2): they no longer leak
@@ -211,21 +203,14 @@ class DedupPipeline:
             self.spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.enabled",
                 str(waves == 1).lower())
-        # Ensure the UDF-heavy stages see >= one partition per core: a small
-        # or well-compressed input can scan into fewer partitions than cores
-        # and pin the signature UDF to them (scan splits are byte-based;
-        # python cost is row-based).
-        # target >= 2 tasks/core for load balance (a 1.3-wave schedule idles
-        # a third of the cluster); real deployments scan thousands of
-        # partitions so this is a no-op there. NOTE the session already
-        # splits file scans at 8MB (session.py) precisely so this shuffle —
-        # a measured flat ~4s I/O floor moving the full content bytes —
-        # stays a last resort for non-file inputs.
-        min_parts = self.spark.sparkContext.defaultParallelism * 2
-        repartitioned = files.rdd.getNumPartitions() < min_parts
-        if repartitioned:
-            files = files.repartition(min_parts)
-        ident_full = with_identity(files, cfg.id_cols, cfg.content_col)
+        # Defensive repartition in front of the signature UDF (>= 2
+        # tasks/core: a 1.3-wave schedule idles a third of the cluster).
+        # NOTE the session already splits file scans at 8MB (session.py)
+        # precisely so this shuffle — a measured flat ~4s I/O floor moving
+        # the full content bytes — stays a last resort for non-file inputs.
+        parted = ensure_parallelism(files)
+        repartitioned = parted is not files
+        ident_full = with_identity(parted, cfg.id_cols, cfg.content_col)
         if repartitioned:
             # ident_full feeds TWO consumers (the metadata projection below
             # and the signature semi-join) — without a cut the scan AND the
@@ -392,13 +377,3 @@ class DedupPipeline:
                     "cluster_id")
         )
         return self._stage("clusters", lambda: assignment)
-
-    def run_with_metrics(self, files: DataFrame) -> DataFrame:
-        """run() + populate self.metrics (band skew, counts) for lineage."""
-        cfg = self.cfg
-        ident = with_identity(files, cfg.id_cols, cfg.content_col)
-        reps = representatives(ident)   # small-input diagnostic path only
-        sigs = with_signatures(reps, cfg)
-        bands = band_keys(sigs, cfg)
-        self.metrics["skew"] = skew_summary(bands, cfg)
-        return self.run(files)

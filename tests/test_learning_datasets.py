@@ -30,6 +30,17 @@ def test_pair_classifier_single_class_noop(spark):
     assert (out.score == 1.0).all()
 
 
+@pytest.mark.parametrize("label_counts", [{0.0: 5, 1.0: 0},     # ÷ by zero
+                                          {0.0: 5, 1.0: -2},    # < 0 weight
+                                          {0.0: 5, 1.0: 2.5},
+                                          {"no": 5, "yes": 2}])
+def test_pair_classifier_rejects_bad_label_counts(spark, label_counts):
+    df = spark.createDataFrame([([0.9], 1.0), ([0.1], 0.0)],
+                               "similarities array<double>, y double")
+    with pytest.raises(ValueError):
+        PairClassifier().fit(df, label_counts=label_counts)
+
+
 def test_voters_loader_contract(spark):
     df = load_data(spark, "voters")
     assert df.columns == ["name", "suburb", "postcode"]

@@ -12,7 +12,6 @@ from deduplipy_spark.operators.multimodal import (
     FEAT_DIM,
     extract_features,
     media_dedup_features,
-    sample_frames,
 )
 from deduplipy_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
 
@@ -102,20 +101,6 @@ def test_multimodal_features_deterministic(spark):
 
     dd = media_dedup_features(media).toPandas().set_index("file_id")
     assert dd.loc[1].payload_sha == dd.loc[3].payload_sha
-
-
-def test_sample_frames_schema(spark):
-    rows = [(7, "video", b"vid-bytes", {"width": 640, "height": 480,
-                                        "sample_rate": None, "duration_ms": 3500})]
-    media = spark.createDataFrame(
-        rows,
-        "file_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,duration_ms:int>",
-    )
-    frames = sample_frames(media, every_ms=1000).toPandas()
-    assert len(frames) == 3
-    assert list(frames.columns) == ["file_id", "ts_ms", "frame"]
-    assert frames.frame.map(len).eq(32).all()
 
 
 def test_incremental_hot_band_and_intra_batch(spark):
