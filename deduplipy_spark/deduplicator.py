@@ -186,14 +186,13 @@ class Deduplicator:
             overrides["fill_missing"] = fill_missing
         if overrides:
             cfg = dataclasses.replace(cfg, **overrides)
-        if self.model_params is not None:
-            return self._predict_learned(X, cfg)
-        spark = X.sparkSession
         if self._pipeline is not None:
             self._pipeline.close()   # previous predict's result recomputes
         self._pipeline = DedupPipeline(
-            spark, cfg, rules_selected=self.rules_selected,
+            X.sparkSession, cfg, rules_selected=self.rules_selected,
             pair_strategy=self.pair_strategy)
+        if self.model_params is not None:
+            return self._predict_learned(X, cfg)
         out = self._pipeline.run(X)
         return out.withColumnRenamed("cluster_id", "deduplication_id")
 
@@ -212,9 +211,7 @@ class Deduplicator:
         from deduplipy_spark.functions.string_metrics import similarities_col
         from deduplipy_spark.ids import file_id_col
         from deduplipy_spark.operators.active_learning import score_expr
-        from deduplipy_spark.operators.agglomerate import cluster_components
         from deduplipy_spark.operators.blocking import rule_blocker_from_selected
-        from deduplipy_spark.operators.components import connected_components
 
         if not self.rules_selected:
             raise RuntimeError("fit() learned no blocking rules; cannot block")
@@ -250,11 +247,10 @@ class Deduplicator:
             )
             .where(F.col("score") >= cfg.score_threshold)
             .select("id_1", "id_2", "score")
-            .localCheckpoint()      # consumed by CC loop + HAC: cut the DAG
         )
-        comps = connected_components(scored, cfg.max_cc_rounds,
-                                     cfg.driver_cc_max_edges)
-        clusters = cluster_components(scored, comps, cfg)
+        # consumed by CC + HAC: cut it, then the same tail as run()
+        pipe = self._pipeline
+        clusters = pipe.cluster(pipe._cut(scored))
         out = ident.join(
             clusters.select(F.col("id").alias("file_id"),
                             F.col("cluster_id").alias("_nd")),

@@ -296,7 +296,10 @@ def cluster_components(
 ) -> DataFrame:
     """(id, cluster_id, component, capped) per node of every scored component.
 
-    `scored` = (id_1, id_2, score); `components` = (id, component).
+    `scored` = (id_1, id_2, score); `components` = (id, component, _csize)
+    from ``connected_components(with_sizes=True)``. Both are consumed more
+    than once here, so the caller passes them already cut
+    (``DedupPipeline.cluster`` does).
 
     ``max_component_size``: the largest component's node count when the
     caller already knows it (connected_components' driver path computes it
@@ -324,16 +327,7 @@ def cluster_components(
     """
     all_small = (max_component_size is not None
                  and max_component_size <= cfg.max_hac_size)
-    if "_csize" in components.columns:
-        # sizes pre-folded by connected_components(with_sizes=True): no
-        # per-run groupBy+join here, and the isEmpty probe below is a
-        # limit-1 scan of the (already materialized) components table
-        tagged = components
-    else:
-        sizes = components.groupBy("component").agg(
-            F.count(F.lit(1)).alias("_csize"))
-        tagged = components.join(sizes, "component")
-    small = tagged if all_small else tagged.where(
+    small = components if all_small else components.where(
         F.col("_csize") <= cfg.max_hac_size)
     edges_small = (
         scored.join(
@@ -346,17 +340,17 @@ def cluster_components(
     if all_small:
         return out
 
-    big = tagged.where(F.col("_csize") > cfg.max_hac_size).select("id", "component")
+    big = components.where(
+        F.col("_csize") > cfg.max_hac_size).select("id", "component")
     # cheap probe: big components are rare; skip the whole sub-path when
-    # none exist (the probe scans only the components table)
+    # none exist (a limit-1 scan of the already-materialized components)
     if big.isEmpty():
         return out
 
     from deduplipy_spark.operators.components import connected_components
 
     edges_big = scored.join(
-        big.select(F.col("id").alias("id_1"), "component"), "id_1"
-    ).localCheckpoint()                    # consumed by CC + induced join
+        big.select(F.col("id").alias("id_1"), "component"), "id_1")
     strong = edges_big.where(F.col("score") >= cfg.cluster_threshold)
     sub = connected_components(
         strong.select("id_1", "id_2"), driver_max_edges=cfg.driver_cc_max_edges

@@ -319,10 +319,11 @@ def _frontier_rounds(bidir: DataFrame, labels: DataFrame,
     # n_changed is already counted per round. After two grace rounds, a
     # frontier still covering > _FRONTIER_SWITCH of all nodes hands the
     # loop to _classic_rounds (identical output: min-label propagation
-    # converges from any intermediate label state). labels.count() is a
-    # scan of the already-materialized localCheckpoint — cheap next to one
-    # round.
-    n_nodes = labels.count()
+    # converges from any intermediate label state). The node count is taken
+    # only when the handoff test first needs it (a graph that converges in
+    # fewer rounds never pays that job): a scan of the already-materialized
+    # round checkpoint, cheap next to one round.
+    n_nodes = None
     changed = labels            # round 0: everyone announces its own id
     prev_ckpt = None
     try:
@@ -353,7 +354,11 @@ def _frontier_rounds(bidir: DataFrame, labels: DataFrame,
             labels = upd.select("id", "comp")
             if n_changed == 0:
                 return labels
-            if rnd >= 2 and n_changed > _FRONTIER_SWITCH * n_nodes:
+            if rnd < 2:
+                continue
+            if n_nodes is None:
+                n_nodes = labels.count()    # invariant across rounds
+            if n_changed > _FRONTIER_SWITCH * n_nodes:
                 # high-diameter regime: hand the checkpoint blocks to the
                 # classic loop (freed after its first materialized round)
                 return _classic_rounds(bidir, labels, max_rounds - rnd - 1,

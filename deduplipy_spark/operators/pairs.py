@@ -28,6 +28,8 @@ Why this shape at 100 TB:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -63,7 +65,8 @@ def _ranked_bands(bands: DataFrame, assume_distinct: bool = False) -> DataFrame:
 def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
                     star_overflow: bool | None = None,
                     assume_distinct: bool = False,
-                    cache: list | None = None) -> DataFrame:
+                    cut: Callable[[DataFrame], DataFrame] | None = None,
+                    ) -> DataFrame:
     """(id_1, id_2) distinct candidate pairs, id_1 < id_2 (blocking.py:115,131).
 
     Hot-band handling: the first `band_cap` (lowest) ids form all-pairs
@@ -73,26 +76,23 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
     silently severed into disconnected clusters, which a pure cap does.
     The un-materialized quadratic mass is still reported by `band_stats`.
 
-    ``cache``: optional registry list (e.g. DedupPipeline._cached). When
-    given and the star branch is on, the ranked-band window output is
-    persisted into it: the core (rn <= cap) and star (rn > cap) branches
-    both consume `ranked`, and without a cut Spark plans the band
-    exchange + sort TWICE — the two subtrees are not reusable because the
-    core branch carries a partial WindowGroupLimit below its exchange
-    (guide §2.4; seen in the r6 plan capture as two independent
-    Exchange(hashpartitioning(band_key)) stages). The caller owns the
-    unpersist via the registry; with no registry the double-window shape
-    is kept (correct, one extra exchange) rather than leaking a cache.
+    ``cut``: optional callable that cuts the DAG at a relation and returns
+    the cut frame (``DedupPipeline._cut``). With the star branch on, the
+    ranked-band window is passed through it: the core (rn <= cap) and star
+    (rn > cap) branches both consume `ranked`, and uncut, Spark plans the
+    band exchange + sort TWICE — the two subtrees are not reusable because
+    the core branch carries a partial WindowGroupLimit below its exchange
+    (seen in the r6 plan capture as two independent
+    Exchange(hashpartitioning(band_key)) stages). Without a ``cut`` the
+    double-window shape is kept (correct, one extra exchange), so no cache
+    is left without an owner to release it.
     """
     if star_overflow is None:
         star_overflow = cfg.hot_band_star
     cap = cfg.band_cap
     ranked = _ranked_bands(bands, assume_distinct)
-    if cache is not None and star_overflow:
-        from pyspark import StorageLevel
-
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        cache.append(ranked)
+    if cut is not None and star_overflow:
+        ranked = cut(ranked)
     # core: bounded collect (<= cap elements per aggregation row, guaranteed
     # by the rank filter BEFORE the groupBy). The groupBy re-uses the window
     # shuffle's hash partitioning on band_key — no second exchange.

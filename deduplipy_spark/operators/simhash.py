@@ -51,16 +51,6 @@ def _token_hashes(text: str) -> np.ndarray:
     return _mix64(out)
 
 
-def _fnv1a_tokens(tokens: list[bytes]) -> np.ndarray:
-    """FNV-1a over many byte strings at once (thin wrapper for tests)."""
-    T = len(tokens)
-    if T == 0:
-        return np.empty(0, dtype=np.uint64)
-    lens = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=T)
-    flat = np.frombuffer(b"".join(tokens), dtype=np.uint8)
-    return _fnv1a_flat(flat, lens)
-
-
 # vectorized FNV positions; tokens longer than this finish in a scalar tail
 # loop (keeps the padded matrix at T x 96 regardless of pathological tokens)
 _VEC_MAXLEN = 96

@@ -85,13 +85,6 @@ def _prefix_pows(n: int) -> tuple[np.ndarray, np.ndarray]:
     return np.cumprod(pows), np.cumprod(invs)
 
 
-def _anchor_hash(sb: bytes, q: int) -> np.uint64:
-    c = np.frombuffer(sb[:q], dtype=np.uint8).astype(np.uint64)
-    pows, _ = _prefix_pows(q)
-    with np.errstate(over="ignore"):
-        return np.uint64((c * pows).sum())
-
-
 def _anchor_hashes(shorts: list, q: int, pows: np.ndarray) -> np.ndarray:
     """Vectorized: hash of the first q bytes of every short — one (S, q)
     matrix multiply against the shared power table instead of S separate

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,7 +66,7 @@ class DedupPipeline:
         self.rules_selected = rules_selected or None
         self.pair_strategy = pair_strategy
         self.io: TableIO | None = None   # constructed per-run (input-keyed)
-        # persisted stage cuts of THIS instance's most recent run: released
+        # DAG cuts (_cut) of THIS instance's most recent run: released
         # at the start of its next run, or via close(). Per-instance (ADVICE
         # r4 #5): a process-global registry let any pipeline's run() unpersist
         # another pipeline's still-consumed caches (silent recompute) and
@@ -87,33 +88,40 @@ class DedupPipeline:
             return self.rules_selected
         return {"rules": self.rules_selected, "pairs": self.pair_strategy}
 
+    def _cut(self, df: DataFrame) -> DataFrame:
+        """Cut the DAG at `df`: the package's one rule for persisting an
+        intermediate relation. Cut a relation that has more than one
+        consumer when no durable TableIO checkpoint already cuts it;
+        release happens on close() / the next run().
+
+        persist(), NOT localCheckpoint(): an eager checkpoint per cut is its
+        own job — a fixed serial barrier each — and even localCheckpoint(
+        eager=False) resolves the AQE final plan at call time, executing
+        every shuffle stage serially per cut (measured: the "lazy" cuts
+        still ran 0.1-3.1s each at build). persist marks the plan for
+        caching and stays fully lazy, so the FIRST downstream action (the
+        CC size-gate count) materializes the whole cascade in one job.
+        Lineage growth is linear here (one-shot pipeline), unlike the CC
+        loop, which keeps localCheckpoint for its iterative plan.
+
+        DESER level: the serialized/columnar default pays a compression+
+        encoding pass per cached relation that showed up as a flat +8s at
+        local[2] on the 400k corpus; deserialized caching matched the
+        eager-checkpoint wall at 2 cores while keeping the one-cascade job
+        structure.
+        """
+        df = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        self._cached.append(df)
+        return df
+
     def _stage(self, name: str, fn, **kw) -> DataFrame:
         if self.io is not None:
             return self.io.write_or_skip(name, fn, **kw)
         out = fn()
-        # Without a durable checkpoint dir the pipeline is still multi-action
-        # (CC loop, grouped-map): cut the DAG where outputs are reused so the
-        # UDF-heavy upstream is not recomputed per action. persist(), NOT
-        # localCheckpoint(): an eager checkpoint per stage is its own job —
-        # five fixed serial barriers per run — and even localCheckpoint(
-        # eager=False) resolves the AQE final plan at call time, executing
-        # every shuffle stage serially per cut (measured: the "lazy" cuts
-        # still ran 0.1-3.1s each at build). persist marks the plan for
-        # caching and stays fully lazy, so the FIRST downstream action (the
-        # CC size-gate count) materializes the whole cascade in one job.
-        # Lineage growth is linear here (one-shot pipeline), unlike the CC
-        # loop, which keeps localCheckpoint for its iterative plan.
-        if name in self._REUSED:
-            from pyspark import StorageLevel
-
-            # DESER level: the serialized/columnar default pays a
-            # compression+encoding pass per cached stage that showed up as
-            # a flat +8s at local[2] on the 400k corpus; deserialized
-            # caching matched the eager-checkpoint wall at 2 cores while
-            # keeping the one-cascade job structure
-            out = out.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-            self._cached.append(out)
-        return out
+        # without durable checkpoints the pipeline is still multi-action
+        # (CC loop, grouped-map): cut where stage outputs are reused so the
+        # UDF-heavy upstream is not recomputed per action
+        return self._cut(out) if name in self._REUSED else out
 
     def close(self) -> None:
         """Release this instance's persisted stage caches (the returned
@@ -209,23 +217,19 @@ class DedupPipeline:
         # precisely so this shuffle — a measured flat ~4s I/O floor moving
         # the full content bytes — stays a last resort for non-file inputs.
         parted = ensure_parallelism(files)
-        repartitioned = parted is not files
         ident_full = with_identity(parted, cfg.id_cols, cfg.content_col)
-        if repartitioned:
+        if parted is not files:
             # ident_full feeds TWO consumers (the metadata projection below
             # and the signature semi-join) — without a cut the scan AND the
             # defensive repartition exchange of the full content run twice
             # (guide §2.4; measured: two concurrent ~0.9s scan+shuffle jobs
-            # on the 50k corpus, r6 event-log profile). Persist is gated on
-            # the repartition path, which only fires for inputs smaller than
+            # on the 50k corpus, r6 event-log profile). Gated on the
+            # repartition path, which only fires for inputs smaller than
             # 2 partitions/core (<~512MB locally) — a real deployment scans
             # thousands of splits, never repartitions, and never caches
             # content; there the double scan is the intended trade (re-read
             # cheap columnar input rather than cache/shuffle content).
-            from pyspark import StorageLevel
-
-            ident_full = ident_full.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-            self._cached.append(ident_full)
+            ident_full = self._cut(ident_full)
         # passthrough metadata beyond the key columns (lang for code tables;
         # generic record tables may not have it)
         extra_cols = [c for c in ("lang",) if c in files.columns]
@@ -301,14 +305,13 @@ class DedupPipeline:
                     bands, cfg, assume_distinct=self.rules_selected is None)
             )
         else:
-            # cache=self._cached: the ranked-band window feeds two branches
-            # (core combos + star edges); the registry lets candidate_pairs
-            # persist it so the band table is exchanged+sorted once, not
-            # twice (guide §2.4; see pairs._ranked_bands)
+            # cut=self._cut: the ranked-band window feeds two branches
+            # (core combos + star edges), so the band table is
+            # exchanged+sorted once, not twice (see candidate_pairs)
             cands = self._stage(
                 "candidates", lambda: candidate_pairs(
                     bands, cfg, assume_distinct=self.rules_selected is None,
-                    cache=self._cached)
+                    cut=self._cut)
             )
         # sha_override=False: candidates pair per-sha representatives, so an
         # exact-sha match is impossible here (the exact class was collapsed
@@ -325,30 +328,7 @@ class DedupPipeline:
             m = self.io.manifest("scored_pairs")
             if m and m.get("complete"):
                 scored_count = m.get("row_count")
-        # with_sizes: the HAC stage gates its oversized-component split on
-        # _csize; folding the size into this (already-materialized) output
-        # retires a per-run sizes groupBy+join+isEmpty job (VERDICT r2 #3)
-        # cc_stats: the driver-CC path already knows the max component size
-        # (one bincount); threading it through lets cluster_components skip
-        # its big-component isEmpty probe — one driver job + two planning
-        # gaps per run (guide §7.3; measured ~0.3s on the 50k corpus).
-        # Checkpoint resumes and the distributed CC path leave it unset and
-        # keep the probe.
-        cc_stats: dict = {}
-        comps = self._stage(
-            "components",
-            lambda: connected_components(scored, cfg.max_cc_rounds,
-                                         cfg.driver_cc_max_edges,
-                                         with_sizes=True,
-                                         edge_count=scored_count,
-                                         stats_out=cc_stats),
-        )
-        clusters = self._stage(
-            "clusters_nd", lambda: cluster_components(
-                scored, comps, cfg,
-                max_component_size=cc_stats.get("max_component_size"),
-                n_edges=cc_stats.get("n_edges", scored_count))
-        )
+        clusters = self.cluster(scored, n_edges=scored_count)
 
         # INVARIANT (ADVICE r5 #3): everything above this point is
         # materialized inside THIS method (the CC size-gate count or the
@@ -377,3 +357,39 @@ class DedupPipeline:
                     "cluster_id")
         )
         return self._stage("clusters", lambda: assignment)
+
+    def cluster(self, scored: DataFrame,
+                n_edges: int | None = None) -> DataFrame:
+        """components → clusters_nd: the CC→HAC tail of every predict path.
+
+        `scored` = (id_1, id_2, score), already cut (a stage cut or a
+        checkpoint) since both layers consume it. Returns
+        (id, cluster_id, component, capped) per node of every component.
+        ``n_edges``: known row count of `scored` (e.g. a checkpoint
+        manifest's) — skips the CC size-gate count.
+        """
+        cfg = self.cfg
+        # with_sizes: the HAC stage gates its oversized-component split on
+        # _csize; folding the size into this (already-materialized) output
+        # retires a per-run sizes groupBy+join+isEmpty job (VERDICT r2 #3)
+        # cc_stats: the driver-CC path already knows the max component size
+        # (one bincount); threading it through lets cluster_components skip
+        # its big-component isEmpty probe — one driver job + two planning
+        # gaps per run (guide §7.3; measured ~0.3s on the 50k corpus).
+        # Checkpoint resumes and the distributed CC path leave it unset and
+        # keep the probe.
+        cc_stats: dict = {}
+        comps = self._stage(
+            "components",
+            lambda: connected_components(scored, cfg.max_cc_rounds,
+                                         cfg.driver_cc_max_edges,
+                                         with_sizes=True,
+                                         edge_count=n_edges,
+                                         stats_out=cc_stats),
+        )
+        return self._stage(
+            "clusters_nd", lambda: cluster_components(
+                scored, comps, cfg,
+                max_component_size=cc_stats.get("max_component_size"),
+                n_edges=cc_stats.get("n_edges", n_edges))
+        )

@@ -290,3 +290,27 @@ def test_p_then_invalid_redo_answer_keeps_label_no_crash():
     learner.fit(pairs)          # must not raise
     assert learner._y[-1] == 1          # original label retained
     assert learner.counter_positive >= 1
+
+
+def test_learned_predict_releases_previous_pipeline_caches(spark):
+    """The learned predict path runs its CC->HAC tail through a
+    DedupPipeline too: its cuts stay cached after predict() and the next
+    predict() releases them. (Distinct inputs: Spark shares cache entries
+    between plan-identical frames.)"""
+    m = NumpyLogit().fit(
+        np.array([[90.0], [88.0], [30.0], [25.0]]), np.array([1, 1, 0, 0])
+    )
+    dd = Deduplicator(col_names=["name"])
+    dd.rules_selected = [("name", 3)]            # first_two_words
+    dd.model_params = m.params()
+
+    def records(seed):
+        names = [r[0] for r in _planted_records(seed=seed)]
+        return spark.createDataFrame(pd.DataFrame({"name": names}))
+
+    out = dd.predict(records(42)).toPandas()
+    assert out.deduplication_id.nunique() < len(out)   # real merges
+    first = list(dd._pipeline._cached)
+    assert first and all(df.storageLevel.useMemory for df in first)
+    dd.predict(records(7))
+    assert all(not df.storageLevel.useMemory for df in first)

@@ -117,10 +117,30 @@ def test_adaptive_frontier_handoff_on_chains(spark):
     assert (got.component == (got.id // 1000) * 1000).all()
 
 
+def test_frontier_rounds_count_nodes_only_for_handoff(spark):
+    """The node count feeds only the handoff test from round 2 on: a graph
+    that converges by round 2 must not pay that driver job."""
+    from deduplipy_spark.operators.components import _frontier_rounds
+
+    # a star converges in round 1, the 3-chain in round 2
+    rows = [(0, i) for i in range(1, 6)] + [(10, 11), (11, 12)]
+    bidir = spark.createDataFrame(rows + [(b, a) for a, b in rows],
+                                  "src long, dst long")
+    labels = bidir.selectExpr("src as id").distinct().selectExpr("id", "id as comp")
+
+    def no_count():
+        raise AssertionError("node count on a graph converged by round 2")
+
+    labels.count = no_count
+    got = _frontier_rounds(bidir, labels, max_rounds=10).toPandas()
+    assert dict(zip(got.id, got.comp)) == {
+        **{i: 0 for i in range(6)}, 10: 10, 11: 10, 12: 10}
+
+
 def test_cluster_components_spark_matches_local(spark):
     cfg = EngineConfig(cluster_threshold=0.5)
     scored = spark.createDataFrame(FIXTURE, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, max_rounds=10)
+    comps = connected_components(scored, max_rounds=10, with_sizes=True)
     out = cluster_components(scored, comps, cfg).toPandas().sort_values("id")
     assert partitions(out.id, out.cluster_id) == [
         frozenset({0, 1}), frozenset({2}), frozenset({3}), frozenset({4})
@@ -150,7 +170,7 @@ def test_pack_style_split_of_oversized_component(spark):
         if c:                               # weak bridge to previous clique
             rows.append((base - 1, base, 0.15))
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored)
+    comps = connected_components(scored, with_sizes=True)
     assert comps.select("component").distinct().count() == 1   # one giant comp
     out = cluster_components(scored, comps, cfg).toPandas()
     assert len(out) == n_clusters * size
@@ -172,7 +192,7 @@ def test_pack_split_keeps_weak_only_nodes_as_singletons(spark):
     # 5-node component: strong triangle {0,1,2}; 3 and 4 attached weakly
     rows = [(0, 1, 0.9), (1, 2, 0.9), (0, 2, 0.9), (2, 3, 0.2), (3, 4, 0.2)]
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored)
+    comps = connected_components(scored, with_sizes=True)
     out = cluster_components(scored, comps, cfg).toPandas().set_index("id")
     assert out.cluster_id.loc[[0, 1, 2]].nunique() == 1
     assert out.cluster_id.loc[3] == 3 and out.cluster_id.loc[4] == 4
@@ -183,7 +203,7 @@ def test_component_size_cap(spark):
     # a 10-node clique -> capped, single cluster
     rows = [(i, j, 0.9) for i in range(10) for j in range(i + 1, 10)]
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored)
+    comps = connected_components(scored, with_sizes=True)
     out = cluster_components(scored, comps, cfg).toPandas()
     assert out.capped.all()
     assert (out.cluster_id == 0).all()

@@ -11,9 +11,11 @@ the reference's clustering goldens in tests/test_clustering.py.
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.ids import with_identity
+from deduplipy_spark.partitioning import ensure_parallelism
 from deduplipy_spark.plans.pipeline import DedupPipeline
 from deduplipy_spark.replica import replica_clusters
 from deduplipy_spark.sources.datagen import gen_files, gen_pandas
@@ -124,6 +126,34 @@ def test_stage_caches_are_per_instance(spark):
     # B's caches were never touched by A's close
     assert b._cached and all(df.storageLevel.useMemory for df in b._cached)
     b.close()
+
+
+@pytest.mark.parametrize("partitions", [4, 16])
+def test_pipeline_cuts_follow_one_rule(spark, partitions):
+    """Without TableIO checkpoints, run() cuts exactly the multi-consumer
+    relations, all at MEMORY_AND_DISK_DESER: the five reused stages, the
+    ranked band window, and the identity table when the input was
+    repartitioned (4 partitions on 8 cores is; 16 is not)."""
+    files = gen_files(spark, 80, 8, partitions=partitions)
+    pipe = DedupPipeline(spark, EngineConfig())
+    pipe.run(files).count()
+    want = [
+        ["file_id", "content_sha", "content_len", "repo", "path", "commit",
+         "lang"],                                   # files_hashed
+        ["content_sha", "file_id"],                 # rep_ids
+        ["file_id", "sig"],                         # signatures
+        ["band_key", "id", "rn", "band_min"],       # ranked band window
+        ["id_1", "id_2", "score"],                  # scored_pairs
+        ["id", "component", "_csize"],              # components
+    ]
+    repartitioned = ensure_parallelism(files) is not files
+    assert repartitioned == (partitions == 4)       # both sides of the gate
+    if repartitioned:
+        want.insert(0, with_identity(files).columns)    # ident_full
+    assert [df.columns for df in pipe._cached] == want
+    assert all(df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+               for df in pipe._cached)
+    pipe.close()
 
 
 def test_pipeline_distributed_cc_matches_driver_path(spark):

