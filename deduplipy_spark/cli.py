@@ -65,6 +65,15 @@ def _config_from(args) -> "EngineConfig":
     return dataclasses.replace(cfg, **overrides) if overrides else cfg
 
 
+def _config_flags_set(args) -> list[str]:
+    """The `_add_config_args` flags that `args` moves off their default."""
+    p = argparse.ArgumentParser(add_help=False)
+    _add_config_args(p)
+    return ["--" + dest.replace("_", "-")
+            for dest, default in vars(p.parse_args([])).items()
+            if getattr(args, dest) != default]
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="deduplipy-spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -100,21 +109,27 @@ def main(argv: list[str] | None = None) -> int:
     genp.add_argument("--partitions", type=int, default=64)
 
     args = ap.parse_args(argv)
+    if args.cmd == "run" and args.model:
+        ignored = _config_flags_set(args)
+        if ignored:
+            runp.error(f"--model runs the model's saved config; "
+                       f"{', '.join(ignored)} would be ignored")
     from deduplipy_spark.session import get_spark
 
     spark = get_spark("deduplipy-spark-cli")
     t0 = time.monotonic()
     if args.cmd == "run":
-        cfg = _config_from(args)
         files = spark.read.format(args.format).load(args.input)
         if args.model:
             from deduplipy_spark.deduplicator import Deduplicator
 
             dd = Deduplicator.load(args.model)
+            cfg = dd.cfg
             out = dd.predict(files)
         else:
             from deduplipy_spark.plans.pipeline import DedupPipeline
 
+            cfg = _config_from(args)
             out = DedupPipeline(
                 spark, cfg, pair_strategy=args.pair_strategy).run(files)
         out.write.mode("overwrite").format(args.format).save(args.output)

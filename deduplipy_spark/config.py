@@ -39,20 +39,15 @@ class EngineConfig:
     bands: int = 16
     rows_per_band: int = 8
     minhash_seed: int = 42
-    # signature kernel: "oph" = one-permutation hashing + rotation
-    # densification (O(shingles) — the scale kernel, operators/minhash.py);
-    # "perm" = classic k independent permutations (O(shingles*num_perm))
-    minhash_scheme: str = "oph"
 
     # --- SimHash (token-level path) ---
     simhash_bits: int = 64
     simhash_band_bits: int = 16     # 4 bands of 16 bits -> hamming<=3 guarantee
 
     # --- pair generation / skew ---
-    band_cap: int = 200             # max rows in a band's all-pairs expansion
-    hot_band_star: bool = True      # overflow members get star edges to the
-                                    # band min id: linear output, CC
-                                    # connectivity never silently severed
+    band_cap: int = 200             # max rows in a band's all-pairs expansion;
+                                    # overflow members get one star edge to
+                                    # the band min id (operators/pairs.py)
 
     # --- scoring / clustering (mirrors deduplicator.py:167 defaults) ---
     score_threshold: float = 0.1
@@ -85,9 +80,7 @@ class EngineConfig:
                 f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) must equal "
                 f"num_perm ({self.num_perm})"
             )
-        if self.minhash_scheme not in ("perm", "oph"):
-            raise ValueError(f"unknown minhash_scheme {self.minhash_scheme!r}")
-        if self.minhash_scheme == "oph" and self.num_perm & (self.num_perm - 1):
+        if self.num_perm & (self.num_perm - 1):
             import warnings
 
             # the OPH kernel bins by the top bits of the shingle hash, so a
@@ -95,10 +88,10 @@ class EngineConfig:
             # power of two permanently empty — always densified duplicates
             # of lower bins, inflating false-positive band collisions
             warnings.warn(
-                f"minhash_scheme='oph' with num_perm={self.num_perm} (not a "
-                f"power of two): slots above {1 << (self.num_perm.bit_length() - 1)} "
-                f"carry no independent information; use a power-of-two "
-                f"num_perm or minhash_scheme='perm' for this band geometry",
+                f"num_perm={self.num_perm} is not a power of two: the "
+                f"one-permutation kernel's slots above "
+                f"{1 << (self.num_perm.bit_length() - 1)} carry no independent "
+                f"information; use a power-of-two num_perm",
                 stacklevel=2,
             )
 

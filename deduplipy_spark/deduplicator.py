@@ -295,6 +295,15 @@ class Deduplicator:
         # models saved before the unused shuffle_partitions field was
         # removed still carry it; it never entered the config hash
         c.pop("shuffle_partitions", None)
+        # ... and before the second MinHash kernel and the pure-cap pair
+        # mode were removed: only their default still runs, so any other
+        # value names a model this engine cannot reproduce
+        for key, only in (("minhash_scheme", "oph"), ("hot_band_star", True)):
+            v = c.pop(key, only)
+            if v != only:
+                raise ValueError(
+                    f"{path}: config {key}={v!r} is no longer supported "
+                    f"(only {only!r} is); refit the model")
         dd = cls(col_names=blob["col_names"], config=EngineConfig(**c),
                  field_info=blob.get("field_info"),
                  interaction=bool(blob.get("interaction", False)),

@@ -8,21 +8,19 @@ shingle→MinHash→band scheme (Broder; Leskovec et al. MMDS ch.3).
 Execution shape (scale notes):
 - Signature computation is a vectorized Arrow pandas UDF (no per-row
   Python loops over shingles: rolling-hash via k shifted uint64
-  multiply-adds over the flat byte buffer).
-  Default kernel is one-permutation hashing with rotation densification
-  (O(shingles) per doc — `oph_signature_of_hashes`); the classic
-  k-permutation kernel (O(shingles × perms) broadcasted min, chunked to
-  bound memory) remains as `minhash_scheme="perm"`. Both produce the same
-  (num_perm,) signature shape, banding, and slot-equality estimator.
+  multiply-adds over the flat byte buffer). The kernel is one-permutation
+  hashing with rotation densification (O(shingles) per doc —
+  `oph_signature_of_hashes`): a (num_perm,) signature, banded below and
+  compared by the slot-equality Jaccard estimator.
 - Band keys are derived JVM-side from the signature array with
-  ``xxhash64(cast(slice(sig,...) as string), band_idx)`` — stays inside
+  ``xxhash64(slice(sig, ...), band_idx)`` — stays inside
   whole-stage codegen, and the (id, band_key) explode is narrow.
 - ``content`` is dropped immediately after signatures (SURVEY §7 risk 7):
   downstream tables carry only ids + signatures.
 
-Determinism: permutation params derive from numpy's seeded Philox stream;
-the signature of a row depends only on (content, config), never on
-partitioning.
+Determinism: `minhash_seed` re-keys the one permutation through a
+splitmix64 finalize; the signature of a row depends only on (content,
+config), never on partitioning.
 """
 
 from __future__ import annotations
@@ -34,12 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from deduplipy_spark.config import EngineConfig
-
-# Shingles per permutation-matrix block: the (chunk x num_perm) uint64 block
-# must stay cache-resident — 128x128x8B = 128KB (L2) runs 3.3x faster than a
-# 16MB DRAM-streaming block AND scales 0.8 from 8->32 procs (bandwidth-bound
-# otherwise; measured on 32-core Xeon).
-_CHUNK = 128
 
 # splitmix64 finalizer constants (public domain, Vigna) — mixes the rolling
 # hash so band keys see well-distributed bits.
@@ -58,33 +50,32 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def shingle_hashes_raw(text: str, k: int) -> np.ndarray:
-    """64-bit hashes of all k-char shingles, window order, duplicates kept.
-
-    The OPH kernel consumes this directly: a bin MIN is invariant under
-    duplicates and ordering, and skipping the np.unique sort is ~40% of
-    the per-doc signature cost on real code files."""
-    b = np.frombuffer(text.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    n = b.shape[0]
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    k_eff = min(n, k)
-    nwin = n - k_eff + 1
-    powers = np.power(np.uint64(1099511628211), np.arange(k_eff, dtype=np.uint64))
-    big = b.astype(np.uint64)
+def _window_hashes(buf: np.ndarray, k: int) -> np.ndarray:
+    """Mixed 64-bit hashes of every k-byte window of `buf` (bytes widened
+    to uint64), window order."""
+    nwin = buf.shape[0] - k + 1
+    powers = np.power(np.uint64(1099511628211), np.arange(k, dtype=np.uint64))
     raw = np.zeros(nwin, dtype=np.uint64)
     # k shifted multiply-adds over the whole buffer (wraps mod 2^64):
     # bit-identical to the windowed matvec but 1.6x faster — integer matmul
     # has no BLAS path, so the (nwin, k) expansion only added traffic
     with np.errstate(over="ignore"):
-        for j in range(k_eff):
-            raw += big[j : j + nwin] * powers[j]
+        for j in range(k):
+            raw += buf[j : j + nwin] * powers[j]
     return _mix64(raw)
 
 
-def shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Unique 64-bit hashes of all k-char shingles (uint64, sorted)."""
-    return np.unique(shingle_hashes_raw(text, k))
+def shingle_hashes_raw(text: str, k: int) -> np.ndarray:
+    """64-bit hashes of all k-char shingles, window order, duplicates kept
+    (a text shorter than k is one shingle).
+
+    The OPH kernel consumes this directly: a bin MIN is invariant under
+    duplicates and ordering, and skipping the np.unique sort is ~40% of
+    the per-doc signature cost on real code files."""
+    b = np.frombuffer(text.encode("utf-8", "surrogatepass"), dtype=np.uint8)
+    if b.shape[0] == 0:
+        return np.empty(0, dtype=np.uint64)
+    return _window_hashes(b.astype(np.uint64), min(b.shape[0], k))
 
 
 def oph_signature_of_hashes(x: np.ndarray, num_perm: int,
@@ -97,10 +88,8 @@ def oph_signature_of_hashes(x: np.ndarray, num_perm: int,
     borrowed slots from colliding spuriously between documents whose empty
     runs differ).
 
-    Same (num_perm,) uint64 signature shape and the same slot-equality
-    Jaccard estimator as the k-permutation kernel, but O(shingles) instead
-    of O(shingles x num_perm) multiplies — the k-permutation path is
-    multiply-bound on uint64 (no SIMD), so this is the scale kernel.
+    The slot-equality Jaccard estimator of classic k-permutation MinHash
+    at O(shingles) instead of O(shingles x num_perm) uint64 multiplies.
     Accepts `x` in ANY order, duplicates allowed (bin minima are invariant
     to both — ufunc.at scatter-min, no sort). Deterministic in
     (content, config) only.
@@ -109,14 +98,13 @@ def oph_signature_of_hashes(x: np.ndarray, num_perm: int,
     values the top-bits binning uses the largest power of two below
     num_perm, so the remaining slots are always densified duplicates of
     lower slots — still correct/unbiased, but with less independent
-    information per slot. Use scheme="perm" for exotic band geometries
-    (EngineConfig warns on this combination).
+    information per slot (EngineConfig warns on such a num_perm).
 
     `seed` re-keys the one permutation: the shingle hashes are XORed with a
     splitmix64 finalize of the seed before binning — a bijection of the
     hash space, so the slot-equality Jaccard estimator is unchanged, but
-    configs differing only in minhash_seed now produce independent
-    replicates (previously the seed was silently inert on this path).
+    configs differing only in minhash_seed produce independent
+    replicates.
     """
     sig = np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
     if x.shape[0] == 0:
@@ -142,94 +130,51 @@ def oph_signature_of_hashes(x: np.ndarray, num_perm: int,
     return sig
 
 
-def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.Generator(np.random.Philox(seed))
-    a = rng.integers(1, 2**63, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.integers(0, 2**63, size=num_perm, dtype=np.uint64)
-    return a, b
-
-
-def signature_of_hashes(x: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """MinHash signature: min over shingles of (a*x+b) mod 2^64, per permutation."""
-    num_perm = a.shape[0]
-    if x.shape[0] == 0:
-        return np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
-    sig = np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
-    for lo in range(0, x.shape[0], _CHUNK):
-        block = x[lo : lo + _CHUNK, None] * a[None, :] + b[None, :]   # (chunk, perms)
-        np.minimum(sig, block.min(axis=0), out=sig)
-    return sig
-
-
 # Docs below this byte length take the batched rolling-hash kernel; longer
-# docs keep the per-doc path. Measured on this box: per-doc Python overhead
-# dominates short strings (batch = 1.9x at 100B), while long code files are
-# multiply-bound and the per-doc path's np.unique cuts ~43% of the
-# (shingles x num_perm) multiplies on real corpora AND its small
-# cache-resident blocks resist memory-bus contention (the batched big-array
-# variant swung 0.9s-5.6s under host steal; per-doc held 0.7s steady).
+# docs keep the per-doc path. Per-doc Python overhead dominates short
+# strings (batch = 1.9x at 100B), while hashing a long doc on its own
+# bounds the temporaries: the batched path widens the whole concatenated
+# buffer to uint64 and builds window-hash arrays of the same length (8
+# bytes per input byte each), so long docs in the concatenation would
+# scale every batch's working set with the longest files in it.
 _BATCH_MAX_LEN = 256
 
 
-def signature_batch(contents, a: np.ndarray, b: np.ndarray, k: int,
-                    scheme: str = "perm", seed: int = 0) -> list:
-    """MinHash signatures for a whole Arrow batch, bit-identical to the
-    per-doc scalar path (shingle_hashes + signature_of_hashes).
+def signature_batch(contents, num_perm: int, k: int, seed: int) -> list:
+    """MinHash signatures (int64 views) for a whole Arrow batch,
+    bit-identical to the per-doc
+    ``oph_signature_of_hashes(shingle_hashes_raw(doc, k), num_perm, seed)``
+    (non-str contents hash as "").
 
-    Hybrid execution (round 2, VERDICT r1 #5): SHORT documents — where
-    per-doc Python overhead, not arithmetic, is the cost — are vectorized
-    together: one rolling-hash pass over their concatenated bytes (k shifted
-    multiply-adds, no per-doc encode/stride), then per-doc minima on
-    zero-copy slices. Duplicate shingles are not deduped on this path (the
-    min is unaffected; tiny docs have few). LONG documents keep the
-    per-doc cache-blocked kernel with np.unique — see _BATCH_MAX_LEN.
+    SHORT documents — where per-doc Python overhead, not arithmetic, is the
+    cost — are hashed together: one rolling-hash pass over their
+    concatenated bytes (no per-doc encode/stride), then per-doc bin minima
+    on zero-copy slices. Documents under k bytes (one short shingle) and
+    LONG documents take the per-doc path — see _BATCH_MAX_LEN.
     """
-    num_perm = a.shape[0]
     bufs = [
         (s.encode("utf-8", "surrogatepass") if isinstance(s, str) else b"")
         for s in contents
     ]
     lens = np.fromiter((len(x) for x in bufs), dtype=np.int64, count=len(bufs))
     out: list = [None] * len(bufs)
-    maxu = np.iinfo(np.uint64).max
     for i in np.nonzero((lens < k) | (lens >= _BATCH_MAX_LEN))[0]:
         s = contents[i] if isinstance(contents[i], str) else ""
-        if scheme == "oph":
-            # raw (unsorted, dup-kept) hashes: bin minima don't care, and
-            # np.unique's sort was ~40% of the per-doc cost
-            out[i] = oph_signature_of_hashes(
-                shingle_hashes_raw(s, k), num_perm, seed).view(np.int64)
-        else:
-            out[i] = signature_from_hashes(
-                shingle_hashes(s, k), a, b, scheme, seed).view(np.int64)
+        out[i] = oph_signature_of_hashes(
+            shingle_hashes_raw(s, k), num_perm, seed).view(np.int64)
     idxs = np.nonzero((lens >= k) & (lens < _BATCH_MAX_LEN))[0]
     if idxs.shape[0]:
-        big = np.frombuffer(
+        mixed = _window_hashes(np.frombuffer(
             b"".join(bufs[i] for i in idxs), dtype=np.uint8
-        ).astype(np.uint64)
+        ).astype(np.uint64), k)
         n_lens = lens[idxs]
         starts = np.zeros(idxs.shape[0] + 1, dtype=np.int64)
         np.cumsum(n_lens, out=starts[1:])
-        nwin = big.shape[0] - k + 1
-        powers = np.power(np.uint64(1099511628211), np.arange(k, dtype=np.uint64))
-        raw = np.zeros(nwin, dtype=np.uint64)
-        with np.errstate(over="ignore"):         # wraps mod 2^64 by design
-            for j in range(k):
-                raw += big[j : j + nwin] * powers[j]
-        mixed = _mix64(raw)
         cnt = n_lens - k + 1                     # valid windows per doc;
         # windows crossing a doc boundary are simply never sliced below
         for di, i in enumerate(idxs):
             x = mixed[starts[di] : starts[di] + cnt[di]]   # zero-copy view
-            if scheme == "oph":
-                out[i] = oph_signature_of_hashes(x, num_perm, seed).view(np.int64)
-                continue
-            sig = np.full(num_perm, maxu, dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for lo in range(0, x.shape[0], _CHUNK):
-                    block = x[lo : lo + _CHUNK, None] * a[None, :] + b[None, :]
-                    np.minimum(sig, block.min(axis=0), out=sig)
-            out[i] = sig.view(np.int64)
+            out[i] = oph_signature_of_hashes(x, num_perm, seed).view(np.int64)
     return out
 
 
@@ -246,24 +191,12 @@ def truncate_sig(sig: np.ndarray) -> np.ndarray:
     return (sig.view(np.uint64) & _SLOT_MASK).astype(np.uint32)
 
 
-def signature_from_hashes(x: np.ndarray, a: np.ndarray, b: np.ndarray,
-                          scheme: str, seed: int = 0) -> np.ndarray:
-    """Scheme dispatcher over SORTED-unique shingle hashes (np.unique
-    output, as shingle_hashes returns). `seed` re-keys the oph binning
-    (the perm path is already seeded through its (a, b) params)."""
-    if scheme == "oph":
-        return oph_signature_of_hashes(x, a.shape[0], seed)
-    return signature_of_hashes(x, a, b)
-
-
 def make_signature_udf(cfg: EngineConfig):
     k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.minhash_seed
-    scheme = cfg.minhash_scheme
 
     @pandas_udf("array<int>")
     def minhash_sig(content: pd.Series) -> pd.Series:
-        a, b = _perm_params(num_perm, seed)
-        sigs = signature_batch(content.to_numpy(), a, b, k, scheme, seed)
+        sigs = signature_batch(content.to_numpy(), num_perm, k, seed)
         return pd.Series(
             [truncate_sig(np.asarray(s, dtype=np.int64)).view(np.int32)
              for s in sigs],

@@ -63,7 +63,6 @@ def _ranked_bands(bands: DataFrame, assume_distinct: bool = False) -> DataFrame:
 
 
 def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
-                    star_overflow: bool | None = None,
                     assume_distinct: bool = False,
                     cut: Callable[[DataFrame], DataFrame] | None = None,
                     ) -> DataFrame:
@@ -71,14 +70,13 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
 
     Hot-band handling: the first `band_cap` (lowest) ids form all-pairs
     combinations; members BEYOND the cap emit one STAR edge each to the
-    band's min id (`star_overflow`, default on). Output stays linear in the
-    band size, but connectivity is preserved — a hot band can never be
-    silently severed into disconnected clusters, which a pure cap does.
+    band's min id. Output stays linear in the band size, but connectivity
+    is preserved — a hot band is never severed into disconnected clusters.
     The un-materialized quadratic mass is still reported by `band_stats`.
 
     ``cut``: optional callable that cuts the DAG at a relation and returns
-    the cut frame (``DedupPipeline._cut``). With the star branch on, the
-    ranked-band window is passed through it: the core (rn <= cap) and star
+    the cut frame (``DedupPipeline._cut``). The ranked-band window is
+    passed through it: the core (rn <= cap) and star
     (rn > cap) branches both consume `ranked`, and uncut, Spark plans the
     band exchange + sort TWICE — the two subtrees are not reusable because
     the core branch carries a partial WindowGroupLimit below its exchange
@@ -87,11 +85,9 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
     double-window shape is kept (correct, one extra exchange), so no cache
     is left without an owner to release it.
     """
-    if star_overflow is None:
-        star_overflow = cfg.hot_band_star
     cap = cfg.band_cap
     ranked = _ranked_bands(bands, assume_distinct)
-    if cut is not None and star_overflow:
+    if cut is not None:
         ranked = cut(ranked)
     # core: bounded collect (<= cap elements per aggregation row, guaranteed
     # by the rank filter BEFORE the groupBy). The groupBy re-uses the window
@@ -113,12 +109,11 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
             ),
         )
     )
-    pairs = core.select(F.explode(combos).alias("p")).select("p.id_1", "p.id_2")
-    if star_overflow:
-        star = ranked.where(F.col("rn") > cap).select(
-            F.col("band_min").alias("id_1"), F.col("id").alias("id_2")
-        )
-        pairs = pairs.unionByName(star)
+    star = ranked.where(F.col("rn") > cap).select(
+        F.col("band_min").alias("id_1"), F.col("id").alias("id_2")
+    )
+    pairs = (core.select(F.explode(combos).alias("p"))
+             .select("p.id_1", "p.id_2").unionByName(star))
     if assume_distinct:
         # belt-and-braces: a within-id band-key collision (~2^-64) would
         # surface as a self-pair here instead of an edge

@@ -1,10 +1,10 @@
-"""Pair scoring: signature-estimated Jaccard + exact-match override.
+"""Pair scoring: signature-estimated Jaccard.
 
 Replaces the reference's learned string-metric scorer
 (``deduplipy/deduplicator/deduplicator.py:112-122,192-197``): the north rule
 substitutes MinHash-estimated Jaccard for the classifier probability. The
-exact-equality override (all fields equal ⇒ score 1.0, ``deduplicator.py:
-195-197``) is kept as a sha256 comparison.
+reference's exact-equality override (all fields equal ⇒ score 1.0,
+``deduplicator.py:195-197``) is the sha256 pre-pass upstream of scoring.
 
 Scale notes: candidates carry only ids; signatures join back via two equi
 joins on id (sort-merge / shuffled-hash; AQE may broadcast the smaller side).
@@ -21,36 +21,23 @@ from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.minhash import estimated_jaccard_col
 
 
-def score_pairs(candidates: DataFrame, signatures: DataFrame, cfg: EngineConfig,
-                sha_override: bool = False) -> DataFrame:
+def score_pairs(candidates: DataFrame, signatures: DataFrame,
+                cfg: EngineConfig) -> DataFrame:
     """(id_1, id_2, score) for pairs passing score_threshold.
 
-    `signatures` must have (file_id, sig) — plus `content_sha` when
-    `sha_override` is on. The flagship pipeline leaves sha_override off:
-    its candidates pair per-sha REPRESENTATIVES, so two sides can never
-    share a sha and the override would be dead weight (two 64-char columns
-    through both signature shuffles). The reference's exact-equality
-    override (deduplicator.py:195-197) survives at the facade level: the
-    exact class collapses in the sha pre-pass (pipeline) or via column
-    equality (learned path).
+    `signatures` has (file_id, sig). No exact-match override: the flagship
+    pipeline's candidates pair per-sha REPRESENTATIVES, so two sides never
+    share a sha — the exact class collapses in the sha pre-pass (pipeline)
+    or via column equality (learned path).
     """
-    sha1 = [F.col("content_sha").alias("sha_1")] if sha_override else []
-    sha2 = [F.col("content_sha").alias("sha_2")] if sha_override else []
-    s1 = signatures.select(
-        F.col("file_id").alias("id_1"), *sha1, F.col("sig").alias("sig_1")
-    )
-    s2 = signatures.select(
-        F.col("file_id").alias("id_2"), *sha2, F.col("sig").alias("sig_2")
-    )
-    est = estimated_jaccard_col()
-    score = (
-        F.when(F.col("sha_1") == F.col("sha_2"), F.lit(1.0)).otherwise(est)
-        if sha_override else est
-    )
+    s1 = signatures.select(F.col("file_id").alias("id_1"),
+                           F.col("sig").alias("sig_1"))
+    s2 = signatures.select(F.col("file_id").alias("id_2"),
+                           F.col("sig").alias("sig_2"))
     scored = (
         candidates.join(s1, "id_1")
         .join(s2, "id_2")
-        .withColumn("score", score)
+        .withColumn("score", estimated_jaccard_col())
         .select("id_1", "id_2", "score")
     )
     return scored.where(F.col("score") >= F.lit(cfg.score_threshold))

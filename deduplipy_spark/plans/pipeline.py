@@ -313,9 +313,6 @@ class DedupPipeline:
                     bands, cfg, assume_distinct=self.rules_selected is None,
                     cut=self._cut)
             )
-        # sha_override=False: candidates pair per-sha representatives, so an
-        # exact-sha match is impossible here (the exact class was collapsed
-        # by the pre-pass) — skip shuffling two 64-char sha columns
         scored = self._stage(
             "scored_pairs",
             lambda: score_pairs(cands, sigs, cfg),

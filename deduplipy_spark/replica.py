@@ -10,12 +10,12 @@ Purpose: an INDEPENDENT re-execution of the block->score->cluster contract
    OUTSIDE the system under test rather than pinning the pipeline's own
    output.
 
-Shared numeric kernels (MinHash permutation math, scalar SimHash, the numpy
-HAC) are imported from the engine — those are themselves validated against
-the reference's fixtures and scalar implementations in tests; what the
-replica deliberately does NOT share is any Spark plan: banding, pair
-generation, scoring, components and cluster assignment are re-executed with
-plain python/numpy.
+Shared numeric kernels (per-doc shingling and one-permutation MinHash,
+scalar SimHash, the numpy HAC) are imported from the engine — those are
+themselves validated against the reference's fixtures and scalar
+implementations in tests; what the replica deliberately does NOT share is
+any Spark plan: banding, pair generation, scoring, components and cluster
+assignment are re-executed with plain python/numpy.
 
 The reference itself cannot run in this env (scipy/fancyimpute/modAL absent
 — SURVEY §7); this replica stands in for it at identical config.
@@ -31,11 +31,18 @@ import pandas as pd
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.agglomerate import hierarchical_cluster_component
 from deduplipy_spark.operators.minhash import (
-    _perm_params,
-    shingle_hashes,
-    signature_from_hashes,
+    oph_signature_of_hashes,
+    shingle_hashes_raw,
     truncate_sig,
 )
+
+
+def _signature(text: str | None, cfg: EngineConfig) -> np.ndarray:
+    """Per-doc scalar signature, truncated to uint32 slots as the engine
+    stores them."""
+    return truncate_sig(oph_signature_of_hashes(
+        shingle_hashes_raw(text or "", cfg.shingle_k), cfg.num_perm,
+        cfg.minhash_seed))
 
 
 def replica_clusters(pdf: pd.DataFrame, cfg: EngineConfig,
@@ -57,13 +64,8 @@ def replica_clusters(pdf: pd.DataFrame, cfg: EngineConfig,
     rep_rows = pdf.merge(reps, left_on="sha", right_on="sha")
     rep_only = rep_rows[rep_rows.fid == rep_rows.rep]
 
-    a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
-    sigs = {
-        int(r.fid): truncate_sig(signature_from_hashes(
-            shingle_hashes(r.content or "", cfg.shingle_k), a, b,
-            cfg.minhash_scheme, cfg.minhash_seed))
-        for r in rep_only.itertuples()
-    }
+    sigs = {int(r.fid): _signature(r.content, cfg)
+            for r in rep_only.itertuples()}
     scored = replica_scored_pairs(sigs, cfg)
 
     # union-find components
@@ -110,7 +112,7 @@ def replica_clusters(pdf: pd.DataFrame, cfg: EngineConfig,
     return out
 
 
-def _banded_pairs(band_lists: dict, cap: int, star: bool) -> set[tuple[int, int]]:
+def _banded_pairs(band_lists: dict, cap: int) -> set[tuple[int, int]]:
     """Capped all-pairs + star-overflow semantics of operators/pairs.py,
     single-node."""
     pairs: set[tuple[int, int]] = set()
@@ -120,9 +122,8 @@ def _banded_pairs(band_lists: dict, cap: int, star: bool) -> set[tuple[int, int]
         for i in range(len(head)):
             for j in range(i + 1, len(head)):
                 pairs.add((head[i], head[j]))
-        if star:
-            for y in ids[cap:]:
-                pairs.add((ids[0], y))
+        for y in ids[cap:]:
+            pairs.add((ids[0], y))
     return pairs
 
 
@@ -135,7 +136,7 @@ def replica_scored_pairs(sigs: dict[int, np.ndarray],
         for j in range(cfg.bands):
             key = (j, tuple(sig[j * cfg.rows_per_band:(j + 1) * cfg.rows_per_band]))
             buckets.setdefault(key, []).append(rid)
-    pairs = _banded_pairs(buckets, cfg.band_cap, cfg.hot_band_star)
+    pairs = _banded_pairs(buckets, cfg.band_cap)
     scored = {p: float((sigs[p[0]] == sigs[p[1]]).mean()) for p in pairs}
     return {p: s for p, s in scored.items() if s >= cfg.score_threshold}
 
@@ -157,7 +158,7 @@ def replica_simhash_pairs(contents: dict[int, str], cfg: EngineConfig,
         for j in range(n_bands):
             buckets.setdefault(
                 (j, (h >> (j * cfg.simhash_band_bits)) & mask), []).append(i)
-    pairs = _banded_pairs(buckets, cfg.band_cap, cfg.hot_band_star)
+    pairs = _banded_pairs(buckets, cfg.band_cap)
     rows = []
     for a, b in pairs:
         d = bin(sh[a] ^ sh[b]).count("1")
@@ -177,11 +178,7 @@ def replica_minhash_sample(contents: dict[int, str], cfg: EngineConfig,
     `hash64_batch(pairs, seed) -> sequence[int]` supplies xxhash64 (the
     sampler's seeded shuffle key); the caller passes an evaluator for it —
     the hash is a LABELING/ordering function here, not dataflow."""
-    a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
-    sigs = {i: truncate_sig(signature_from_hashes(
-                shingle_hashes(t or "", cfg.shingle_k), a, b,
-                cfg.minhash_scheme, cfg.minhash_seed))
-            for i, t in contents.items()}
+    sigs = {i: _signature(t, cfg) for i, t in contents.items()}
     scored = {
         p: s for p, s in replica_scored_pairs(sigs, cfg).items() if s >= min_sim
     }

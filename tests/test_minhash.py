@@ -6,10 +6,9 @@ import pytest
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.minhash import (
-    _perm_params,
     band_keys,
-    shingle_hashes,
-    signature_of_hashes,
+    oph_signature_of_hashes,
+    shingle_hashes_raw,
     with_signatures,
 )
 from deduplipy_spark.operators.pairs import candidate_pairs, skew_summary
@@ -24,7 +23,11 @@ def true_jaccard(a: str, b: str, k: int) -> float:
 
 def test_signature_estimates_jaccard_within_eps():
     cfg = EngineConfig()
-    a_params = _perm_params(cfg.num_perm, cfg.minhash_seed)
+
+    def sig(text):
+        return oph_signature_of_hashes(shingle_hashes_raw(text, cfg.shingle_k),
+                                       cfg.num_perm, cfg.minhash_seed)
+
     rng = np.random.default_rng(7)
     base = "".join(rng.choice(list("abcdefgh \n")) for _ in range(800))
     for edit_rate in (0.0, 0.02, 0.1, 0.3):
@@ -34,17 +37,20 @@ def test_signature_estimates_jaccard_within_eps():
             chars[pos] = "Z"
         other = "".join(chars)
         tj = true_jaccard(base, other, cfg.shingle_k)
-        s1 = signature_of_hashes(shingle_hashes(base, cfg.shingle_k), *a_params)
-        s2 = signature_of_hashes(shingle_hashes(other, cfg.shingle_k), *a_params)
-        est = float((s1 == s2).mean())
+        est = float((sig(base) == sig(other)).mean())
         assert abs(est - tj) < 0.13, (edit_rate, tj, est)
 
 
 def test_shingle_hashes_edge_cases():
-    assert shingle_hashes("", 7).shape == (0,)
-    assert shingle_hashes("ab", 7).shape == (1,)       # shorter than k: one shingle
+    assert shingle_hashes_raw("", 7).shape == (0,)
+    assert shingle_hashes_raw("ab", 7).shape == (1,)   # shorter than k: one shingle
+    # one hash per window, repeats kept, in window order
+    assert shingle_hashes_raw("hello world", 5).shape == (7,)
+    aaa = shingle_hashes_raw("a" * 10, 5)
+    assert aaa.shape == (6,) and (aaa == aaa[0]).all()
     # identical text -> identical hashes regardless of call order
-    assert (shingle_hashes("hello world", 5) == shingle_hashes("hello world", 5)).all()
+    assert (shingle_hashes_raw("hello world", 5)
+            == shingle_hashes_raw("hello world", 5)).all()
 
 
 def test_lsh_threshold_math():
@@ -131,8 +137,6 @@ def test_band_cap_bounds_quadratic_output(spark):
     assert len(pairs) == 10 * 9 / 2 + 90
     stars = pairs[pairs.id_2 >= 10]
     assert (stars.id_1 == 0).all()              # star hub = band min id
-    # pure-cap mode drops the overflow entirely
-    assert candidate_pairs(bands, cfg, star_overflow=False).count() == 10 * 9 / 2
     stats = skew_summary(bands, cfg)
     assert stats["n_capped_bands"] == cfg.bands
     assert stats["dropped_pairs"] > 0           # un-materialized quadratic mass

@@ -9,11 +9,9 @@ import pytest
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.minhash import (
-    _perm_params,
     oph_signature_of_hashes,
-    shingle_hashes,
+    shingle_hashes_raw,
     signature_batch,
-    signature_from_hashes,
 )
 
 MAXU = np.iinfo(np.uint64).max
@@ -62,7 +60,7 @@ def test_densification_fills_all_slots_deterministically():
     s1 = oph_signature_of_hashes(x, 128)
     assert (s1 != MAXU).all()
     assert (s1 == oph_signature_of_hashes(x, 128)).all()
-    # empty input stays the all-MAXU sentinel (same contract as perm path)
+    # empty input stays the all-MAXU sentinel
     assert (oph_signature_of_hashes(np.empty(0, np.uint64), 128) == MAXU).all()
 
 
@@ -76,46 +74,15 @@ def test_identical_sets_identical_sigs_disjoint_sets_differ():
 
 
 def test_batch_equals_scalar_oph():
-    """signature_batch(scheme='oph') must be bit-identical to the per-doc
-    scalar path for short docs (batch rolling-hash route) and long docs."""
-    a, b = _perm_params(128, 42)
+    """signature_batch must be bit-identical to the per-doc scalar path for
+    short docs (batch rolling-hash route) and long docs."""
     docs = ["def f(x):\n    return x + 1\n" * m for m in (1, 3, 40)]
     docs += ["", "ab", "x" * 255, "y" * 256, "import os\n" * 100]
-    want = [signature_from_hashes(shingle_hashes(d, 7), a, b, "oph")
+    want = [oph_signature_of_hashes(shingle_hashes_raw(d, 7), 128, 42)
             .view(np.int64) for d in docs]
-    got = signature_batch(docs, a, b, 7, "oph")
+    got = signature_batch(docs, 128, 7, 42)
     for w, g in zip(want, got):
         assert (w == np.asarray(g)).all()
-
-
-def test_scheme_validation_and_dispatch():
-    with pytest.raises(ValueError):
-        EngineConfig(minhash_scheme="nope")
-    a, b = _perm_params(128, 42)
-    x = shingle_hashes("def f():\n    pass\n" * 5, 7)
-    oph = signature_from_hashes(x, a, b, "oph")
-    perm = signature_from_hashes(x, a, b, "perm")
-    assert oph.shape == perm.shape == (128,)
-    assert not (oph == perm).all()
-
-
-def test_pipeline_scheme_perm_still_first_class(spark):
-    """minhash_scheme='perm' (the k-permutation kernel) must remain a
-    working end-to-end configuration: on well-separated planted clusters
-    both schemes recover identical cluster assignments."""
-    from deduplipy_spark.plans.pipeline import DedupPipeline
-    from deduplipy_spark.sources.datagen import gen_files
-
-    files = gen_files(spark, 300, 30, members=3, seed=11, partitions=4)
-    out = {}
-    for scheme in ("oph", "perm"):
-        cfg = EngineConfig(minhash_scheme=scheme)
-        pdf = (DedupPipeline(spark, cfg).run(files)
-               .select("file_id", "cluster_id").toPandas()
-               .sort_values("file_id", ignore_index=True))
-        out[scheme] = pdf
-    assert out["oph"].equals(out["perm"])
-    assert out["oph"].cluster_id.nunique() < 300
 
 
 def test_oph_seed_rekeys_signatures():
@@ -148,11 +115,7 @@ def test_oph_nonpow2_num_perm_warns():
     import warnings
 
     with pytest.warns(UserWarning, match="not a.*power of two"):
-        EngineConfig(num_perm=96, bands=16, rows_per_band=6,
-                     minhash_scheme="oph")
+        EngineConfig(num_perm=96, bands=16, rows_per_band=6)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        EngineConfig(num_perm=128, bands=16, rows_per_band=8,
-                     minhash_scheme="oph")
-        EngineConfig(num_perm=96, bands=16, rows_per_band=6,
-                     minhash_scheme="perm")
+        EngineConfig(num_perm=128, bands=16, rows_per_band=8)

@@ -11,10 +11,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from deduplipy_spark.operators.minhash import (
-    _perm_params,
-    shingle_hashes,
+    _BATCH_MAX_LEN,
+    oph_signature_of_hashes,
+    shingle_hashes_raw,
     signature_batch,
-    signature_of_hashes,
 )
 from deduplipy_spark.operators.simhash import _token_hashes, simhash_batch, simhash_of_hashes
 
@@ -24,7 +24,15 @@ _text = st.text(
                            blacklist_categories=("Cs",)),
     max_size=400,
 )
-A, B = _perm_params(128, 42)
+# lengths on both sides of the batch kernel's two cut-offs: k (=7) and
+# _BATCH_MAX_LEN bytes (ascii, so chars == bytes)
+_ascii = st.characters(min_codepoint=0x9, max_codepoint=0x7E)
+_doc = st.one_of(
+    _text,
+    st.text(alphabet=_ascii, max_size=9),
+    st.text(alphabet=_ascii, min_size=_BATCH_MAX_LEN - 2,
+            max_size=_BATCH_MAX_LEN + 2),
+)
 
 
 @settings(max_examples=40, deadline=None)
@@ -35,13 +43,14 @@ def test_simhash_batch_equals_scalar(docs):
 
 
 @settings(max_examples=30, deadline=None)
-@given(st.lists(_text, max_size=8))
+@given(st.lists(_doc, max_size=8))
 def test_signature_batch_equals_scalar(docs):
     expected = [
-        signature_of_hashes(shingle_hashes(d, 7), A, B).view(np.int64)
+        oph_signature_of_hashes(shingle_hashes_raw(d, 7), 128, 42)
+        .view(np.int64)
         for d in docs
     ]
-    got = signature_batch(docs, A, B, 7)
+    got = signature_batch(docs, 128, 7, 42)
     assert all((np.asarray(g) == np.asarray(e)).all()
                for g, e in zip(got, expected))
 

@@ -82,6 +82,31 @@ def test_load_model_with_removed_shuffle_partitions(tmp_path):
     assert old.cfg.config_hash() == new.cfg.config_hash()
 
 
+@pytest.mark.parametrize("legacy, error", [
+    ({"minhash_scheme": "oph", "hot_band_star": True}, None),
+    ({"minhash_scheme": "perm", "hot_band_star": True}, "minhash_scheme"),
+    ({"minhash_scheme": "oph", "hot_band_star": False}, "hot_band_star"),
+])
+def test_load_model_with_removed_kernel_switches(tmp_path, legacy, error):
+    """Model JSON saved while EngineConfig still had minhash_scheme and
+    hot_band_star loads at their defaults (same config_hash as a fresh
+    model); any other value is refused, naming the key."""
+    from deduplipy_spark.deduplicator import Deduplicator
+
+    fresh = Deduplicator(col_names=["name"])
+    fresh.save(str(tmp_path / "new.json"))
+    blob = json.loads((tmp_path / "new.json").read_text())
+    blob["config"].update(legacy)
+    (tmp_path / "old.json").write_text(json.dumps(blob))
+
+    if error is None:
+        old = Deduplicator.load(str(tmp_path / "old.json"))
+        assert old.cfg.config_hash() == fresh.cfg.config_hash()
+    else:
+        with pytest.raises(ValueError, match=error):
+            Deduplicator.load(str(tmp_path / "old.json"))
+
+
 def test_kernel_version_invalidates_checkpoints(monkeypatch):
     """ADVICE r4 #3: a semantics-changing kernel fix (same config VALUES)
     must invalidate old stage manifests — KERNEL_VERSION is folded into
