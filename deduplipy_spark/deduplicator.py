@@ -46,7 +46,6 @@ class Deduplicator:
         self,
         col_names: list[str] | None = None,
         config: EngineConfig | None = None,
-        rules_info: dict | None = None,
         field_info: dict[str, list[str]] | None = None,
         interaction: bool = False,
         verbose: int = 0,
@@ -60,7 +59,6 @@ class Deduplicator:
         self.cfg = config or EngineConfig(
             id_cols=tuple(self.col_names), content_col=self.col_names[0]
         )
-        self.rules_info = rules_info
         self.field_info = field_info or {c: ["adjusted_ratio"] for c in self.col_names}
         self.interaction = interaction
         # hot-band handling for predict(): 'capped' (star edges) or 'exact'

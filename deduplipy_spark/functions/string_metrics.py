@@ -15,7 +15,7 @@ semantics on top of that:
 In the engine these are OPTIONAL (the north rule replaces pair scoring with
 MinHash-estimated Jaccard); they exist for users migrating reference
 configs. Execution: vectorized pandas UDFs (Arrow batches) — never
-row-at-a-time ``udf``. ``length_adjustment`` alone is a pure Column expr.
+row-at-a-time ``udf``.
 """
 
 from __future__ import annotations
@@ -23,14 +23,8 @@ from __future__ import annotations
 from difflib import SequenceMatcher
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-
-def length_adjustment_col(x1: Column, x2: Column) -> Column:
-    """1 - exp(-0.2 * min(len)) as a Column (string_metrics.py:6-19)."""
-    return F.lit(1.0) - F.exp(F.lit(-0.2) * F.least(F.length(x1), F.length(x2)))
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@ expressions (JVM codegen, no UDFs), so each is also DuckDB-oracle checkable.
 
 These extend the reference's string-function surface (its 22 blocking rules +
 string metrics) with the ops a web-scale corpus pipeline needs: token
-counting, quality scoring, language ID, document fingerprinting.
+counting, quality scoring, language ID, repetition signals.
 """
 
 from __future__ import annotations
@@ -101,7 +101,7 @@ def lang_id(x: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# document fingerprinting
+# repetition signals
 # --------------------------------------------------------------------------
 
 def dup_line_ratio(x: Column) -> Column:
@@ -279,10 +279,3 @@ def dup_ngram_stats(df, id_col: str, text_col: str, n: int = 5,
             ).alias("dup_ngram_frac"),
         )
     )
-
-
-def normalized_fingerprint(x: Column) -> Column:
-    """64-bit fingerprint of whitespace/case-normalized content: the
-    cheap near-exact dedup key (collapses trivial reformatting)."""
-    norm = F.regexp_replace(F.lower(F.coalesce(x, F.lit(""))), r"\s+", " ")
-    return F.xxhash64(F.regexp_replace(norm, r"^ | $", ""))

@@ -3,8 +3,8 @@
 The reference's only persistence is a debug CSV dump
 (``deduplipy/blocking/blocking.py:132-133``, ``deduplicator.py:204-205``) and
 pickling the whole model. Ours: each pipeline stage writes a parquet dir
-(Iceberg table in prod — same call sites, different format string) plus a
-``_manifest.json`` carrying (stage, config_hash, row_count, extra metrics).
+(Iceberg table in prod — same call sites) plus a ``_manifest.json`` carrying
+(stage, config_hash, input_key, row_count, partition and byte counts).
 A re-run skips any stage whose manifest matches the current config hash —
 this is the "resumes mid-pipeline" requirement of the north rule.
 """
@@ -44,8 +44,7 @@ def input_fingerprint(df: DataFrame, extra=None) -> str:
 
 class TableIO:
     def __init__(self, spark: SparkSession, root: str, config_hash: str,
-                 fmt: str = "parquet", input_key: str | None = None,
-                 resume: bool = True) -> None:
+                 input_key: str | None = None, resume: bool = True) -> None:
         """resume=False turns the manifest skip OFF: every stage is written
         fresh (the reference's debug-dump role, blocking.py:132-133 /
         deduplicator.py:204-205 — ``save_intermediate_steps``), while
@@ -53,7 +52,6 @@ class TableIO:
         self.spark = spark
         self.root = root
         self.config_hash = config_hash
-        self.fmt = fmt
         self.input_key = input_key
         self.resume = resume
         os.makedirs(root, exist_ok=True)
@@ -82,22 +80,17 @@ class TableIO:
             and m.get("complete")
         )
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None,
-              metrics: dict[str, Any] | None = None) -> DataFrame:
+    def write(self, stage: str, df: DataFrame) -> DataFrame:
         """Write stage table + per-partition metrics + manifest.
 
         Returns the re-read DataFrame (plan cut at a durable boundary)."""
         path = self._path(stage)
-        writer = df.write.mode("overwrite").format(self.fmt)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        out = self.spark.read.format(self.fmt).load(path)
-        self._finish(stage, out, metrics)
+        df.write.mode("overwrite").parquet(path)
+        out = self.spark.read.parquet(path)
+        self._finish(stage, out)
         return out
 
-    def _finish(self, stage: str, out: DataFrame,
-                metrics: dict[str, Any] | None = None) -> None:
+    def _finish(self, stage: str, out: DataFrame) -> None:
         """Per-partition lineage record + manifest for a just-written stage.
 
         ONE action for the whole record: collect the per-partition stats to
@@ -124,7 +117,6 @@ class TableIO:
             "n_partitions": int(len(stats_pdf)),
             "bytes": int(stats_pdf["bytes"].sum()),
             "complete": True,
-            "metrics": metrics or {},
         }
         # atomic: a crash between write and rename leaves no manifest at all
         final = os.path.join(path, MANIFEST)
@@ -158,7 +150,7 @@ class TableIO:
                 return self.spark.table(name)
         except Exception:          # no catalog / unsupported: plain read
             pass
-        return self.spark.read.format(self.fmt).load(self._path(stage))
+        return self.spark.read.parquet(self._path(stage))
 
     def write_or_skip(self, stage: str, df_fn,
                       bucket_cols: list[str] | None = None, **kw) -> DataFrame:
@@ -171,8 +163,7 @@ class TableIO:
 
     def write_bucketed(self, stage: str, df: DataFrame, bucket_cols: list[str],
                        sort_cols: list[str] | None = None,
-                       n_buckets: int = 32,
-                       metrics: dict[str, Any] | None = None) -> DataFrame:
+                       n_buckets: int = 32) -> DataFrame:
         """Bucketed (and optionally sorted) stage table, with the same
         manifest/metrics contract as ``write`` (resume-able).
 
@@ -186,12 +177,12 @@ class TableIO:
         """
         name = self.table_name(stage)
         writer = (
-            df.write.mode("overwrite").format(self.fmt)
+            df.write.mode("overwrite").format("parquet")
             .bucketBy(n_buckets, *bucket_cols)
         )
         if sort_cols:
             writer = writer.sortBy(*sort_cols)
         writer.option("path", self._path(stage)).saveAsTable(name)
         out = self.spark.table(name)
-        self._finish(stage, out, metrics)
+        self._finish(stage, out)
         return out

@@ -11,9 +11,14 @@ built-in can't express:
   (event_time, file_id) order inside the group before state is consulted.
 - a per-key duplicate COUNTER and first-owner metadata maintained in state,
   emitted with every kept row (lineage: how many copies this sha has shed).
-- state TTL via processing-time timeout (GroupStateTimeout), so the sha
-  index ages out instead of growing forever — the streaming analog of the
-  batch band-index cap.
+- state TTL in EVENT time (``GroupStateTimeout.EventTimeTimeout``), so the
+  sha index ages out instead of growing forever — the streaming analog of
+  the batch band-index cap. Each hit sets the key's timeout to its rows'
+  newest event_time + 24 h; the key is evicted once the watermark (newest
+  event seen − 24 h, as in ``stream_exact_dedup``) passes it, and rows
+  older than the watermark are dropped as late. Spark runs a no-data batch
+  only when the watermark moves, so a ``trigger(availableNow=True)`` run
+  ends (a processing-time timeout asked for one every trigger, forever).
 
 State schema: (first_id long, first_time timestamp, dups long).
 Output: the first occurrence row per sha + running duplicate count.
@@ -25,6 +30,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 STATE_SCHEMA = "first_id long, first_time timestamp, dups long"
@@ -35,6 +41,8 @@ OUTPUT_SCHEMA = (
 
 
 _OUT_COLS = ["content_sha", "file_id", "event_time", "repo", "path", "dups"]
+_TTL = "24 hours"
+_TTL_MS = 24 * 3600 * 1000
 
 
 def _dedup_one_sha(
@@ -71,22 +79,26 @@ def _dedup_one_sha(
                 "dups": [new_dups],
             }
         )
-    state.setTimeoutDuration(24 * 3600 * 1000)   # 24h TTL, refreshed per hit
+    # TTL refreshed per hit; event_ms is epoch ms computed in the JVM, so it
+    # compares with the watermark whatever the session time zone
+    state.setTimeoutTimestamp(int(rows["event_ms"].max()) + _TTL_MS)
     yield out
 
 
 def stateful_exact_dedup(stream: DataFrame) -> DataFrame:
     """stream: (content_sha, file_id, event_time, repo, path, ...) ->
-    first-seen rows per sha with a running duplicate counter in state."""
+    first-seen rows per sha with a running duplicate counter in state.
+    Rows more than 24 h older than the newest event seen are dropped."""
     cols = ["content_sha", "file_id", "event_time", "repo", "path"]
     return (
-        stream.select(*cols)
+        stream.withWatermark("event_time", _TTL)
+        .select(*cols, F.unix_millis("event_time").alias("event_ms"))
         .groupBy("content_sha")
         .applyInPandasWithState(
             _dedup_one_sha,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

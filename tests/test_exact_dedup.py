@@ -3,7 +3,6 @@
 import pyspark.sql.functions as F
 
 from deduplipy_spark.ids import with_identity
-from deduplipy_spark.operators.exact_dedup import exact_clusters, exact_groups, representatives
 from deduplipy_spark.sources.datagen import gen_files, gen_pandas
 
 
@@ -24,18 +23,3 @@ def test_sha_invariant_and_exact_clusters(spark):
     n = files.count()
     assert files.select("file_id").distinct().count() == n
 
-    # planted layout: member 0 and 1 of each cluster are byte-identical
-    clus = exact_clusters(files)
-    pdf = clus.select("row_idx", "exact_cluster_id", "content_sha").toPandas()
-    by_idx = pdf.set_index("row_idx")
-    for c in range(12):
-        assert by_idx.loc[c * 5, "content_sha"] == by_idx.loc[c * 5 + 1, "content_sha"]
-        assert by_idx.loc[c * 5, "exact_cluster_id"] == by_idx.loc[c * 5 + 1, "exact_cluster_id"]
-
-    groups = exact_groups(files).toPandas()
-    # 12 clusters have one exact-dup pair each -> 12 groups of size>=2
-    assert (groups["group_size"] >= 2).sum() == 12
-
-    reps = representatives(files)
-    assert reps.count() == n - 12          # one row collapses per exact pair
-    assert reps.select("content_sha").distinct().count() == reps.count()

@@ -150,21 +150,3 @@ def test_previous_with_no_history_is_noop():
     sims = np.array([[0.5], [0.6]])
     learner.fit(_pairs_frame(sims))
     assert learner._y == [] and learner._prev is None
-
-
-def test_pair_classifier_interaction_separates_xor(spark):
-    from deduplipy_spark.operators.learning import PairClassifier
-
-    X, y = _xor_data(n=300)
-    pdf = pd.DataFrame({"similarities": [list(r) for r in X],
-                        "y": y.astype(float)})
-    sdf = spark.createDataFrame(pdf)
-    clf = PairClassifier(interaction=True).fit(sdf)
-    out = clf.predict_proba(sdf).select("y", "score").toPandas()
-    acc = ((out["score"] > 0.5).astype(int) == out["y"]).mean()
-    assert acc > 0.9
-    # plain classifier cannot separate XOR
-    plain = PairClassifier(interaction=False).fit(sdf)
-    out_p = plain.predict_proba(sdf).select("y", "score").toPandas()
-    acc_p = ((out_p["score"] > 0.5).astype(int) == out_p["y"]).mean()
-    assert acc_p < 0.75

@@ -1,44 +1,8 @@
-"""Optional learned scorer (pyspark.ml) + demo dataset loaders."""
+"""Demo dataset loaders and table readers."""
 
-import pyspark.sql.functions as F
 import pytest
 
-from deduplipy_spark.operators.learning import PairClassifier
 from deduplipy_spark.sources.datasets import load_data, read_table
-
-
-def test_pair_classifier_learns_separation(spark):
-    # synthetic feature vectors: matches near [0.9], non-matches near [0.1]
-    import random
-
-    rng = random.Random(4)
-    rows = [([rng.uniform(0.7, 1.0), rng.uniform(0.6, 1.0)], 1.0) for _ in range(60)]
-    rows += [([rng.uniform(0.0, 0.3), rng.uniform(0.0, 0.4)], 0.0) for _ in range(240)]
-    df = spark.createDataFrame(rows, "similarities array<double>, y double")
-    clf = PairClassifier().fit(df)
-    scored = clf.predict_proba(df).toPandas()
-    hi = scored[scored.y == 1.0].score
-    lo = scored[scored.y == 0.0].score
-    assert hi.min() > 0.5 > lo.max()
-
-
-def test_pair_classifier_single_class_noop(spark):
-    df = spark.createDataFrame([([0.9, 0.8], 1.0)] * 5,
-                               "similarities array<double>, y double")
-    clf = PairClassifier().fit(df)
-    out = clf.predict_proba(df).toPandas()
-    assert (out.score == 1.0).all()
-
-
-@pytest.mark.parametrize("label_counts", [{0.0: 5, 1.0: 0},     # ÷ by zero
-                                          {0.0: 5, 1.0: -2},    # < 0 weight
-                                          {0.0: 5, 1.0: 2.5},
-                                          {"no": 5, "yes": 2}])
-def test_pair_classifier_rejects_bad_label_counts(spark, label_counts):
-    df = spark.createDataFrame([([0.9], 1.0), ([0.1], 0.0)],
-                               "similarities array<double>, y double")
-    with pytest.raises(ValueError):
-        PairClassifier().fit(df, label_counts=label_counts)
 
 
 def test_voters_loader_contract(spark):

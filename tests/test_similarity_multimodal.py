@@ -103,7 +103,7 @@ def test_multimodal_features_deterministic(spark):
     assert dd.loc[1].payload_sha == dd.loc[3].payload_sha
 
 
-def test_incremental_hot_band_and_intra_batch(spark):
+def test_incremental_hot_band_and_intra_batch(spark, await_available_now):
     """VERDICT r1 #7: (a) a duplicate pair arriving in the SAME micro-batch
     is detected; (b) a planted hot band never grows the index past band_cap
     per band key."""
@@ -128,7 +128,7 @@ def test_incremental_hot_band_and_intra_batch(spark):
 
     inc = IncrementalNearDup(spark, cfg, state)
     schema = "repo string, path string, commit string, lang string, content string"
-    inc.start(in_dir, schema, ckpt).awaitTermination(120)
+    await_available_now(inc.start(in_dir, schema, ckpt), 120)
 
     ids = with_identity(spark.createDataFrame(pdf), cfg.id_cols).select(
         "path", "file_id"
@@ -150,7 +150,7 @@ def test_incremental_hot_band_and_intra_batch(spark):
         columns=["repo", "path", "commit", "lang", "content"],
     )
     spark.createDataFrame(pdf2).write.mode("append").parquet(in_dir)
-    inc.start(in_dir, schema, ckpt).awaitTermination(120)
+    await_available_now(inc.start(in_dir, schema, ckpt), 120)
     late_id = with_identity(spark.createDataFrame(pdf2), cfg.id_cols).first().file_id
     matches2 = spark.read.parquet(inc.matches_path).toPandas()
     assert (matches2.new_id == late_id).any()        # matched against index
@@ -158,7 +158,7 @@ def test_incremental_hot_band_and_intra_batch(spark):
     assert index2.groupby("band_key").size().max() <= cfg.band_cap
 
 
-def test_incremental_near_dup_stream(spark):
+def test_incremental_near_dup_stream(spark, await_available_now):
     from deduplipy_spark.config import EngineConfig
     from deduplipy_spark.streaming.incremental import IncrementalNearDup
 
@@ -178,11 +178,11 @@ def test_incremental_near_dup_stream(spark):
     inc = IncrementalNearDup(spark, cfg, state)
     write_batch(0, content)
     q = inc.start(in_dir, "repo string, path string, commit string, lang string, content string", ckpt)
-    q.awaitTermination(60)
+    await_available_now(q, 60)
     # second file arrives: near-identical -> must match against the index
     write_batch(1, content + "\n# tail")
     q2 = inc.start(in_dir, "repo string, path string, commit string, lang string, content string", ckpt)
-    q2.awaitTermination(60)
+    await_available_now(q2, 60)
     matches = spark.read.parquet(inc.matches_path).toPandas()
     assert len(matches) >= 1
 
@@ -294,7 +294,7 @@ def test_containment_banded_blocks_and_verifies(spark):
     assert all(p[0] != 3 and p[1] != 3 for p in pairs)
 
 
-def test_overflow_band_members_still_match_across_batches(spark):
+def test_overflow_band_members_still_match_across_batches(spark, await_available_now):
     """VERDICT r3 #6: the capped band index claims (incremental.py:17-25)
     that overflow arrivals still MATCH the retained members forever — they
     just stop extending the index. Plant >cap members of one band across
@@ -318,7 +318,7 @@ def test_overflow_band_members_still_match_across_batches(spark):
             [("r", n, "c", "py", hot) for n in names],
             columns=["repo", "path", "commit", "lang", "content"])
         spark.createDataFrame(pdf).write.mode("append").parquet(in_dir)
-        inc.start(in_dir, schema, ckpt).awaitTermination(120)
+        await_available_now(inc.start(in_dir, schema, ckpt), 120)
         return with_identity(spark.createDataFrame(pdf), cfg.id_cols).select(
             "path", "file_id").toPandas().set_index("path").file_id.to_dict()
 

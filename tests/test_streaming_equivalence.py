@@ -21,7 +21,7 @@ SF_DOCS = "/root/testdata/sf0.01/documents.parquet"
 
 
 @pytest.mark.skipif(not os.path.exists(SF_DOCS), reason="sf0.01 data absent")
-def test_incremental_matches_batch_blocker_on_sf001(spark):
+def test_incremental_matches_batch_blocker_on_sf001(spark, await_available_now):
     from pyspark.sql import functions as F
 
     from deduplipy_spark.config import EngineConfig
@@ -57,7 +57,7 @@ def test_incremental_matches_batch_blocker_on_sf001(spark):
         q = inc.start(in_dir, schema, ckpt)
         # fail loudly on timeout: a still-running query overlapping the next
         # chunk's write would turn the equivalence gate flaky, not red
-        assert q.awaitTermination(180), "availableNow run exceeded 180s"
+        await_available_now(q, 180)
 
     import pandas as pd
 

@@ -20,7 +20,7 @@ def _write(spark, in_dir, repos, paths, contents, times):
     spark.createDataFrame(rows).write.mode("append").parquet(in_dir)
 
 
-def test_stream_exact_dedup_drops_late_duplicates(spark):
+def test_stream_exact_dedup_drops_late_duplicates(spark, await_available_now):
     """First occurrence wins is a CROSS-batch guarantee (state store); within
     one micro-batch dropDuplicates keeps an arbitrary member, so the test
     feeds the duplicate in a later batch."""
@@ -44,7 +44,7 @@ def test_stream_exact_dedup_drops_late_duplicates(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
+        await_available_now(q, 60)
         return spark.read.parquet(out_dir).toPandas()
 
     _write(spark, in_dir, ["r1", "r3"], ["a", "c"],
@@ -62,7 +62,7 @@ def test_stream_exact_dedup_drops_late_duplicates(spark):
     assert out2[out2.content == "same body"].repo.iloc[0] == "r1"
 
 
-def test_stateful_exact_dedup_applyinpandaswithstate(spark):
+def test_stateful_exact_dedup_applyinpandaswithstate(spark, await_available_now):
     """Custom stateful operator (streaming/stateful.py): first-seen-wins is
     deterministic WITHIN a batch (earliest event_time, id tiebreak), and the
     per-sha state carries a duplicate counter across batches."""
@@ -90,7 +90,7 @@ def test_stateful_exact_dedup_applyinpandaswithstate(spark):
             .outputMode("append").option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
+        await_available_now(q, 60)
         return spark.read.parquet(out_dir).toPandas()
 
     # batch 1: three copies of one sha IN THE SAME BATCH, later-timestamped
@@ -137,8 +137,8 @@ class _FakeState:
     def remove(self):
         self.removed = True
 
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ts = ms
 
 
 def test_stateful_timeout_evicts_state_and_emits_nothing():
@@ -159,13 +159,14 @@ def test_stateful_timeout_evicts_state_and_emits_nothing():
 def test_stateful_normal_path_still_updates_state():
     from deduplipy_spark.streaming.stateful import _dedup_one_sha
 
+    t = pd.Timestamp("2026-01-01")
     batch = pd.DataFrame({
-        "content_sha": ["s"], "file_id": [7],
-        "event_time": [pd.Timestamp("2026-01-01")],
-        "repo": ["r"], "path": ["p"],
+        "content_sha": ["s"], "file_id": [7], "event_time": [t],
+        "repo": ["r"], "path": ["p"], "event_ms": [t.value // 10**6],
     })
     state = _FakeState()
     out = pd.concat(list(_dedup_one_sha(("s",), iter([batch]), state)))
     assert len(out) == 1 and out.file_id.iloc[0] == 7
     assert state.updated == (7, pd.Timestamp("2026-01-01"), 0)
-    assert state.timeout_ms == 24 * 3600 * 1000
+    # event-time TTL: newest event of the group + 24 h, in epoch ms
+    assert state.timeout_ts == (t + pd.Timedelta(hours=24)).value // 10**6

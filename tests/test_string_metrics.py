@@ -1,7 +1,6 @@
 """Reference string-metric vectors (tests/test_string_metrics) + UDF path."""
 
 import numpy as np
-import pyspark.sql.functions as F
 import pytest
 
 from deduplipy_spark.functions.string_metrics import (
@@ -9,7 +8,6 @@ from deduplipy_spark.functions.string_metrics import (
     adjusted_partial_ratio,
     adjusted_ratio,
     length_adjustment,
-    length_adjustment_col,
     make_metric_udf,
     similarities_col,
 )
@@ -44,7 +42,6 @@ def test_metric_udf_and_similarities(spark):
     df = spark.createDataFrame(rows, "name_1 string, name_2 string")
     out = df.select(
         make_metric_udf("adjusted_ratio")("name_1", "name_2").alias("m"),
-        length_adjustment_col(F.col("name_1"), F.col("name_2")).alias("adj"),
         similarities_col(df, ["name"], ["adjusted_ratio",
                                         "adjusted_token_sort_ratio"]).alias("sims"),
     ).toPandas()

@@ -6,7 +6,6 @@ from deduplipy_spark.functions.text import (
     bpe_ish_token_count,
     lang_id,
     mean_word_length,
-    normalized_fingerprint,
     punct_ratio,
     quality_score,
     stopword_ratio,
@@ -59,18 +58,6 @@ def test_lang_id(spark):
     assert l[3] == "fr"
     assert l[4] == "zh"
     assert l[5] == "und"
-
-
-def test_normalized_fingerprint_collapses_whitespace_case(spark):
-    df = spark.createDataFrame(
-        [(0, "Hello   World"), (1, "hello world"), (2, "  HELLO\tWORLD "),
-         (3, "different")],
-        "id long, text string",
-    )
-    out = df.select("id", normalized_fingerprint(F.col("text")).alias("fp")).toPandas()
-    fps = dict(zip(out.id, out.fp))
-    assert fps[0] == fps[1] == fps[2]
-    assert fps[3] != fps[0]
 
 
 def test_mean_word_length(spark):
