@@ -205,8 +205,8 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= 0.4; the synthetic
     embeddings table tops out ~0.51) — the exact baseline of the embedding
     dedup class; the scale path is the hyperplane-LSH bucketing in
-    operators/similarity.lsh_topk (recall-tested vs this baseline in
-    tests)."""
+    operators/similarity.embedding_dup_pairs_lsh (the
+    embedding_dup_pairs_banded query, checked against this baseline)."""
     from deduplipy_spark.operators.similarity import cosine_col, norm_col
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))

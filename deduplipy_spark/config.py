@@ -6,6 +6,9 @@ convergence 0.01, cluster/score thresholds as method kwargs,
 ``deduplipy/deduplicator/deduplicator.py:167``). Ours is a frozen dataclass so
 that a single config hash keys every checkpoint manifest — the "identical
 shingle/signature config" knob that the recall target is defined against.
+Values that only ever run at one setting stay module constants beside the
+code that uses them, as in the reference (SoftImpute convergence, CC round
+limit, SimHash widths).
 """
 
 from __future__ import annotations
@@ -40,10 +43,6 @@ class EngineConfig:
     rows_per_band: int = 8
     minhash_seed: int = 42
 
-    # --- SimHash (token-level path) ---
-    simhash_bits: int = 64
-    simhash_band_bits: int = 16     # 4 bands of 16 bits -> hamming<=3 guarantee
-
     # --- pair generation / skew ---
     band_cap: int = 200             # max rows in a band's all-pairs expansion;
                                     # overflow members get one star edge to
@@ -54,8 +53,6 @@ class EngineConfig:
     cluster_threshold: float = 0.5
     fill_missing: bool = True
     max_hac_size: int = 2000        # components above this: one-cluster short circuit
-    softimpute_convergence: float = 0.01   # reference deduplipy/config.py:4
-    max_cc_rounds: int = 50
     # execution-only (excluded from config_hash): below this edge count the
     # CC step runs driver-side union-find instead of the distributed loop
     # (measured: the distributed loop's fixed multi-round cost was 51s for

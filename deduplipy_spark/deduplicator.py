@@ -40,6 +40,17 @@ from pyspark.sql import functions as F
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.plans.pipeline import DedupPipeline
 
+# EngineConfig fields removed because only one value of each ever ran: saved
+# models still carry them, and load accepts exactly that value
+REMOVED_CONFIG = {
+    "minhash_scheme": "oph",
+    "hot_band_star": True,
+    "simhash_bits": 64,
+    "simhash_band_bits": 16,
+    "softimpute_convergence": 0.01,
+    "max_cc_rounds": 50,
+}
+
 
 class Deduplicator:
     def __init__(
@@ -284,8 +295,6 @@ class Deduplicator:
     def load(cls, path: str) -> "Deduplicator":
         import json
 
-        from deduplipy_spark.config import EngineConfig
-
         with open(path) as f:
             blob = json.load(f)
         c = blob["config"]
@@ -293,10 +302,9 @@ class Deduplicator:
         # models saved before the unused shuffle_partitions field was
         # removed still carry it; it never entered the config hash
         c.pop("shuffle_partitions", None)
-        # ... and before the second MinHash kernel and the pure-cap pair
-        # mode were removed: only their default still runs, so any other
-        # value names a model this engine cannot reproduce
-        for key, only in (("minhash_scheme", "oph"), ("hot_band_star", True)):
+        # ... and the single-value fields: any other value names a model
+        # this engine cannot reproduce
+        for key, only in REMOVED_CONFIG.items():
             v = c.pop(key, only)
             if v != only:
                 raise ValueError(

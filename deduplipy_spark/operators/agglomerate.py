@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
 
+# SoftImpute stopping rule: relative RMSE change of the imputed entries
+# (reference ``deduplipy/config.py:4``)
+SOFTIMPUTE_CONVERGENCE = 0.01
+
 # ---------------------------------------------------------------------------
 # numpy SoftImpute (re-derivation of the SoftImpute algorithm of Mazumder,
 # Hastie & Tibshirani (JMLR 2010), matching fancyimpute's defaults used by the
@@ -40,7 +44,8 @@ from deduplipy_spark.config import EngineConfig
 # ---------------------------------------------------------------------------
 
 
-def soft_impute(X: np.ndarray, convergence_threshold: float = 0.01,
+def soft_impute(X: np.ndarray,
+                convergence_threshold: float = SOFTIMPUTE_CONVERGENCE,
                 max_iters: int = 100) -> np.ndarray:
     missing = np.isnan(X)
     if not missing.any():
@@ -65,8 +70,9 @@ def soft_impute(X: np.ndarray, convergence_threshold: float = 0.01,
     return X_filled
 
 
-def fill_missing_links(matrix: np.ndarray,
-                       convergence_threshold: float = 0.01) -> np.ndarray:
+def fill_missing_links(
+    matrix: np.ndarray, convergence_threshold: float = SOFTIMPUTE_CONVERGENCE,
+) -> np.ndarray:
     """Reference semantics (fill_missing_edges.py:8-35): 0s are 'missing'."""
     m = matrix.astype(float).copy()
     np.fill_diagonal(m, 1.0)
@@ -128,31 +134,27 @@ def centroid_linkage(dist: np.ndarray) -> list[tuple[int, int, float, int]]:
 def cut_merges(merges: list[tuple[int, int, float, int]], n: int, t: float) -> np.ndarray:
     """fcluster(criterion='distance')-style cut: observations whose subtree's
     max merge height <= t share a flat cluster. Returns labels 0..k-1."""
-    # effective height of a merge = max merge height in its subtree (this is
-    # how the distance criterion behaves on non-monotonic centroid trees)
-    eff: dict[int, float] = {}
-    members: dict[int, list[int]] = {i: [i] for i in range(n)}
-    for m, (a, b, h, _) in enumerate(merges):
-        node = n + m
-        eff[node] = max(h, eff.get(a, 0.0), eff.get(b, 0.0))
-        members[node] = members[a] + members[b]
-
     parent = list(range(n))
 
-    def find2(x: int) -> int:
+    def find(x: int) -> int:
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    for m, (a, b, h, _) in enumerate(merges):
-        node = n + m
-        if eff[node] <= t:
-            leaves = members[node]
-            root = find2(leaves[0])
-            for leaf in leaves[1:]:
-                parent[find2(leaf)] = root
-    labels = np.array([find2(i) for i in range(n)])
+    # effective height of a merge = max merge height in its subtree (this is
+    # how the distance criterion behaves on non-monotonic centroid trees).
+    # It is never below either child's, so when a merge passes the cut both
+    # subtrees were already united: joining one leaf of each (rep) suffices.
+    eff = [0.0] * n
+    rep = list(range(n))
+    for a, b, h, _ in merges:
+        e = max(h, eff[a], eff[b])
+        eff.append(e)
+        rep.append(rep[a])
+        if e <= t:
+            parent[find(rep[b])] = find(rep[a])
+    labels = np.array([find(i) for i in range(n)])
     _, out = np.unique(labels, return_inverse=True)
     return out
 
@@ -162,22 +164,15 @@ def hierarchical_cluster_component(
     edges,
     cluster_threshold: float,
     fill_missing: bool,
-    convergence_threshold: float = 0.01,
 ) -> np.ndarray:
     """Cluster one component; returns per-node cluster label = min node id.
 
-    ``edges`` is either an (id_1, id_2, score) triple of numpy arrays — the
-    hot-path form: dedup graphs have millions of tiny components, and
-    per-group pandas indexing/itertuples was ~70% of the grouped-map HAC's
-    profile — or a pandas DataFrame with those columns (replica/tests).
+    ``edges`` is an (id_1, id_2, score) triple of numpy arrays: dedup graphs
+    have millions of tiny components, and per-group pandas
+    indexing/itertuples was ~70% of the grouped-map HAC's profile.
     ``node_ids`` must be sorted ascending (np.unique output).
     """
-    if isinstance(edges, pd.DataFrame):
-        e1 = edges["id_1"].to_numpy(dtype=np.int64)
-        e2 = edges["id_2"].to_numpy(dtype=np.int64)
-        sc = edges["score"].to_numpy(dtype=np.float64)
-    else:
-        e1, e2, sc = edges
+    e1, e2, sc = edges
     n = len(node_ids)
     if n == 1:
         return node_ids.copy()
@@ -195,7 +190,7 @@ def hierarchical_cluster_component(
     adjacency[a, b] = sc
     adjacency[b, a] = sc
     if fill_missing:
-        adjacency = fill_missing_links(adjacency, convergence_threshold)
+        adjacency = fill_missing_links(adjacency)
     distances = (np.ones_like(adjacency) - np.eye(n)) - adjacency
     merges = centroid_linkage(distances)
     labels = cut_merges(merges, n, 1.0 - cluster_threshold)
@@ -220,7 +215,6 @@ def _agglomerate_grouped(edges: DataFrame, cfg: EngineConfig,
     cluster_threshold = cfg.cluster_threshold
     fill_missing = cfg.fill_missing
     max_size = cfg.max_hac_size
-    conv = cfg.softimpute_convergence
 
     # Explicit repartition by group: the edge table is small in BYTES
     # (AQE would coalesce it to ~1 post-shuffle partition) but large in
@@ -267,8 +261,7 @@ def _agglomerate_grouped(edges: DataFrame, cfg: EngineConfig,
                 labels = np.full(len(node_ids), node_ids.min(), dtype=np.int64)
             else:
                 labels = hierarchical_cluster_component(
-                    node_ids, (s1, s2, ss), cluster_threshold, fill_missing,
-                    conv)
+                    node_ids, (s1, s2, ss), cluster_threshold, fill_missing)
             ids_out.append(node_ids)
             lab_out.append(labels)
             comp_out.append(np.full(len(node_ids), comp[lo], dtype=np.int64))

@@ -11,7 +11,7 @@ Scale notes:
   all on the node-id key — no quadratic terms.
 - ``localCheckpoint()`` per round truncates lineage (SURVEY §4.3); without
   it the plan doubles every iteration.
-- Convergence = zero changed labels; `max_cc_rounds` is an assert-style
+- Convergence = zero changed labels; `MAX_CC_ROUNDS` is an assert-style
   backstop, not a silent truncation.
 
 The component id is ``min(file_id)`` over the component — deterministic
@@ -22,6 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# distributed-loop round limit: min-label propagation with pointer jumping
+# converges in O(log d) rounds, so hitting it means a bug, not a big graph
+MAX_CC_ROUNDS = 50
 
 
 def _mem_bytes(s: str) -> int:
@@ -50,11 +54,10 @@ def auto_driver_max_edges(spark: SparkSession) -> int:
     return max(1_000_000, b // 512)
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 50,
+def connected_components(edges: DataFrame,
                          driver_max_edges: int | None = None,
                          with_sizes: bool = False,
                          edge_count: int | None = None,
-                         frontier: bool = True,
                          stats_out: dict | None = None) -> DataFrame:
     """edges(id_1, id_2) -> (id, component) for every node appearing in edges.
 
@@ -85,20 +88,18 @@ def connected_components(edges: DataFrame, max_rounds: int = 50,
     (a global max there would be its own job, costing exactly what the
     skip saves).
 
-    ``frontier=True`` (default) runs the distributed loop in frontier form
-    (VERDICT r4 #7, the large-star optimization): only nodes whose label
-    CHANGED last round send neighbor/pointer offers, so once most labels
-    freeze the per-round joins see a small build side that AQE's runtime
-    broadcast switch turns into narrow map-side joins — no full-graph
-    shuffle after the early rounds. ``frontier=False`` keeps the classic
-    all-nodes round (identical output). Measured trade (scripts/bench_cc.py,
-    BENCH/NOTES.md): frontier wins 1.33x on clique-shaped dedup graphs
-    (diameter <= 2-3, the shape band blocking produces); on high-diameter
-    graphs every label changes every round and the frontier never shrinks
-    — since r6 the loop detects that regime from the (already-counted)
-    per-round change fraction and HANDS OFF to classic rounds mid-run
-    (``_FRONTIER_SWITCH``), so the default stays near the better variant
-    on both shapes; ``frontier=False`` still forces classic throughout.
+    The distributed loop runs in frontier form (VERDICT r4 #7, the
+    large-star optimization): only nodes whose label CHANGED last round
+    send neighbor/pointer offers, so once most labels freeze the per-round
+    joins see a small build side that AQE's runtime broadcast switch turns
+    into narrow map-side joins — no full-graph shuffle after the early
+    rounds. Measured trade (BENCH/NOTES.md): frontier wins 1.33x over the
+    classic all-nodes round on clique-shaped dedup graphs (diameter <= 2-3,
+    the shape band blocking produces); on high-diameter graphs every label
+    changes every round and the frontier never shrinks — the loop detects
+    that regime from the (already-counted) per-round change fraction and
+    HANDS OFF to classic rounds mid-run (``_FRONTIER_SWITCH``), so it stays
+    near the better variant on both shapes.
     """
     if driver_max_edges is None:
         driver_max_edges = auto_driver_max_edges(edges.sparkSession)
@@ -130,10 +131,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 50,
         .withColumn("comp", F.col("id"))
         .localCheckpoint()
     )
-    rounds = _frontier_rounds if frontier else _classic_rounds
     base_ckpts = [_checkpoint_rdd(bidir), _checkpoint_rdd(labels)]
     try:
-        labels = rounds(bidir, labels, max_rounds)
+        labels = _frontier_rounds(bidir, labels, MAX_CC_ROUNDS)
     finally:
         # converged labels are checkpoint-backed (and on the error path the
         # caller gets none) -> edge/init blocks are free-able; without the
@@ -235,8 +235,8 @@ def _rebase(df: DataFrame) -> DataFrame:
 
 def _classic_rounds(bidir: DataFrame, labels: DataFrame,
                     max_rounds: int, inherited_ckpt=None) -> DataFrame:
-    """All-nodes min-label rounds (the pre-frontier loop, kept as the
-    paired-benchmark reference): every round re-aggregates EVERY node.
+    """All-nodes min-label rounds: every round re-aggregates EVERY node
+    (the high-diameter regime the frontier loop hands off to).
 
     ``inherited_ckpt``: the caller's last round's checkpoint blocks (the
     adaptive frontier handoff) — freed once this loop's first round is

@@ -2,10 +2,9 @@
 
 The Spark-side dataflow is real and tested — schemas, Arrow batch shapes,
 partitioning, UDF signatures. The feature encoder is STUBBED: no decode libs
-(PIL/ffmpeg/librosa) are bundled, so `decode_stub=True` (default) produces
-deterministic fake features derived from the bytes, and `decode_stub=False`
-raises NotImplementedError at the exact call site a real codec would plug
-into.
+(PIL/ffmpeg/librosa) are bundled, so `extract_features` produces
+deterministic fake features derived from the bytes (`_fake_feature` is where
+a real image/audio decoder would plug in).
 
 Schema conventions:
   media(file_id long, kind string, payload binary,
@@ -37,8 +36,7 @@ def _fake_feature(payload: bytes, dim: int = FEAT_DIM) -> np.ndarray:
     return v / np.linalg.norm(v)
 
 
-def extract_features(media: DataFrame, decode_stub: bool = True,
-                     batch_size_hint: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction; one Arrow batch per invocation.
 
     At scale: payloads stay executor-side (never collected); upstream should
@@ -48,12 +46,6 @@ def extract_features(media: DataFrame, decode_stub: bool = True,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real codecs unavailable in this container: plug image/"
-                    "audio decode here (PIL.Image.open / librosa.load / "
-                    "ffmpeg frame sampling)"
-                )
             feats = [ _fake_feature(p) for p in pdf["payload"] ]
             yield pd.DataFrame(
                 {

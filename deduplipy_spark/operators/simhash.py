@@ -30,6 +30,11 @@ from pyspark.sql.functions import pandas_udf
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.minhash import _mix64
 
+# the kernel packs 64 vote bits per document; 4 bands of 16 bits give the
+# hamming<=3 pigeonhole guarantee
+SIMHASH_BITS = 64
+SIMHASH_BAND_BITS = 16
+
 _FNV_OFFSET = np.uint64(1469598103934665603)
 _FNV_PRIME = np.uint64(1099511628211)
 
@@ -189,11 +194,11 @@ def with_simhash(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 def simhash_bands(df: DataFrame, cfg: EngineConfig, id_col: str = "file_id") -> DataFrame:
     """(id, band_key): 4 bands of 16 bits via shiftright/mask — JVM-side."""
-    n_bands = cfg.simhash_bits // cfg.simhash_band_bits
-    mask = (1 << cfg.simhash_band_bits) - 1
+    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     bands = [
         F.xxhash64(
-            F.shiftright(F.col("simhash"), j * cfg.simhash_band_bits).bitwiseAND(mask),
+            F.shiftright(F.col("simhash"), j * SIMHASH_BAND_BITS).bitwiseAND(mask),
             F.lit(1_000_000 + j),
         )
         for j in range(n_bands)

@@ -1,14 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, per the training-data-pipeline brief:
+Three paths, per the training-data-pipeline brief:
 - ``brute_force_topk``: exact cosine top-k — JVM-side dot product via
   ``F.aggregate(zip_with(...))`` (no Python in the hot loop) + window top-k.
   The O(n·q) baseline; right answer for small query sets / reranking.
-- ``lsh_topk``: random-hyperplane (SimHash-for-vectors) bucketing — a
-  vectorized pandas UDF computes bit signatures, candidates come from
-  band-key equality joins (same capped pair machinery as text LSH), then
-  exact cosine reranks only candidates. The 100-TB path: shuffle is keyed by
-  band, output bounded by the band cap.
+- ``ivf_topk``: inverted-file ANN top-k — queries probe the nearest cells
+  of a broadcast centroid table and rerank exactly inside them.
+- ``embedding_dup_pairs_lsh``: random-hyperplane (SimHash-for-vectors)
+  bucketing — a vectorized pandas UDF computes bit signatures, candidates
+  come from band-key equality joins (same capped pair machinery as text
+  LSH), then exact cosine verifies only candidates. The 100-TB path:
+  shuffle is keyed by band, output bounded by the band cap.
 """
 
 from __future__ import annotations
@@ -148,44 +150,9 @@ def make_hyperplane_udf(dim: int, n_bits: int = 128, band_bits: int = 8,
     return hyperplane_sig
 
 
-def train_centroids(
-    corpus: DataFrame, n_lists: int = 16, iters: int = 10,
-    sample_n: int = 16_384, id_col: str = "vec_id",
-    vec_col: str = "embedding", seed: int = 42,
-) -> "pd.DataFrame":
-    """Spherical k-means codebook for IVF: Lloyd iterations on a
-    deterministic driver sample (lowest `sample_n` ids — reproducible under
-    any partitioning), cosine assignment, mean-renormalize update. Returns a
-    pandas frame (list_id, centroid) ready for ivf_topk(centroids=...).
-
-    Scale shape: training reads a BOUNDED sample (a codebook needs ~100x
-    n_lists points, not the corpus); the expensive full-corpus work — cell
-    assignment — stays distributed inside ivf_topk. This is the FAISS
-    IVF-Flat train/add split."""
-    sample = (
-        corpus.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy("id").limit(sample_n).toPandas()
-    )
-    X = np.stack(sample["v"].to_numpy())
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.Generator(np.random.Philox(seed))
-    C = X[rng.choice(len(X), size=min(n_lists, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        assign = np.argmax(X @ C.T, axis=1)            # cosine (unit rows)
-        for j in range(len(C)):
-            m = assign == j
-            if m.any():
-                c = X[m].mean(axis=0)
-                C[j] = c / max(np.linalg.norm(c), 1e-12)
-    return pd.DataFrame({"list_id": np.arange(len(C)),
-                         "centroid": [c.tolist() for c in C]})
-
-
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10, n_lists: int = 16,
     n_probe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
-    seed: int = 42, centroids=None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus into `n_lists`
     cells, probe the `n_probe` nearest cells per query, exact-rerank inside.
@@ -196,27 +163,18 @@ def ivf_topk(
     ~n_probe/n_lists of the corpus per query batch instead of all of it
     (brute force) — the standard FAISS IVF-Flat layout on DataFrames.
 
-    Default centroids are a deterministic sample (lowest `n_lists` ids) —
-    train-free, reproducible, SQL-oracle-checkable. Pass
-    ``centroids=train_centroids(corpus, ...)`` (a pandas or Spark frame of
-    (list_id, centroid)) for a k-means codebook: same dataflow, better
-    recall@k at equal n_probe (measured in tests).
+    Centroids are a deterministic sample (lowest `n_lists` ids) —
+    train-free, reproducible, SQL-oracle-checkable.
     """
     c = corpus.select(F.col(id_col).alias("cid"),
                       F.col(vec_col).cast("array<double>").alias("cvec"))
-    if centroids is None:
-        centroids = (
-            c.orderBy("cid").limit(n_lists)
-            .select(
-                (F.row_number().over(Window.orderBy("cid")) - 1).alias("list_id"),
-                F.col("cvec").alias("centroid"),
-            )
+    cent = F.broadcast(
+        c.orderBy("cid").limit(n_lists)
+        .select(
+            (F.row_number().over(Window.orderBy("cid")) - 1).alias("list_id"),
+            F.col("cvec").alias("centroid"),
         )
-    elif not isinstance(centroids, DataFrame):
-        centroids = corpus.sparkSession.createDataFrame(
-            centroids, "list_id int, centroid array<double>"
-        )
-    cent = F.broadcast(centroids)
+    )
 
     def nearest_lists(df: DataFrame, idc: str, vecc: str, n: int) -> DataFrame:
         """(id..., list_id) for the n closest centroids of each vector.
@@ -301,49 +259,3 @@ def embedding_dup_pairs_lsh(
         .select("id_1", "id_2", "cosine")
     )
 
-
-def lsh_topk(
-    corpus: DataFrame, k: int = 10, id_col: str = "vec_id",
-    vec_col: str = "embedding", dim: int = 64, n_bits: int = 128,
-    band_bits: int = 8, seed: int = 42,
-) -> DataFrame:
-    """Approximate self-join top-k: hyperplane bands -> candidates -> exact
-    cosine rerank. Recall vs brute force depends on n_bits/band_bits;
-    measured in tests, not assumed."""
-    sig_udf = make_hyperplane_udf(dim, n_bits, band_bits, seed)
-    sigs = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("emb"),
-        sig_udf(F.col(vec_col)).alias("sig"),
-    ).localCheckpoint()
-    bands = sigs.select(
-        "id",
-        F.explode(
-            F.transform(
-                "sig", lambda v, i: F.xxhash64(v.cast("string"), i.cast("string"))
-            )
-        ).alias("band_key"),
-    )
-    from deduplipy_spark.config import EngineConfig
-    from deduplipy_spark.operators.pairs import candidate_pairs
-
-    pairs = candidate_pairs(bands, EngineConfig(band_cap=1000))
-    e1 = sigs.select(F.col("id").alias("id_1"), F.col("emb").alias("emb_1"))
-    e2 = sigs.select(F.col("id").alias("id_2"), F.col("emb").alias("emb_2"))
-    scored = (
-        pairs.join(e1, "id_1").join(e2, "id_2")
-        .withColumn("cosine", F.round(cosine_col(), 8))
-        .select("id_1", "id_2", "cosine")
-    )
-    sym = scored.unionByName(
-        scored.select(
-            F.col("id_2").alias("id_1"), F.col("id_1").alias("id_2"), "cosine"
-        )
-    ).select(F.col("id_1").alias("query_id"), F.col("id_2").alias("neighbor_id"),
-             "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        sym.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").alias("rank"))
-    )

@@ -378,8 +378,7 @@ class DedupPipeline:
         cc_stats: dict = {}
         comps = self._stage(
             "components",
-            lambda: connected_components(scored, cfg.max_cc_rounds,
-                                         cfg.driver_cc_max_edges,
+            lambda: connected_components(scored, cfg.driver_cc_max_edges,
                                          with_sizes=True,
                                          edge_count=n_edges,
                                          stats_out=cc_stats),

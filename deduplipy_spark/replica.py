@@ -90,15 +90,12 @@ def replica_clusters(pdf: pd.DataFrame, cfg: EngineConfig,
     for root, nodes in comps.items():
         nodes = np.array(sorted(nodes))
         nodeset = set(nodes)
-        edges = pd.DataFrame(
-            [(p[0], p[1], s) for p, s in scored.items()
-             if p[0] in nodeset and p[1] in nodeset],
-            columns=["id_1", "id_2", "score"],
-        )
+        own = [(a, b, s) for (a, b), s in scored.items()
+               if a in nodeset and b in nodeset]
+        ids = np.array([p[:2] for p in own], dtype=np.int64)
         labels = hierarchical_cluster_component(
-            nodes, edges, cfg.cluster_threshold, cfg.fill_missing,
-            cfg.softimpute_convergence,
-        )
+            nodes, (ids[:, 0], ids[:, 1], np.array([p[2] for p in own])),
+            cfg.cluster_threshold, cfg.fill_missing)
         for n, l in zip(nodes, labels):
             clusters[int(n)] = int(l)
     # singleton reps
@@ -147,17 +144,18 @@ def replica_simhash_pairs(contents: dict[int, str], cfg: EngineConfig,
     path, bit-identical to the batch kernel by tests/test_simhash_ngram.py),
     4x16-bit band blocking with the same cap/star semantics, hamming verify.
     Returns (id_1, id_2, hamming) sorted."""
+    from deduplipy_spark.operators.simhash import SIMHASH_BAND_BITS, SIMHASH_BITS
     from deduplipy_spark.operators.simhash import _token_hashes, simhash_of_hashes
 
     sh = {i: simhash_of_hashes(_token_hashes(t or "")) & ((1 << 64) - 1)
           for i, t in contents.items()}
-    n_bands = cfg.simhash_bits // cfg.simhash_band_bits
-    mask = (1 << cfg.simhash_band_bits) - 1
+    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     buckets: dict[tuple, list[int]] = {}
     for i, h in sh.items():
         for j in range(n_bands):
             buckets.setdefault(
-                (j, (h >> (j * cfg.simhash_band_bits)) & mask), []).append(i)
+                (j, (h >> (j * SIMHASH_BAND_BITS)) & mask), []).append(i)
     pairs = _banded_pairs(buckets, cfg.band_cap)
     rows = []
     for a, b in pairs:

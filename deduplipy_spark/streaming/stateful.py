@@ -19,6 +19,11 @@ built-in can't express:
   older than the watermark are dropped as late. Spark runs a no-data batch
   only when the watermark moves, so a ``trigger(availableNow=True)`` run
   ends (a processing-time timeout asked for one every trigger, forever).
+- rows with a null event_time pass the watermark and are still deduplicated
+  by sha: they sort after the group's timed rows, a null first row is
+  stored with a null ``first_time``, and the TTL counts from the group's
+  newest non-null event — from the current watermark when the group has
+  none.
 
 State schema: (first_id long, first_time timestamp, dups long).
 Output: the first occurrence row per sha + running duplicate count.
@@ -67,8 +72,8 @@ def _dedup_one_sha(
     else:
         first = rows.iloc[0]
         new_dups = len(rows) - 1
-        state.update((int(first["file_id"]), first["event_time"],
-                      int(new_dups)))
+        first_time = None if pd.isna(first["event_time"]) else first["event_time"]
+        state.update((int(first["file_id"]), first_time, int(new_dups)))
         out = pd.DataFrame(
             {
                 "content_sha": [key[0]],
@@ -81,7 +86,10 @@ def _dedup_one_sha(
         )
     # TTL refreshed per hit; event_ms is epoch ms computed in the JVM, so it
     # compares with the watermark whatever the session time zone
-    state.setTimeoutTimestamp(int(rows["event_ms"].max()) + _TTL_MS)
+    newest = rows["event_ms"].max()
+    if pd.isna(newest):
+        newest = state.getCurrentWatermarkMs()
+    state.setTimeoutTimestamp(int(newest) + _TTL_MS)
     yield out
 
 

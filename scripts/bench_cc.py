@@ -1,16 +1,20 @@
-"""Microbench: distributed connected-components round cost (VERDICT r4 #7).
+"""Microbench: the distributed connected-components loop (VERDICT r4 #7).
 
-Two synthetic shapes at ~16-32M edges, driver path disabled so the
+Two synthetic shapes at ~16M edges, driver path disabled so the
 distributed loop runs:
 
 - "lsh":    the realistic dedup graph — many small cliques (low diameter,
-            converges in ~3 rounds); frontier gains are bounded here.
-- "chain":  long paths (high diameter, many rounds); the worst case the
-            frontier optimization targets — after round 1 only the active
-            wavefront should move data.
+            converges in ~3 frontier rounds).
+- "chain":  long paths (high diameter, many rounds) — every label keeps
+            changing, so the adaptive loop hands off from frontier to
+            classic rounds.
+
+Each shape times the shipped loop best-of-2 and checks its component
+count against the driver union-find path on the same edges.
 
 Usage: python scripts/bench_cc.py [n_edges] [shape ...]
-Prints one JSON line per shape with wall seconds + rounds.
+(local[N] from SPARK_GRAFT_CPUS). Prints one JSON line per shape with wall
+seconds, host steal ticks and component count.
 """
 
 from __future__ import annotations
@@ -92,31 +96,27 @@ def _steal() -> int:
 def main() -> None:
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
     shapes = sys.argv[2:] or ["lsh", "chain"]
-    spark = get_spark("bench-cc", cores=16)
+    spark = get_spark("bench-cc")
     for shape in shapes:
         e = (edges_lsh if shape == "lsh" else edges_chain)(spark, n_edges)
         e = e.repartition(32).localCheckpoint()     # input cost excluded
         n = e.count()
-        res = {}
-        # PAIRED protocol: interleave the two variants in one process,
-        # best-of-2 each — single-sample cross-process numbers on this
-        # multi-tenant host are not comparable (BENCH/NOTES.md)
-        for attempt in range(2):
-            for frontier in (True, False):
-                key = "frontier" if frontier else "classic"
-                s0, t0 = _steal(), time.monotonic()
-                out = connected_components(e, driver_max_edges=0,
-                                           frontier=frontier)
-                n_comp = out.select("component").distinct().count()
-                dt = time.monotonic() - t0
-                _drop_finished_caches(spark, keep=e)
-                prev = res.get(key)
-                if prev is None or dt < prev["wall_sec"]:
-                    res[key] = {"wall_sec": round(dt, 2),
-                                "steal": _steal() - s0,
-                                "components": n_comp}
-        print(json.dumps({"shape": shape, "edges": n, **res}), flush=True)
-        assert res["frontier"]["components"] == res["classic"]["components"]
+        # best-of-2: single samples on a multi-tenant host are not
+        # comparable (BENCH/NOTES.md)
+        best = None
+        for _ in range(2):
+            s0, t0 = _steal(), time.monotonic()
+            out = connected_components(e, driver_max_edges=0)
+            n_comp = out.select("component").distinct().count()
+            dt = time.monotonic() - t0
+            _drop_finished_caches(spark, keep=e)
+            if best is None or dt < best["wall_sec"]:
+                best = {"wall_sec": round(dt, 2), "steal": _steal() - s0,
+                        "components": n_comp}
+        driver = (connected_components(e, driver_max_edges=n)
+                  .select("component").distinct().count())
+        print(json.dumps({"shape": shape, "edges": n, **best}), flush=True)
+        assert best["components"] == driver, (best["components"], driver)
     spark.stop()
 
 

@@ -19,13 +19,24 @@ from deduplipy_spark.operators.agglomerate import (
     fill_missing_links,
     hierarchical_cluster_component,
 )
-from deduplipy_spark.operators.components import connected_components
+from deduplipy_spark.operators.components import _classic_rounds, connected_components
 
 FIXTURE = pd.DataFrame(
     [(0, 1, 0.90), (0, 2, 0.10), (0, 3, 0.10), (0, 4, 0.10), (1, 2, 0.10),
      (1, 3, 0.10), (1, 4, 0.10), (2, 3, 0.40), (2, 4, 0.10), (3, 4, 0.10)],
     columns=["id_1", "id_2", "score"],
 )
+FIXTURE_EDGES = tuple(FIXTURE[c].to_numpy() for c in ("id_1", "id_2", "score"))
+
+
+def _bidir_labels(edges):
+    """(src, dst) both ways + (id, comp=id), checkpointed: the start state
+    that connected_components hands its distributed rounds."""
+    bidir = edges.selectExpr("id_1 as src", "id_2 as dst").union(
+        edges.selectExpr("id_2 as src", "id_1 as dst")).distinct().localCheckpoint()
+    labels = bidir.selectExpr("src as id").distinct().selectExpr(
+        "id", "id as comp").localCheckpoint()
+    return bidir, labels
 
 
 def partitions(ids, labels):
@@ -37,7 +48,7 @@ def partitions(ids, labels):
 
 def test_clustering_golden_threshold_05():
     labels = hierarchical_cluster_component(
-        np.arange(5), FIXTURE, cluster_threshold=0.5, fill_missing=True
+        np.arange(5), FIXTURE_EDGES, cluster_threshold=0.5, fill_missing=True
     )
     assert partitions(range(5), labels) == [
         frozenset({0, 1}), frozenset({2}), frozenset({3}), frozenset({4})
@@ -46,7 +57,7 @@ def test_clustering_golden_threshold_05():
 
 def test_clustering_golden_threshold_04():
     labels = hierarchical_cluster_component(
-        np.arange(5), FIXTURE, cluster_threshold=0.4, fill_missing=True
+        np.arange(5), FIXTURE_EDGES, cluster_threshold=0.4, fill_missing=True
     )
     assert partitions(range(5), labels) == [
         frozenset({0, 1}), frozenset({2, 3}), frozenset({4})
@@ -81,8 +92,8 @@ def test_connected_components_vs_networkx(spark):
         edges.add((i, i + 1))
     edf = spark.createDataFrame(sorted(edges), "id_1 long, id_2 long")
     # exercise BOTH paths: the distributed loop and the driver union-find
-    got = connected_components(edf, max_rounds=50, driver_max_edges=0).toPandas()
-    got_driver = connected_components(edf, max_rounds=50).toPandas()
+    got = connected_components(edf, driver_max_edges=0).toPandas()
+    got_driver = connected_components(edf).toPandas()
 
     g = nx.Graph()
     g.add_edges_from(edges)
@@ -94,10 +105,10 @@ def test_connected_components_vs_networkx(spark):
     got_map = dict(zip(got.id, got.component))
     assert got_map == want
     assert dict(zip(got_driver.id, got_driver.component)) == want
-    # frontier=False (classic all-nodes rounds) must agree exactly too
-    got_classic = connected_components(
-        edf, max_rounds=50, driver_max_edges=0, frontier=False).toPandas()
-    assert dict(zip(got_classic.id, got_classic.component)) == want
+    # the classic all-nodes rounds (the frontier loop's handoff target)
+    # must agree exactly too
+    got_classic = _classic_rounds(*_bidir_labels(edf), max_rounds=50).toPandas()
+    assert dict(zip(got_classic.id, got_classic.comp)) == want
 
 
 def test_adaptive_frontier_handoff_on_chains(spark):
@@ -111,8 +122,7 @@ def test_adaptive_frontier_handoff_on_chains(spark):
         base = c * 1000
         rows += [(base + i, base + i + 1) for i in range(200)]
     edf = spark.createDataFrame(rows, "id_1 long, id_2 long")
-    got = connected_components(edf, max_rounds=50, driver_max_edges=0,
-                               frontier=True).toPandas()
+    got = connected_components(edf, driver_max_edges=0).toPandas()
     assert len(got) == 3 * 201
     assert (got.component == (got.id // 1000) * 1000).all()
 
@@ -140,7 +150,7 @@ def test_frontier_rounds_count_nodes_only_for_handoff(spark):
 def test_cluster_components_spark_matches_local(spark):
     cfg = EngineConfig(cluster_threshold=0.5)
     scored = spark.createDataFrame(FIXTURE, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, max_rounds=10, with_sizes=True)
+    comps = connected_components(scored, with_sizes=True)
     out = cluster_components(scored, comps, cfg).toPandas().sort_values("id")
     assert partitions(out.id, out.cluster_id) == [
         frozenset({0, 1}), frozenset({2}), frozenset({3}), frozenset({4})
@@ -289,14 +299,15 @@ def test_distributed_rounds_keep_plan_stats_bounded(spark):
     rows = [(c * 64 + i, c * 64 + i + 1) for c in range(4) for i in range(32)]
     edges = spark.createDataFrame(
         pd.DataFrame(rows, columns=["id_1", "id_2"]))
-    for frontier in (True, False):
-        out = connected_components(edges, driver_max_edges=0,
-                                   frontier=frontier)
-        want = {c * 64 + i: c * 64 for c in range(4) for i in range(33)}
-        got = {r.id: r.component for r in out.collect()}
-        assert got == want
+    want = {c * 64 + i: c * 64 for c in range(4) for i in range(33)}
+    for name, out in (
+        ("frontier", connected_components(edges, driver_max_edges=0)),
+        ("classic", _classic_rounds(*_bidir_labels(edges), max_rounds=50)),
+    ):
+        got = {r[0]: r[1] for r in out.collect()}    # (id, component label)
+        assert got == want, name
         size = int(
             out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         # bounded: a handful of defaultSizeInBytes (~9.2e18) factors at
         # most — the unbounded chain reaches hundreds of digits here
-        assert len(str(size)) < 60, (frontier, len(str(size)))
+        assert len(str(size)) < 60, (name, len(str(size)))

@@ -104,6 +104,67 @@ def test_centroid_hac_cut_extremes(data):
     assert len(set(cut_merges(merges, n, 10.0))) == 1  # above all: one cluster
 
 
+def _cut_merges_members(merges, n, t):
+    """The member-list cut_merges that the representative-leaf version
+    replaced: unites every leaf of each merge whose effective height <= t."""
+    eff = {}
+    members = {i: [i] for i in range(n)}
+    for m, (a, b, h, _) in enumerate(merges):
+        node = n + m
+        eff[node] = max(h, eff.get(a, 0.0), eff.get(b, 0.0))
+        members[node] = members[a] + members[b]
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for m in range(len(merges)):
+        node = n + m
+        if eff[node] <= t:
+            leaves = members[node]
+            root = find(leaves[0])
+            for leaf in leaves[1:]:
+                parent[find(leaf)] = root
+    labels = np.array([find(i) for i in range(n)])
+    _, out = np.unique(labels, return_inverse=True)
+    return out
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_cut_merges_matches_member_list_cut(data):
+    """Random merge trees (arbitrary pairing, non-monotonic heights) and
+    centroid linkages, each with continuous or tie-heavy (0.1-grid)
+    heights, cut at thresholds that include the tied heights themselves:
+    identical labels to the member-list cut."""
+    from deduplipy_spark.operators.agglomerate import centroid_linkage, cut_merges
+
+    n = data.draw(st.integers(min_value=1, max_value=40))
+    ties = data.draw(st.booleans())
+    seed = data.draw(st.integers(min_value=0, max_value=2**32 - 1))
+    rng = np.random.default_rng(seed)
+    if data.draw(st.booleans()):
+        D = rng.random((n, n))
+        if ties:
+            D = np.round(D, 1)
+        D = np.triu(D, 1) + np.triu(D, 1).T
+        merges = centroid_linkage(D)
+    else:
+        active, merges = list(range(n)), []
+        for m in range(n - 1):
+            a, b = (active.pop(int(rng.integers(len(active))))
+                    for _ in range(2))
+            h = float(rng.random())
+            merges.append((a, b, round(h, 1) if ties else h, 0))
+            active.append(n + m)
+    for t in (0.0, 0.1, 0.3, 0.5, float(rng.random()), 2.0):
+        assert (cut_merges(merges, n, t)
+                == _cut_merges_members(merges, n, t)).all(), (merges, t)
+
+
 @settings(max_examples=50, deadline=None)
 @given(st.data())
 def test_greedy_set_cover_reaches_recall(data):

@@ -1,6 +1,6 @@
 """F8: kill/resume — checkpointed run killed after `candidates` resumes to a
-byte-identical `clusters` output; metrics table has one row per (stage,
-partition); config change invalidates manifests."""
+byte-identical `clusters` output; each stage manifest records the stage's
+row count; config change invalidates manifests."""
 
 import json
 import os
@@ -9,6 +9,7 @@ import tempfile
 import pytest
 
 from deduplipy_spark.config import EngineConfig
+from deduplipy_spark.deduplicator import REMOVED_CONFIG
 from deduplipy_spark.plans.pipeline import DedupPipeline
 from deduplipy_spark.sources.datagen import gen_files
 from deduplipy_spark.sources.io import MANIFEST, TableIO
@@ -40,12 +41,10 @@ def test_kill_after_candidates_resume_identical(spark):
     assert first.equals(second)
     assert os.path.getmtime(sig_manifest) == mtime_before   # stage was skipped
 
-    # metrics: one row per (stage, partition), row totals match manifests
+    # the manifest's row count is the written table's (resume trusts it)
     io = TableIO(spark, tmp, cfg.config_hash())
-    m = io.read_metrics("signatures").toPandas()
-    assert (m.groupby(["stage", "partition_id"]).size() == 1).all()
     man = json.load(open(sig_manifest))
-    assert man["row_count"] == m.rows.sum()
+    assert man["row_count"] == io.read("signatures").count()
     assert man["config_hash"] == cfg.config_hash()
 
 
@@ -82,14 +81,24 @@ def test_load_model_with_removed_shuffle_partitions(tmp_path):
     assert old.cfg.config_hash() == new.cfg.config_hash()
 
 
+# a value other than the only one each removed EngineConfig field ran at
+_OTHER_VALUE = {
+    "minhash_scheme": "perm",
+    "hot_band_star": False,
+    "simhash_bits": 32,
+    "simhash_band_bits": 8,
+    "softimpute_convergence": 0.001,
+    "max_cc_rounds": 10,
+}
+
+
 @pytest.mark.parametrize("legacy, error", [
-    ({"minhash_scheme": "oph", "hot_band_star": True}, None),
-    ({"minhash_scheme": "perm", "hot_band_star": True}, "minhash_scheme"),
-    ({"minhash_scheme": "oph", "hot_band_star": False}, "hot_band_star"),
+    (dict(REMOVED_CONFIG), None),
+    *[({key: _OTHER_VALUE[key]}, key) for key in REMOVED_CONFIG],
 ])
 def test_load_model_with_removed_kernel_switches(tmp_path, legacy, error):
-    """Model JSON saved while EngineConfig still had minhash_scheme and
-    hot_band_star loads at their defaults (same config_hash as a fresh
+    """Model JSON saved while EngineConfig still had the fields in
+    REMOVED_CONFIG loads at their defaults (same config_hash as a fresh
     model); any other value is refused, naming the key."""
     from deduplipy_spark.deduplicator import Deduplicator
 

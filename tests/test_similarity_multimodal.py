@@ -13,7 +13,7 @@ from deduplipy_spark.operators.multimodal import (
     extract_features,
     media_dedup_features,
 )
-from deduplipy_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
+from deduplipy_spark.operators.similarity import brute_force_topk, ivf_topk
 
 
 @pytest.fixture(scope="module")
@@ -45,19 +45,6 @@ def test_brute_force_topk_never_broadcasts_large_side(spark, emb):
     # corpus side carries emb_2: it must NOT sit under a BroadcastExchange
     for m in re.finditer(r"BroadcastExchange[\s\S]{0,400}?emb_(\d)", plan):
         assert m.group(1) == "1", plan[m.start():m.start() + 200]
-
-
-def test_lsh_topk_recall_vs_brute(spark, emb):
-    dim = len(emb.first().embedding)
-    bf = brute_force_topk(emb, emb, k=1).toPandas()
-    # weakly-clustered embeddings (top-1 cosine ~0.37): short bands, many of them
-    ann = lsh_topk(emb, k=1, dim=dim, n_bits=256, band_bits=4).toPandas()
-    bf1 = dict(zip(bf.query_id, bf.neighbor_id))
-    ann1 = dict(zip(ann.query_id, ann.neighbor_id))
-    hits = sum(1 for q, n in bf1.items() if ann1.get(q) == n)
-    recall = hits / len(bf1)
-    # 4x16-bit hyperplane bands: top-1 recall is high for clustered embeddings
-    assert recall >= 0.6, recall
 
 
 def test_ivf_topk_recall_and_plan(spark, emb):
@@ -247,29 +234,6 @@ def test_embedding_dup_pairs_lsh_high_cosine_prunes_and_recalls(spark):
     n_cands = candidate_pairs(bands, EngineConfig(band_cap=100000)).count()
     assert n_cands < 0.25 * (n * (n - 1) / 2), (
         f"banding scored {n_cands} of {n*(n-1)//2} pairs — no pruning")
-
-
-def test_trained_ivf_centroids_improve_recall(spark):
-    """k-means codebook (train_centroids) vs the first-N-ids default at
-    equal n_probe on a clustered table: recall@k must improve."""
-    from deduplipy_spark.operators.similarity import train_centroids
-
-    emb, truth = _clustered_embeddings(spark, n_clusters=16, members=12)
-    queries = emb.where(F.col("vec_id") % 12 == 0)
-    exact = brute_force_topk(emb, queries, k=5).toPandas()
-    want = set(zip(exact.query_id, exact.neighbor_id))
-
-    def recall(centroids):
-        got = ivf_topk(emb, queries, k=5, n_lists=16, n_probe=2,
-                       centroids=centroids).toPandas()
-        return len(set(zip(got.query_id, got.neighbor_id)) & want) / len(want)
-
-    r_default = recall(None)
-    cb = train_centroids(emb, n_lists=16, iters=10)
-    assert len(cb) == 16
-    r_trained = recall(cb)
-    assert r_trained > r_default, (r_trained, r_default)
-    assert r_trained >= 0.95
 
 
 def test_containment_banded_blocks_and_verifies(spark):

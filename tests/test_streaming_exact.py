@@ -3,6 +3,7 @@
 import os
 import tempfile
 
+import numpy as np
 import pandas as pd
 
 
@@ -64,8 +65,9 @@ def test_stream_exact_dedup_drops_late_duplicates(spark, await_available_now):
 
 def test_stateful_exact_dedup_applyinpandaswithstate(spark, await_available_now):
     """Custom stateful operator (streaming/stateful.py): first-seen-wins is
-    deterministic WITHIN a batch (earliest event_time, id tiebreak), and the
-    per-sha state carries a duplicate counter across batches."""
+    deterministic WITHIN a batch (earliest event_time, id tiebreak, null
+    times last), and the per-sha state carries a duplicate counter across
+    batches."""
     import pyspark.sql.functions as F
 
     from deduplipy_spark.ids import with_identity
@@ -93,32 +95,36 @@ def test_stateful_exact_dedup_applyinpandaswithstate(spark, await_available_now)
         await_available_now(q, 60)
         return spark.read.parquet(out_dir).toPandas()
 
-    # batch 1: three copies of one sha IN THE SAME BATCH, later-timestamped
-    # row listed first to prove within-batch ordering; plus one unique
+    # batch 1: four copies of one sha IN THE SAME BATCH, later-timestamped
+    # row listed first to prove within-batch ordering, one without a time;
+    # plus one unique and one sha seen only without a time
     _write(spark, in_dir,
-           ["r-late", "r-early", "r-mid", "r-uniq"],
-           ["a", "b", "c", "d"],
-           ["same body", "same body", "same body", "unique body"],
-           ["2026-01-01 11:00", "2026-01-01 09:00",
-            "2026-01-01 10:00", "2026-01-01 10:30"])
-    out1 = run_once()
-    assert len(out1) == 2
-    same = out1[out1.content_sha != out1[out1.repo == "r-uniq"].content_sha.iloc[0]]
-    assert same.repo.iloc[0] == "r-early"       # earliest event won
-    assert same.dups.iloc[0] == 2               # two duplicates shed
+           ["r-late", "r-null", "r-early", "r-mid", "r-uniq", "r-untimed"],
+           ["a", "f", "b", "c", "d", "g"],
+           ["same body", "same body", "same body", "same body",
+            "unique body", "untimed body"],
+           ["2026-01-01 11:00", None, "2026-01-01 09:00",
+            "2026-01-01 10:00", "2026-01-01 10:30", None])
+    out1 = run_once().set_index("repo")
+    assert sorted(out1.index) == ["r-early", "r-uniq", "r-untimed"]
+    assert out1.dups["r-early"] == 3            # earliest event won
+    assert out1.dups["r-uniq"] == 0
+    assert out1.dups["r-untimed"] == 0
+    assert out1.event_time.isna()["r-untimed"]
 
     # batch 2: another copy arrives -> suppressed (state), no new output row
     _write(spark, in_dir, ["r2"], ["e"], ["same body"], ["2026-01-02 09:00"])
     out2 = run_once()
-    assert len(out2) == 2                       # unchanged output
+    assert len(out2) == 3                       # unchanged output
 
 
 class _FakeState:
     """Minimal GroupState stand-in to drive the timeout path (Spark invokes
     the function with an empty batch iterator and hasTimedOut=True)."""
 
-    def __init__(self, timed_out=False, value=None):
+    def __init__(self, timed_out=False, value=None, watermark_ms=0):
         self.hasTimedOut = timed_out
+        self.watermark_ms = watermark_ms
         self._value = value
         self.removed = False
         self.updated = None
@@ -139,6 +145,9 @@ class _FakeState:
 
     def setTimeoutTimestamp(self, ms):
         self.timeout_ts = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
 
 
 def test_stateful_timeout_evicts_state_and_emits_nothing():
@@ -170,3 +179,30 @@ def test_stateful_normal_path_still_updates_state():
     assert state.updated == (7, pd.Timestamp("2026-01-01"), 0)
     # event-time TTL: newest event of the group + 24 h, in epoch ms
     assert state.timeout_ts == (t + pd.Timedelta(hours=24)).value // 10**6
+
+
+def test_stateful_null_event_time_dedups_and_sets_ttl():
+    """Rows without an event_time are still deduplicated by sha (after the
+    timed rows), stored with a null first_time, and the TTL counts from the
+    group's newest timed row, or from the watermark when there is none."""
+    from deduplipy_spark.streaming.stateful import _TTL_MS, _dedup_one_sha
+
+    t = pd.Timestamp("2026-01-01")
+    untimed = pd.DataFrame({
+        "content_sha": ["s", "s"], "file_id": [5, 3],
+        "event_time": [pd.NaT, pd.NaT], "repo": ["r", "r"],
+        "path": ["p", "q"], "event_ms": [np.nan, np.nan],
+    })
+    state = _FakeState(watermark_ms=1_000)
+    out = pd.concat(list(_dedup_one_sha(("s",), iter([untimed]), state)))
+    assert out.file_id.tolist() == [3] and out.dups.tolist() == [1]
+    assert state.updated == (3, None, 1)
+    assert state.timeout_ts == 1_000 + _TTL_MS
+
+    mixed = untimed.copy()
+    mixed.loc[2] = ["s", 9, t, "r", "o", t.value // 10**6]
+    state = _FakeState(watermark_ms=1_000)
+    out = pd.concat(list(_dedup_one_sha(("s",), iter([mixed]), state)))
+    assert out.file_id.tolist() == [9] and out.dups.tolist() == [2]
+    assert state.updated == (9, t, 2)
+    assert state.timeout_ts == t.value // 10**6 + _TTL_MS
