@@ -80,7 +80,7 @@ def q_rule_pairs_first_two_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     blocker = RuleBlocker({"text": [first_two_words]})
     cfg = EngineConfig(band_cap=100000)      # no capping: pure join semantics
-    return blocker.pairs(docs, cfg, hashed=True).select("id_1", "id_2")
+    return blocker.pairs(docs, cfg).select("id_1", "id_2")
 
 
 def q_rule_pairs_salted_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,9 +94,8 @@ def q_rule_pairs_salted_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("file_id"), F.col("text")
     )
     blocker = RuleBlocker({"text": [first_two_words]})
-    return blocker.pairs(
-        docs, EngineConfig(band_cap=100000), strategy="exact", block=2
-    ).select("id_1", "id_2")
+    cfg = EngineConfig(band_cap=100000, pair_strategy="exact")
+    return blocker.pairs(docs, cfg, block=2).select("id_1", "id_2")
 
 
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,7 +129,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("file_id"), F.col("text").alias("content")
     )
     blocker = RuleBlocker({"content": [first_two_words]})
-    cands = blocker.pairs(docs, EngineConfig(band_cap=100000), hashed=True)
+    cands = blocker.pairs(docs, EngineConfig(band_cap=100000))
     return ngram_jaccard_pairs(docs, cands, n=3, threshold=0.2)
 
 
@@ -270,7 +269,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("file_id"), F.col("text").alias("content")
     )
     blocker = RuleBlocker({"content": [first_two_words]})
-    cands = blocker.pairs(docs, EngineConfig(band_cap=100000), hashed=True)
+    cands = blocker.pairs(docs, EngineConfig(band_cap=100000))
     return containment_pairs(cands, docs)
 
 
@@ -283,12 +282,13 @@ def q_pair_mean_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_words,
         word_ngrams_from,
     )
+    from deduplipy_spark.operators.pairs import with_pair_sides
 
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("file_id"), F.col("text").alias("content")
     )
     blocker = RuleBlocker({"content": [first_two_words]})
-    cands = blocker.pairs(docs, EngineConfig(band_cap=100000), hashed=True)
+    cands = blocker.pairs(docs, EngineConfig(band_cap=100000))
     # two-step projection (r6): materialize the trimmed split once per row
     # — word_ngrams' embedded split otherwise re-runs per gram inside the
     # transform lambda (no CSE in lambda bodies); output identical
@@ -304,12 +304,8 @@ def q_pair_mean_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.array().cast("array<string>"))
         .alias("w1"),
     )
-    f1 = feats.select(F.col("file_id").alias("id_1"),
-                      F.col("g3").alias("g3_1"), F.col("w1").alias("w1_1"))
-    f2 = feats.select(F.col("file_id").alias("id_2"),
-                      F.col("g3").alias("g3_2"), F.col("w1").alias("w1_2"))
     melted = (
-        cands.join(f1, "id_1").join(f2, "id_2")
+        with_pair_sides(cands, feats, ["g3", "w1"])
         .select(
             "id_1", "id_2",
             F.explode(
@@ -403,7 +399,7 @@ def q_containment_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (grouped anchored rolling-hash scan, operators/suffix.py). The band
     cap is sized past the corpus so the DuckDB fingerprint-join SQL is an
     exact oracle; at 100 TB the same query runs with the production cap +
-    star edges. strategy='exact': the uncapped enumeration runs through
+    star edges. pair_strategy='exact': the uncapped enumeration runs through
     the salted triangle-split generator — winnow bands are heavily skewed
     (boilerplate fingerprints) and the salted cells bound per-task work
     while producing the identical pair set (r6; 3.2x on sf0.1)."""
@@ -413,8 +409,8 @@ def q_containment_pairs_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("file_id"), F.col("text").alias("content")
     )
-    cands = winnow_candidate_pairs(docs, EngineConfig(band_cap=100000),
-                                   strategy="exact")
+    cands = winnow_candidate_pairs(
+        docs, EngineConfig(band_cap=100000, pair_strategy="exact"))
     return containment_pairs(cands, docs)
 
 

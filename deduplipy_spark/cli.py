@@ -17,7 +17,6 @@ perfbench/run.py (--trace 1 for per-layer times) measures the pipeline.
 from __future__ import annotations
 
 import argparse
-import dataclasses
 import json
 import sys
 import time
@@ -30,7 +29,7 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--rows-per-band", type=int, default=None)
     p.add_argument("--band-cap", type=int, default=None)
     p.add_argument("--pair-strategy", choices=("capped", "exact"),
-                   default="capped",
+                   default=None,
                    help="hot-band handling: capped+star (default) or "
                         "salted exact enumeration")
     p.add_argument("--score-threshold", type=float, default=None)
@@ -44,25 +43,18 @@ def _add_config_args(p: argparse.ArgumentParser) -> None:
 def _config_from(args) -> "EngineConfig":
     from deduplipy_spark.config import EngineConfig
 
-    cfg = EngineConfig(
-        id_cols=tuple(args.id_cols.split(",")),
-        content_col=args.content_col,
-    )
-    overrides = {}
-    for field, attr in [
-        ("shingle_k", "shingle_k"), ("num_perm", "num_perm"), ("bands", "bands"),
-        ("rows_per_band", "rows_per_band"), ("band_cap", "band_cap"),
-        ("score_threshold", "score_threshold"),
-        ("cluster_threshold", "cluster_threshold"),
-    ]:
-        v = getattr(args, attr)
-        if v is not None:
-            overrides[field] = v
+    overrides = {
+        f: getattr(args, f) for f in (
+            "shingle_k", "num_perm", "bands", "rows_per_band", "band_cap",
+            "pair_strategy", "score_threshold", "cluster_threshold")
+        if getattr(args, f) is not None
+    }
     if args.no_fill_missing:
         overrides["fill_missing"] = False
     if args.checkpoint:
         overrides["checkpoint_dir"] = args.checkpoint
-    return dataclasses.replace(cfg, **overrides) if overrides else cfg
+    return EngineConfig(id_cols=tuple(args.id_cols.split(",")),
+                        content_col=args.content_col, **overrides)
 
 
 def _config_flags_set(args) -> list[str]:
@@ -130,8 +122,7 @@ def main(argv: list[str] | None = None) -> int:
             from deduplipy_spark.plans.pipeline import DedupPipeline
 
             cfg = _config_from(args)
-            out = DedupPipeline(
-                spark, cfg, pair_strategy=args.pair_strategy).run(files)
+            out = DedupPipeline(spark, cfg).run(files)
         out.write.mode("overwrite").format(args.format).save(args.output)
         n = spark.read.format(args.format).load(args.output).count()
         print(json.dumps({"cmd": "run", "rows": n,

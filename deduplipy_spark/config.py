@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 # Kernel/format version folded into config_hash (ADVICE r4 #3): bump when a
 # code change alters STAGE OUTPUTS for unchanged config values, so stage
@@ -47,12 +47,15 @@ class EngineConfig:
     band_cap: int = 200             # max rows in a band's all-pairs expansion;
                                     # overflow members get one star edge to
                                     # the band min id (operators/pairs.py)
+    pair_strategy: str = "capped"   # or "exact": salted split, every band
+                                    # pair (read by pairs.candidate_pairs)
 
     # --- scoring / clustering (mirrors deduplicator.py:167 defaults) ---
     score_threshold: float = 0.1
     cluster_threshold: float = 0.5
     fill_missing: bool = True
-    max_hac_size: int = 2000        # components above this: one-cluster short circuit
+    max_hac_size: int = 2000        # above this: PACk split on strong edges;
+                                    # sub-components still above it: 1 cluster
     # execution-only (excluded from config_hash): below this edge count the
     # CC step runs driver-side union-find instead of the distributed loop
     # (measured: the distributed loop's fixed multi-round cost was 51s for
@@ -72,6 +75,9 @@ class EngineConfig:
     save_intermediate_steps: bool = False
 
     def __post_init__(self) -> None:
+        if self.pair_strategy not in ("capped", "exact"):
+            raise ValueError(f"pair_strategy must be 'capped' or 'exact', "
+                             f"got {self.pair_strategy!r}")
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError(
                 f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) must equal "

@@ -60,7 +60,6 @@ class Deduplicator:
         field_info: dict[str, list[str]] | None = None,
         interaction: bool = False,
         verbose: int = 0,
-        pair_strategy: str = "capped",
     ) -> None:
         """field_info: {col -> list of metric NAMES} (reference passes
         callables, deduplicator.py:30-33; names here so the model is JSON-
@@ -72,9 +71,6 @@ class Deduplicator:
         )
         self.field_info = field_info or {c: ["adjusted_ratio"] for c in self.col_names}
         self.interaction = interaction
-        # hot-band handling for predict(): 'capped' (star edges) or 'exact'
-        # (salted full enumeration) — see DedupPipeline.pair_strategy
-        self.pair_strategy = pair_strategy
         self.rules_selected: list | None = None
         self.model_params: dict | None = None
         self.learner = None
@@ -198,8 +194,7 @@ class Deduplicator:
         if self._pipeline is not None:
             self._pipeline.close()   # previous predict's result recomputes
         self._pipeline = DedupPipeline(
-            X.sparkSession, cfg, rules_selected=self.rules_selected,
-            pair_strategy=self.pair_strategy)
+            X.sparkSession, cfg, rules_selected=self.rules_selected)
         if self.model_params is not None:
             return self._predict_learned(X, cfg)
         out = self._pipeline.run(X)
@@ -221,6 +216,7 @@ class Deduplicator:
         from deduplipy_spark.ids import file_id_col
         from deduplipy_spark.operators.active_learning import score_expr
         from deduplipy_spark.operators.blocking import rule_blocker_from_selected
+        from deduplipy_spark.operators.pairs import with_pair_sides
 
         if not self.rules_selected:
             raise RuntimeError("fit() learned no blocking rules; cannot block")
@@ -229,18 +225,8 @@ class Deduplicator:
         # file_id (hash of all matching columns) — pair over one rep each
         recs = ident.dropDuplicates(["file_id"])
         blocker = rule_blocker_from_selected(self.rules_selected)
-        # pass the persisted pair_strategy (ADVICE r5 #1): a fitted/loaded
-        # model with pair_strategy='exact' must route hot rule-blocked
-        # bands through the salted exact generator here too — previously
-        # only the unfitted MinHash predict path honored the field, so the
-        # serialized strategy was silently ignored exactly where it was
-        # documented to matter
-        cands = blocker.pairs(recs, cfg, strategy=self.pair_strategy)
-        p1 = recs.select(F.col("file_id").alias("id_1"),
-                         *[F.col(c).alias(f"{c}_1") for c in self.col_names])
-        p2 = recs.select(F.col("file_id").alias("id_2"),
-                         *[F.col(c).alias(f"{c}_2") for c in self.col_names])
-        pairs = cands.join(p1, "id_1").join(p2, "id_2")
+        pairs = with_pair_sides(blocker.pairs(recs, cfg), recs,
+                                self.col_names)
         feats = pairs.withColumn(
             "similarities",
             similarities_col(pairs, self.col_names, self.field_info),
@@ -285,7 +271,6 @@ class Deduplicator:
                     "field_info": self.field_info,
                     "interaction": self.interaction,
                     "model_params": self.model_params,
-                    "pair_strategy": self.pair_strategy,
                     "config_hash": self.cfg.config_hash(),
                 },
                 f, indent=2, default=str,
@@ -302,6 +287,9 @@ class Deduplicator:
         # models saved before the unused shuffle_partitions field was
         # removed still carry it; it never entered the config hash
         c.pop("shuffle_partitions", None)
+        # models saved while the strategy was a Deduplicator attribute
+        # carry it at the top level
+        c.setdefault("pair_strategy", blob.get("pair_strategy", "capped"))
         # ... and the single-value fields: any other value names a model
         # this engine cannot reproduce
         for key, only in REMOVED_CONFIG.items():
@@ -312,8 +300,7 @@ class Deduplicator:
                     f"(only {only!r} is); refit the model")
         dd = cls(col_names=blob["col_names"], config=EngineConfig(**c),
                  field_info=blob.get("field_info"),
-                 interaction=bool(blob.get("interaction", False)),
-                 pair_strategy=blob.get("pair_strategy", "capped"))
+                 interaction=bool(blob.get("interaction", False)))
         dd.rules_selected = (
             [tuple(r) for r in blob["rules_selected"]]
             if blob.get("rules_selected") else None

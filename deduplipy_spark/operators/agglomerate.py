@@ -12,10 +12,12 @@ tests/test_clustering.py).
 
 Distribution shape: ``scored_pairs ⋈ components`` → ``groupBy(component).
 applyInPandas`` — one Arrow batch per component, embarrassingly parallel.
-Components larger than ``max_hac_size`` short-circuit to a single cluster
-(dense n² matrices don't scale past a few thousand nodes; PACk, VLDB'22 is
-the published upgrade path) — the short-circuit is logged via the
-``capped`` flag, never silent.
+Components larger than ``max_hac_size`` (dense n² matrices don't scale past
+a few thousand nodes) are first split PACk-style (Monath et al., VLDB'22):
+connected components over their edges at or above ``cluster_threshold``,
+then the same exact HAC per sub-component. Only sub-components still above
+``max_hac_size`` collapse to a single cluster, flagged ``capped`` — never
+silent (`cluster_components`).
 
 Cluster ids are ``min(file_id)`` within each flat cluster: deterministic,
 globally unique (vs the reference's order-dependent running counter,
@@ -341,6 +343,7 @@ def cluster_components(
         return out
 
     from deduplipy_spark.operators.components import connected_components
+    from deduplipy_spark.operators.pairs import with_pair_sides
 
     edges_big = scored.join(
         big.select(F.col("id").alias("id_1"), "component"), "id_1")
@@ -349,14 +352,10 @@ def cluster_components(
         strong.select("id_1", "id_2"), driver_max_edges=cfg.driver_cc_max_edges
     ).select(F.col("id"), F.col("component").alias("_sub"))
     induced = (
-        edges_big
-        .join(sub.select(F.col("id").alias("id_1"), F.col("_sub").alias("_s1")),
-              "id_1")
-        .join(sub.select(F.col("id").alias("id_2"), F.col("_sub").alias("_s2")),
-              "id_2")
-        .where(F.col("_s1") == F.col("_s2"))
+        with_pair_sides(edges_big, sub, ["_sub"], "id")
+        .where(F.col("_sub_1") == F.col("_sub_2"))
         .select("id_1", "id_2", "score", "component",
-                F.col("_s1").alias("group"))
+                F.col("_sub_1").alias("group"))
     )
     out_big = _agglomerate_grouped(induced, cfg)
     # big-component nodes with no strong edge: singleton clusters

@@ -15,8 +15,8 @@ and LSH blocking share one skew-guarded pair generator: RuleBlocker and the
 MinHash band path both emit (id, band_key).
 
 Fingerprints are strings here (parity with the reference's golden fixtures,
-e.g. 'fri:0'); at scale, hash them to longs with xxhash64 before the join
-(``hashed=True``).
+e.g. 'fri:0'); `RuleBlocker.pairs` hashes them to long band keys with
+xxhash64 before the join.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.functions.blocking_rules import ALL_RULES
-from deduplipy_spark.operators.pairs import candidate_pairs, salted_pairs
+from deduplipy_spark.operators.pairs import candidate_pairs
 
 
 class RuleBlocker:
@@ -65,28 +65,14 @@ class RuleBlocker:
         )
 
     def pairs(self, df: DataFrame, cfg: EngineConfig,
-              id_col: str = "file_id", hashed: bool = True,
-              strategy: str = "capped",
+              id_col: str = "file_id",
               block: int | None = None) -> DataFrame:
-        """(id_1, id_2) distinct, id_1 < id_2 — via the shared pair generator.
-
-        strategy='capped' (default): the band_cap + star-edge generator —
-        bounded output, right for clustering. strategy='exact': the salted
-        triangle-split generator — every pair materialized, per-task work
-        still bounded by `block` (rule-export / pair-audit use-cases).
-        """
-        fp = self.fingerprint(df, id_col)
-        bands = fp.select(
-            "id",
-            (F.xxhash64("fingerprint") if hashed else F.col("fingerprint")).alias(
-                "band_key"
-            ),
-        )
-        if strategy == "exact":
-            return salted_pairs(bands, cfg, block=block)
-        if strategy != "capped":
-            raise ValueError(f"unknown pair strategy {strategy!r}")
-        return candidate_pairs(bands, cfg)
+        """(id_1, id_2) distinct, id_1 < id_2 — via the shared pair generator
+        (`cfg.pair_strategy` picks capped or exact; ``block`` sizes the
+        exact path's cells)."""
+        bands = self.fingerprint(df, id_col).select(
+            "id", F.xxhash64("fingerprint").alias("band_key"))
+        return candidate_pairs(bands, cfg, block=block)
 
 
 def rule_blocker_from_selected(rules_selected: list[tuple[str, int]]) -> RuleBlocker:

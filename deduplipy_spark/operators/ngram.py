@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deduplipy_spark.config import EngineConfig
-
 
 def split_words(x: Column) -> Column:
     """Trimmed whitespace split — the shared words array. Materialize this
@@ -60,16 +58,15 @@ def ngram_jaccard_pairs(
     """(id_1, id_2, jaccard) exact word-n-gram Jaccard over candidate pairs."""
     # defensive repartition + two-step projection so the words split runs
     # once per row, not once per gram (no CSE in lambda bodies)
+    from deduplipy_spark.operators.pairs import with_pair_sides
     from deduplipy_spark.partitioning import ensure_parallelism
 
     df = ensure_parallelism(df)
     grams = df.select(
         F.col(id_col).alias("id"), split_words(F.col(content_col)).alias("_w")
     ).select("id", word_ngrams_from(F.col("_w"), n).alias("grams"))
-    g1 = grams.select(F.col("id").alias("id_1"), F.col("grams").alias("grams_1"))
-    g2 = grams.select(F.col("id").alias("id_2"), F.col("grams").alias("grams_2"))
     return (
-        candidates.join(g1, "id_1").join(g2, "id_2")
+        with_pair_sides(candidates, grams, ["grams"], "id")
         .withColumn("jaccard", F.round(jaccard_col(), 8))
         .where(F.col("jaccard") >= threshold)
         .select("id_1", "id_2", "jaccard")

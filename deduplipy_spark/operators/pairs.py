@@ -24,16 +24,53 @@ Why this shape at 100 TB:
 - The cap keeps the *lowest* ids (deterministic under any partitioning) and
   the dropped mass is observable: `band_stats` reports per-band sizes and
   the exact number of pairs sacrificed (no silent caps).
+
+That is ``pair_strategy="capped"``; under "exact" `candidate_pairs`, every
+pair producer's entry point, enumerates each band exactly (`salted_pairs`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
+
+
+def with_pair_sides(pairs: DataFrame, table: DataFrame, cols: list[str],
+                    id_col: str = "file_id") -> DataFrame:
+    """Join `cols` of `table` (keyed by `id_col`) onto both ends of an
+    (id_1, id_2) pair table as ``<col>_1`` / ``<col>_2`` — the names the
+    pair metrics (`estimated_jaccard_col`, `jaccard_col`, ...) default to."""
+    for s in ("1", "2"):
+        side = table.select(F.col(id_col).alias(f"id_{s}"),
+                            *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        pairs = pairs.join(side, f"id_{s}")
+    return pairs
+
+
+def _combinations(ids: str, n: int) -> Column:
+    """combinations(ids, 2) as (id_1, id_2) structs, a Column expression (no
+    UDF): element i pairs with every later one (`n` >= the array length)."""
+    return F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + F.lit(2), F.lit(n)),
+                lambda y: F.struct(x.alias("id_1"), y.alias("id_2")),
+            ),
+        )
+    )
+
+
+def _distinct_pairs(pairs: DataFrame, assume_distinct: bool) -> DataFrame:
+    """Distinct (id_1, id_2); under ``assume_distinct`` a within-id band-key
+    collision (~2^-64) would be a self-pair, so it is dropped."""
+    if assume_distinct:
+        pairs = pairs.where(F.col("id_1") != F.col("id_2"))
+    return pairs.dropDuplicates(["id_1", "id_2"])
 
 
 def _ranked_bands(bands: DataFrame, assume_distinct: bool = False) -> DataFrame:
@@ -65,8 +102,11 @@ def _ranked_bands(bands: DataFrame, assume_distinct: bool = False) -> DataFrame:
 def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
                     assume_distinct: bool = False,
                     cut: Callable[[DataFrame], DataFrame] | None = None,
-                    ) -> DataFrame:
+                    block: int | None = None) -> DataFrame:
     """(id_1, id_2) distinct candidate pairs, id_1 < id_2 (blocking.py:115,131).
+
+    The one reader of ``cfg.pair_strategy``: "exact" returns `salted_pairs`
+    (cells of ``block`` ids; ``cut`` unused). The rest describes "capped".
 
     Hot-band handling: the first `band_cap` (lowest) ids form all-pairs
     combinations; members BEYOND the cap emit one STAR edge each to the
@@ -85,6 +125,8 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
     double-window shape is kept (correct, one extra exchange), so no cache
     is left without an owner to release it.
     """
+    if cfg.pair_strategy == "exact":
+        return salted_pairs(bands, cfg, block, assume_distinct)
     cap = cfg.band_cap
     ranked = _ranked_bands(bands, assume_distinct)
     if cut is not None:
@@ -98,27 +140,12 @@ def candidate_pairs(bands: DataFrame, cfg: EngineConfig,
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .where(F.size("ids") >= 2)
     )
-    # combinations(ids, 2) as a codegen expression:
-    # for element x at 0-based index i, pair with every element after it.
-    combos = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + F.lit(2), F.lit(cap)),
-                lambda y: F.struct(x.alias("id_1"), y.alias("id_2")),
-            ),
-        )
-    )
     star = ranked.where(F.col("rn") > cap).select(
         F.col("band_min").alias("id_1"), F.col("id").alias("id_2")
     )
-    pairs = (core.select(F.explode(combos).alias("p"))
+    pairs = (core.select(F.explode(_combinations("ids", cap)).alias("p"))
              .select("p.id_1", "p.id_2").unionByName(star))
-    if assume_distinct:
-        # belt-and-braces: a within-id band-key collision (~2^-64) would
-        # surface as a self-pair here instead of an edge
-        pairs = pairs.where(F.col("id_1") != F.col("id_2"))
-    return pairs.dropDuplicates(["id_1", "id_2"])
+    return _distinct_pairs(pairs, assume_distinct)
 
 
 def salted_pairs(bands: DataFrame, cfg: EngineConfig,
@@ -127,10 +154,11 @@ def salted_pairs(bands: DataFrame, cfg: EngineConfig,
     """EXACT (id_1, id_2) pairs, id_1 < id_2 — salted splitting of hot bands.
 
     The north rule's "salted repartitioning on LSH band keys with skew-aware
-    splitting of hot bands" as literal exact enumeration: where
-    `candidate_pairs` bounds a hot band's output (cap + star edges — the
+    splitting of hot bands" as literal exact enumeration: where the
+    "capped" strategy bounds a hot band's output (cap + star edges — the
     right trade for CLUSTERING, where the star already connects the band),
-    this generator materializes every one of the C(m,2) pairs while still
+    this generator (`candidate_pairs` under ``pair_strategy="exact"``)
+    materializes every one of the C(m,2) pairs while still
     bounding PER-TASK work, for use-cases whose *output* is the pair table
     (rule-blocking exports, pair-recall audits, labeled-pair mining).
 
@@ -153,7 +181,7 @@ def salted_pairs(bands: DataFrame, cfg: EngineConfig,
     2/block of the C(m,2) output itself, i.e. amortized by the answer. The
     quadratic OUTPUT is inherent to exactness: a 10M-member boilerplate
     band is 5*10^13 pairs under any strategy — at that scale use
-    `candidate_pairs` (cap + star) and read `band_stats` for the dropped
+    ``pair_strategy="capped"`` and read `band_stats` for the dropped
     mass. `block` defaults to `cfg.band_cap` so the per-task bound matches
     the capped path's.
     """
@@ -216,15 +244,7 @@ def salted_pairs(bands: DataFrame, cfg: EngineConfig,
             F.collect_list(F.when(F.col("side") == 1, F.col("id")))
         ).alias("r"),
     )
-    within = F.flatten(
-        F.transform(
-            "l",
-            lambda x, i: F.transform(
-                F.slice("l", i + F.lit(2), F.lit(s)),
-                lambda y: F.struct(x.alias("id_1"), y.alias("id_2")),
-            ),
-        )
-    )
+    within = _combinations("l", s)
     cross = F.flatten(
         F.transform(
             "l",
@@ -238,9 +258,7 @@ def salted_pairs(bands: DataFrame, cfg: EngineConfig,
             F.when(F.col("bi") == F.col("bj"), within).otherwise(cross)
         ).alias("p")
     ).select("p.id_1", "p.id_2")
-    if assume_distinct:
-        pairs = pairs.where(F.col("id_1") != F.col("id_2"))
-    return pairs.dropDuplicates(["id_1", "id_2"])
+    return _distinct_pairs(pairs, assume_distinct)
 
 
 def band_stats(bands: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -18,13 +18,15 @@ parallelism (SURVEY §4.3 determinism rule).
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
-from deduplipy_spark.operators.minhash import band_keys, estimated_jaccard_col, with_signatures
-from deduplipy_spark.operators.pairs import candidate_pairs
+from deduplipy_spark.operators.minhash import band_keys, with_signatures
+from deduplipy_spark.operators.pairs import candidate_pairs, with_pair_sides
+from deduplipy_spark.operators.scoring import score_pairs
 
 
 def perfect_match_pairs(df: DataFrame, cols: list[str], n: int) -> DataFrame:
@@ -84,14 +86,8 @@ def minhash_sample(df: DataFrame, cfg: EngineConfig, n_samples: int,
                                              cfg.content_col))
     sigs = with_signatures(ident, cfg)
     cands = candidate_pairs(band_keys(sigs, cfg), cfg)
-    s1 = sigs.select(F.col("file_id").alias("id_1"), F.col("sig").alias("sig_1"))
-    s2 = sigs.select(F.col("file_id").alias("id_2"), F.col("sig").alias("sig_2"))
-    scored = (
-        cands.join(s1, "id_1").join(s2, "id_2")
-        .withColumn("jaccard_sim", estimated_jaccard_col())
-        .where(F.col("jaccard_sim") >= min_sim)
-        .select("id_1", "id_2", "jaccard_sim")
-    )
+    scored = score_pairs(cands, sigs, replace(cfg, score_threshold=min_sim)
+                         ).withColumnRenamed("score", "jaccard_sim")
     # stratify into 10 buckets (pd.cut(..., bins=10) over [min_sim, 1])
     scored = scored.withColumn(
         "bucket",
@@ -127,11 +123,7 @@ def mixed_sample(df: DataFrame, cfg: EngineConfig, cols: list[str],
     half = n_samples // 2
     mh_ids = minhash_sample(df, cfg, half, seed=seed, id_cols=id_cols)
     ident = with_identity(df, id_cols or cfg.id_cols, cfg.content_col)
-    payload_1 = ident.select(F.col("file_id").alias("id_1"),
-                             *[F.col(c).alias(f"{c}_1") for c in cols])
-    payload_2 = ident.select(F.col("file_id").alias("id_2"),
-                             *[F.col(c).alias(f"{c}_2") for c in cols])
-    mh = (mh_ids.join(payload_1, "id_1").join(payload_2, "id_2")
+    mh = (with_pair_sides(mh_ids, ident, cols)
           .drop("id_1", "id_2", "jaccard_sim")
           .withColumn("synthetic_perfect_match", F.lit(False)))
     # top up with naive pairs to reach n_samples (reference: deduplicator.py:103-108)

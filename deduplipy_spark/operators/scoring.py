@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.minhash import estimated_jaccard_col
+from deduplipy_spark.operators.pairs import with_pair_sides
 
 
 def score_pairs(candidates: DataFrame, signatures: DataFrame,
@@ -30,13 +31,8 @@ def score_pairs(candidates: DataFrame, signatures: DataFrame,
     share a sha — the exact class collapses in the sha pre-pass (pipeline)
     or via column equality (learned path).
     """
-    s1 = signatures.select(F.col("file_id").alias("id_1"),
-                           F.col("sig").alias("sig_1"))
-    s2 = signatures.select(F.col("file_id").alias("id_2"),
-                           F.col("sig").alias("sig_2"))
     scored = (
-        candidates.join(s1, "id_1")
-        .join(s2, "id_2")
+        with_pair_sides(candidates, signatures, ["sig"])
         .withColumn("score", estimated_jaccard_col())
         .select("id_1", "id_2", "score")
     )

@@ -214,15 +214,12 @@ def simhash_pairs(df: DataFrame, cfg: EngineConfig, max_hamming: int = 3,
                   id_col: str = "file_id") -> DataFrame:
     """(id_1, id_2, hamming) pairs within max_hamming (guaranteed complete for
     max_hamming <= bands-1 by pigeonhole over 4x16 bands)."""
-    from deduplipy_spark.operators.pairs import candidate_pairs
+    from deduplipy_spark.operators.pairs import candidate_pairs, with_pair_sides
 
     hashed = df.select(F.col(id_col).alias("id"), "simhash").localCheckpoint()
     bands = simhash_bands(hashed.withColumnRenamed("id", id_col), cfg, id_col)
-    pairs = candidate_pairs(bands, cfg)
-    h1 = hashed.select(F.col("id").alias("id_1"), F.col("simhash").alias("simhash_1"))
-    h2 = hashed.select(F.col("id").alias("id_2"), F.col("simhash").alias("simhash_2"))
     return (
-        pairs.join(h1, "id_1").join(h2, "id_2")
+        with_pair_sides(candidate_pairs(bands, cfg), hashed, ["simhash"], "id")
         .withColumn("hamming", hamming_col())
         .where(F.col("hamming") <= max_hamming)
         .select("id_1", "id_2", "hamming")

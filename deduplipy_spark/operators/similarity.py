@@ -192,17 +192,20 @@ def ivf_topk(
             .drop("centroid", "_sim", "_r")
         )
 
+    # rerank norms: once per vector on each join side, not once per pair
     corpus_cells = nearest_lists(
-        c.select(F.col("cid").alias("neighbor_id"), F.col("cvec").alias("emb_2")),
+        c.select(F.col("cid").alias("neighbor_id"), F.col("cvec").alias("emb_2"),
+                 norm_col("cvec").alias("_n2")),
         "neighbor_id", "emb_2", 1,
     )
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).cast("array<double>").alias("emb_1"))
-    query_cells = nearest_lists(q, "query_id", "emb_1", n_probe)
+    query_cells = nearest_lists(q.withColumn("_n1", norm_col("emb_1")),
+                                "query_id", "emb_1", n_probe)
     scored = (
         query_cells.join(corpus_cells, "list_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_col(), 8))
+        .withColumn("cosine", F.round(cosine_col(na="_n1", nb="_n2"), 8))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -245,16 +248,12 @@ def embedding_dup_pairs_lsh(
         ).alias("band_key"),
     )
     from deduplipy_spark.config import EngineConfig
-    from deduplipy_spark.operators.pairs import candidate_pairs
+    from deduplipy_spark.operators.pairs import candidate_pairs, with_pair_sides
 
     pairs = candidate_pairs(bands, EngineConfig(band_cap=band_cap))
-    e1 = sigs.select(F.col("id").alias("id_1"), F.col("emb").alias("emb_1"),
-                     F.col("_n").alias("_n1"))
-    e2 = sigs.select(F.col("id").alias("id_2"), F.col("emb").alias("emb_2"),
-                     F.col("_n").alias("_n2"))
     return (
-        pairs.join(e1, "id_1").join(e2, "id_2")
-        .withColumn("cosine", F.round(cosine_col(na="_n1", nb="_n2"), 8))
+        with_pair_sides(pairs, sigs, ["emb", "_n"], "id")
+        .withColumn("cosine", F.round(cosine_col(na="_n_1", nb="_n_2"), 8))
         .where(F.col("cosine") >= F.lit(threshold))
         .select("id_1", "id_2", "cosine")
     )

@@ -296,18 +296,15 @@ def containment_pairs(
     batch for all its candidate containees; ``grouped=False`` keeps the
     per-pair C ``str.find`` loop (also the in-group fallback for small
     groups). Identical output either way."""
-    c = files.select(F.col(id_col).alias("id"), F.col(content_col).alias("c"))
-    joined = (
-        candidates.join(c.withColumnRenamed("id", "id_1")
-                        .withColumnRenamed("c", "c1"), "id_1")
-        .join(c.withColumnRenamed("id", "id_2").withColumnRenamed("c", "c2"), "id_2")
-    )
+    from deduplipy_spark.operators.pairs import with_pair_sides
+
+    joined = with_pair_sides(candidates, files, [content_col], id_col)
 
     def verify(batch: pd.DataFrame) -> pd.DataFrame:
         ids1 = batch["id_1"].tolist()
         ids2 = batch["id_2"].tolist()
-        c1 = batch["c1"].tolist()
-        c2 = batch["c2"].tolist()
+        c1 = batch[f"{content_col}_1"].tolist()
+        c2 = batch[f"{content_col}_2"].tolist()
         rows, leftovers = _full_containment_rows(ids1, ids2, c1, c2, grouped)
         if min_containment < 1.0 and leftovers:
             rows.extend(_partial_containment_rows(

@@ -86,34 +86,30 @@ def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4,
 def winnow_candidate_pairs(df: DataFrame, cfg, k: int = 8, w: int = 4,
                            id_col: str = "file_id",
                            text_col: str = "content",
-                           strategy: str = "capped",
                            block: int | None = 64) -> DataFrame:
     """Shared-fingerprint candidate pairs (any shared substring >= w+k-1
-    chars guarantees a candidate).
+    chars guarantees a candidate), through `pairs.candidate_pairs`.
 
-    ``strategy="capped"`` (default) routes through `pairs.candidate_pairs`
-    (band_cap + star edges — the production 100 TB shape).
-    ``strategy="exact"`` routes through `pairs.salted_pairs`: winnow bands
-    are the repo's most skewed band table (boilerplate fingerprints — at
-    sf0.1 the hottest is shared by 3,628 docs, 104M raw expansions), and
-    the capped generator run UNCAPPED materializes each band's full
-    C(m,2) nested combination array in one aggregation row before
-    exploding. The triangle split bounds every cell to <= 2*block members
-    and <= block^2 output pairs, spread across the salted shuffle —
-    measured 38.7s -> 12.0s for the identical 12M-pair output (block=64;
-    guide §2.5). ``block`` sizes the cells (64 ~ L1-resident work per
-    cell; independent of corpus scale).
+    ``cfg.pair_strategy="capped"`` (default) is band_cap + star edges — the
+    production 100 TB shape. Under ``"exact"`` the salted split runs with
+    cells of ``block`` ids: winnow bands are the repo's most skewed band
+    table (boilerplate fingerprints — at sf0.1 the hottest is shared by
+    3,628 docs, 104M raw expansions), and the capped generator run
+    UNCAPPED materializes each band's full C(m,2) nested combination array
+    in one aggregation row before exploding. The triangle split bounds
+    every cell to <= 2*block members and <= block^2 output pairs, spread
+    across the salted shuffle — measured 38.7s -> 12.0s for the identical
+    12M-pair output (block=64; guide §2.5). 64 ~ L1-resident work per
+    cell; independent of corpus scale.
 
-    assume_distinct on both routes: (id, fp) is distinct by construction
-    (array_distinct per doc), so (id, band_key) is too up to an intra-doc
-    xxhash64 collision (~2^-64) — same contract as the MinHash bands;
-    skips the pre-window dropDuplicates exchange.
+    assume_distinct: (id, fp) is distinct by construction (array_distinct
+    per doc), so (id, band_key) is too up to an intra-doc xxhash64
+    collision (~2^-64) — same contract as the MinHash bands; skips the
+    pre-window dropDuplicates exchange.
     """
-    from deduplipy_spark.operators.pairs import candidate_pairs, salted_pairs
+    from deduplipy_spark.operators.pairs import candidate_pairs
 
     bands = winnow_fingerprints(df, k, w, id_col, text_col).select(
         "id", F.xxhash64("fp", F.lit("winnow")).alias("band_key")
     )
-    if strategy == "exact":
-        return salted_pairs(bands, cfg, block=block, assume_distinct=True)
-    return candidate_pairs(bands, cfg, assume_distinct=True)
+    return candidate_pairs(bands, cfg, assume_distinct=True, block=block)

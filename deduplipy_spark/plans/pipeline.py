@@ -7,7 +7,8 @@ Mirrors ``Deduplicator.predict`` (``deduplipy/deduplicator/deduplicator.py:
  2. exact pre-pass  groupBy(content_sha) reps          (1 shuffle)   ≈ drop_duplicates
  3. signatures      shingle+MinHash pandas UDF         (narrow)
  4. bands           JVM band-key explode               (narrow)
- 5. candidates      capped band groupBy + combinations (1-2 shuffles)
+ 5. candidates      capped band groupBy + combinations (1-2 shuffles;
+                    cfg.pair_strategy="exact": salted split, pairs.py)
  6. scoring         sig joins + zip_with estimate      (2 joins)
                     (exact-sha override lives in the pre-pass, not here)
  7. components      iterative min-label propagation    (looped)
@@ -43,28 +44,24 @@ from deduplipy_spark.sources.io import TableIO, input_fingerprint
 
 class DedupPipeline:
     def __init__(self, spark: SparkSession, cfg: EngineConfig | None = None,
-                 rules_selected: list[tuple[str, int]] | None = None,
-                 pair_strategy: str = "capped") -> None:
+                 rules_selected: list[tuple[str, int]] | None = None) -> None:
         """rules_selected: learned blocking rules [(col, rule_idx)] from
         Deduplicator.fit / operators.set_cover — their band keys are UNIONED
         with the MinHash bands, so learned rules add candidate recall on top
         of LSH (the reference's Blocking.transform role, blocking.py:129-131).
 
-        pair_strategy: 'capped' (default) caps hot-band expansion and keeps
-        connectivity with star edges — but a star pair must still SCORE
-        above the threshold to survive, so under an aggressive cap a hot
-        band's far members can detach. 'exact' routes candidates through
-        `pairs.salted_pairs`: every band pair is scored (per-task work still
-        bounded), trading pair volume for exact clustering on skewed
-        corpora. The strategy is folded into the checkpoint input key, so a
-        resume never serves candidates produced under the other strategy.
+        Hot bands follow ``cfg.pair_strategy``: 'capped' (default) caps the
+        expansion and keeps connectivity with star edges — but a star pair
+        must still SCORE above the threshold to survive, so under an
+        aggressive cap a hot band's far members can detach. 'exact' scores
+        every band pair (salted split, per-task work still bounded), trading
+        pair volume for exact clustering on skewed corpora. The field is in
+        the config hash, so a resume never serves candidates produced under
+        the other strategy.
         """
-        if pair_strategy not in ("capped", "exact"):
-            raise ValueError(f"unknown pair_strategy {pair_strategy!r}")
         self.spark = spark
         self.cfg = cfg or EngineConfig()
         self.rules_selected = rules_selected or None
-        self.pair_strategy = pair_strategy
         self.io: TableIO | None = None   # constructed per-run (input-keyed)
         # DAG cuts (_cut) of THIS instance's most recent run: released
         # at the start of its next run, or via close(). Per-instance (ADVICE
@@ -79,14 +76,6 @@ class DedupPipeline:
     # 100k files that fixed overhead exceeded the parallel work)
     _REUSED = {"files_hashed", "rep_ids", "signatures", "scored_pairs",
                "components"}
-
-    def _variant_key(self):
-        """Checkpoint input-key variant: learned rules (+ pair strategy when
-        non-default, so 'capped' runs keep their pre-existing fingerprints
-        and 'exact' runs can never resume a capped candidates table)."""
-        if self.pair_strategy == "capped":
-            return self.rules_selected
-        return {"rules": self.rules_selected, "pairs": self.pair_strategy}
 
     def _cut(self, df: DataFrame) -> DataFrame:
         """Cut the DAG at `df`: the package's one rule for persisting an
@@ -152,7 +141,7 @@ class DedupPipeline:
                 cfg.checkpoint_dir
                 or os.path.abspath("deduplipy_intermediate_steps"),
                 cfg.config_hash(),
-                input_key=input_fingerprint(files, extra=self._variant_key()),
+                input_key=input_fingerprint(files, extra=self.rules_selected),
                 resume=bool(cfg.checkpoint_dir),
             )
         # The per-input conf overrides below (shuffle sizing + AQE coalesce
@@ -296,23 +285,15 @@ class DedupPipeline:
         # pure MinHash bands are (id, band_key)-distinct by construction
         # (the band index is hashed into the key), so the pre-window
         # dropDuplicates exchange is skipped; unioned rule fingerprints CAN
-        # repeat a key per id, so the learned-rule path keeps the dedup
-        if self.pair_strategy == "exact":
-            from deduplipy_spark.operators.pairs import salted_pairs
-
-            cands = self._stage(
-                "candidates", lambda: salted_pairs(
-                    bands, cfg, assume_distinct=self.rules_selected is None)
-            )
-        else:
-            # cut=self._cut: the ranked-band window feeds two branches
-            # (core combos + star edges), so the band table is
-            # exchanged+sorted once, not twice (see candidate_pairs)
-            cands = self._stage(
-                "candidates", lambda: candidate_pairs(
-                    bands, cfg, assume_distinct=self.rules_selected is None,
-                    cut=self._cut)
-            )
+        # repeat a key per id, so the learned-rule path keeps the dedup.
+        # cut=self._cut: the capped path's ranked-band window feeds two
+        # branches (core combos + star edges), so the band table is
+        # exchanged+sorted once, not twice (see candidate_pairs)
+        cands = self._stage(
+            "candidates", lambda: candidate_pairs(
+                bands, cfg, assume_distinct=self.rules_selected is None,
+                cut=self._cut)
+        )
         scored = self._stage(
             "scored_pairs",
             lambda: score_pairs(cands, sigs, cfg),

@@ -29,13 +29,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.ids import with_identity
 from deduplipy_spark.operators.minhash import band_keys, with_signatures
-from deduplipy_spark.operators.pairs import candidate_pairs
+from deduplipy_spark.operators.pairs import _ranked_bands, candidate_pairs
 
 
 def stream_exact_dedup(
@@ -72,58 +72,42 @@ class IncrementalNearDup:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
-        cap = cfg.band_cap
         ident = with_identity(batch_df, cfg.id_cols, cfg.content_col)
         sigs = with_signatures(ident, cfg)
         new_bands = band_keys(sigs, cfg).localCheckpoint()
         old = self._existing_bands()
+        # batch 0 runs against an empty index, which Catalyst prunes
+        index = new_bands.limit(0) if old is None else old
 
         # (a) duplicates WITHIN this micro-batch: the same capped+star pair
         # generator as the batch blocker (round 1 missed new-vs-new entirely)
         intra = candidate_pairs(new_bands, cfg).select(
             F.col("id_2").alias("new_id"),
             F.col("id_1").alias("existing_id"),      # lower id plays "seen"
-            F.lit(batch_id).alias("batch_id"),
         )
-
-        w = Window.partitionBy("band_key").orderBy("id")
-        ranked_new = new_bands.dropDuplicates(["band_key", "id"]).withColumn(
-            "rn", F.row_number().over(w)
+        # (b) new vs index: the index is <= cap rows per band by
+        # invariant, so this join's output is linear in the batch
+        matches = (
+            new_bands.alias("n").join(index.alias("o"), "band_key")
+            .where(F.col("n.id") != F.col("o.id"))
+            .select(F.col("n.id").alias("new_id"),
+                    F.col("o.id").alias("existing_id"))
         )
-        if old is not None:
-            # (b) new vs index: the index is <= cap rows per band by
-            # invariant, so this join's output is linear in the batch
-            matches = (
-                new_bands.alias("n")
-                .join(old.alias("o"), "band_key")
-                .where(F.col("n.id") != F.col("o.id"))
-                .select(
-                    F.col("n.id").alias("new_id"),
-                    F.col("o.id").alias("existing_id"),
-                    F.lit(batch_id).alias("batch_id"),
-                )
-            )
-            all_matches = matches.unionByName(intra).dropDuplicates(
-                ["new_id", "existing_id"]
-            )
-            # append only while the band stays under cap
-            old_counts = old.groupBy("band_key").agg(
-                F.count(F.lit(1)).alias("_old_n")
-            )
-            additions = (
-                ranked_new.join(old_counts, "band_key", "left")
-                .where(F.col("rn") + F.coalesce(F.col("_old_n"), F.lit(0)) <= cap)
-                .select("id", "band_key")
-            )
-            all_matches.write.mode("append").parquet(self.matches_path)
-            additions.write.mode("append").parquet(self.bands_path)
-        else:
-            intra.dropDuplicates(["new_id", "existing_id"]).write.mode(
-                "append"
-            ).parquet(self.matches_path)
-            ranked_new.where(F.col("rn") <= cap).select(
-                "id", "band_key"
-            ).write.mode("overwrite").parquet(self.bands_path)
+        all_matches = (matches.unionByName(intra)
+                       .dropDuplicates(["new_id", "existing_id"])
+                       .withColumn("batch_id", F.lit(batch_id)))
+        # append only while the band stays under cap
+        old_counts = index.groupBy("band_key").agg(
+            F.count(F.lit(1)).alias("_old_n"))
+        additions = (
+            _ranked_bands(new_bands).join(old_counts, "band_key", "left")
+            .where(F.col("rn") + F.coalesce(F.col("_old_n"), F.lit(0))
+                   <= cfg.band_cap)
+            .select("id", "band_key")
+        )
+        all_matches.write.mode("append").parquet(self.matches_path)
+        additions.write.mode("overwrite" if old is None else "append").parquet(
+            self.bands_path)
 
     def start(self, input_dir: str, schema: str, checkpoint: str,
               trigger_available_now: bool = True):

@@ -37,7 +37,7 @@ def test_pairs_golden(spark):
         [(i, n) for i, n in enumerate(NAMES)], "file_id long, name string"
     )
     blocker = RuleBlocker({"name": [first_three_letters, first_four_letters]})
-    pairs = blocker.pairs(df, EngineConfig(), hashed=False).toPandas()
+    pairs = blocker.pairs(df, EngineConfig()).toPandas()
     got = set(zip(pairs.id_1, pairs.id_2))
     # golden pairs from the reference test (plus whatever 4-letter adds — the
     # reference's selected-rule set produces exactly these three)

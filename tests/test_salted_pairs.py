@@ -8,6 +8,7 @@ bounded because a hot band's membership is triangle-split across
 (band_key, block_i, block_j) cells before any aggregation.
 """
 import random
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,7 +39,7 @@ def test_salted_equals_uncapped_on_random_bands(spark):
     for block in (1, 3, 16, 1000):
         got = _pairset(salted_pairs(bands, UNCAPPED, block=block))
         assert got == ref, f"block={block}"
-    # string band keys (the RuleBlocker hashed=False path) split identically
+    # string band keys split identically
     sbands = bands.select(F.col("band_key").cast("string").alias("band_key"),
                           "id")
     assert _pairset(salted_pairs(sbands, UNCAPPED, block=3)) == ref
@@ -73,34 +74,62 @@ def test_salted_block_validation():
         salted_pairs(None, UNCAPPED, block=0)
 
 
-def test_pipeline_exact_strategy_matches_uncapped_clusters(spark):
-    """End-to-end: under an aggressive band_cap the 'exact' pipeline scores
-    EVERY band pair (salted split), so its clusters must equal the
-    uncapped reference clustering; the strategy also segregates the
-    checkpoint input key so a resume can't serve capped candidates."""
-    from deduplipy_spark.plans.pipeline import DedupPipeline
+# 24 docs in 4 small groups plus one 6-doc group, all sharing "alpha beta "
+# (a 30-member rule band and winnow band, far past band_cap=4)
+_DOCS = ([(i, f"alpha beta {i % 4}") for i in range(24)]
+         + [(100 + i, "alpha beta shared tail") for i in range(6)])
+
+
+def _rule_pairs(spark, cfg):
+    docs = spark.createDataFrame(_DOCS, "file_id long, content string")
+    return _pairset(RuleBlocker().pairs(docs, cfg))
+
+
+def _winnow_pairs(spark, cfg):
+    from deduplipy_spark.operators.winnow import winnow_candidate_pairs
+
+    docs = spark.createDataFrame(_DOCS, "file_id long, content string")
+    return _pairset(winnow_candidate_pairs(docs, cfg))
+
+
+def _pipeline_candidates_and_clusters(spark, cfg):
+    from deduplipy_spark.plans import pipeline
     from deduplipy_spark.sources.datagen import gen_files
 
-    files = gen_files(spark, 200, 20, 5, partitions=4)
-    tight = EngineConfig(band_cap=4)
-    loose = EngineConfig(band_cap=100_000)
-    want = (
-        DedupPipeline(spark, loose).run(files)
-        .select("file_id", "cluster_id").toPandas()
-    )
-    got = (
-        DedupPipeline(spark, tight, pair_strategy="exact").run(files)
-        .select("file_id", "cluster_id").toPandas()
-    )
-    assert dict(zip(got.file_id, got.cluster_id)) == dict(
-        zip(want.file_id, want.cluster_id))
+    # clusters of 25: their bands overflow band_cap=4
+    files = gen_files(spark, 200, 4, 25, partitions=4)
+    made = []
 
-    with pytest.raises(ValueError):
-        DedupPipeline(spark, tight, pair_strategy="nope")
-    # input-key separation: exact runs must never resume capped stages
-    a = DedupPipeline(spark, tight)
-    b = DedupPipeline(spark, tight, pair_strategy="exact")
-    assert a._variant_key() != b._variant_key()
+    def recording(*args, **kw):
+        made.append(candidate_pairs(*args, **kw))
+        return made[-1]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "candidate_pairs", recording)
+        out = pipeline.DedupPipeline(spark, cfg).run(files).select(
+            "file_id", "cluster_id").toPandas()
+    return _pairset(made[0]), dict(zip(out.file_id, out.cluster_id))
+
+
+@pytest.mark.parametrize("produce", [_pipeline_candidates_and_clusters,
+                                     _rule_pairs, _winnow_pairs],
+                         ids=["pipeline", "rule_blocker", "winnow"])
+def test_producer_honours_pair_strategy(spark, produce):
+    """Every pair producer reads the strategy from its EngineConfig: under
+    'exact' an aggressive band_cap=4 gives the uncapped result (for the
+    pipeline: the same candidate table, so the same clusters). band_cap=4
+    drops pairs from every one of these inputs, so a producer that ignored
+    the field would fail here."""
+    assert produce(spark, EngineConfig(band_cap=4, pair_strategy="exact")) \
+        == produce(spark, UNCAPPED)
+
+
+def test_pair_strategy_validated_and_hashed():
+    with pytest.raises(ValueError, match="pair_strategy"):
+        EngineConfig(pair_strategy="bogus")
+    # checkpoint separation: exact runs must never resume capped stages
+    assert (EngineConfig(pair_strategy="exact").config_hash()
+            != EngineConfig().config_hash())
 
 
 def test_salted_matches_itertools_truth_across_shapes(spark):
@@ -132,24 +161,29 @@ def test_salted_matches_itertools_truth_across_shapes(spark):
 
 
 def test_deduplicator_pair_strategy_round_trips(tmp_path):
+    """The strategy round-trips inside the saved config; a model saved
+    when it was a top-level Deduplicator key still loads it."""
+    import json
+
     from deduplipy_spark.deduplicator import Deduplicator
 
-    dd = Deduplicator(["content"], pair_strategy="exact")
-    path = str(tmp_path / "model.json")
-    dd.save(path)
-    assert Deduplicator.load(path).pair_strategy == "exact"
-    assert Deduplicator.load(path).cfg == dd.cfg
+    cfg = EngineConfig(id_cols=("content",), pair_strategy="exact")
+    dd = Deduplicator(["content"], config=cfg)
+    path = tmp_path / "model.json"
+    dd.save(str(path))
+    assert Deduplicator.load(str(path)).cfg == cfg
+
+    blob = json.loads(path.read_text())
+    del blob["config"]["pair_strategy"]
+    blob["pair_strategy"] = "exact"
+    path.write_text(json.dumps(blob))
+    assert Deduplicator.load(str(path)).cfg.pair_strategy == "exact"
 
 
 def test_rule_blocker_exact_strategy(spark):
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta {i % 4}") for i in range(24)]
-        + [(100 + i, "alpha beta shared tail") for i in range(6)],
-        "file_id long, content string",
-    )
+    docs = spark.createDataFrame(_DOCS, "file_id long, content string")
     blocker = RuleBlocker()
     capped = _pairset(blocker.pairs(docs, UNCAPPED))
-    exact = _pairset(blocker.pairs(docs, UNCAPPED, strategy="exact", block=2))
+    exact = _pairset(blocker.pairs(
+        docs, replace(UNCAPPED, pair_strategy="exact"), block=2))
     assert exact == capped
-    with pytest.raises(ValueError):
-        blocker.pairs(docs, UNCAPPED, strategy="bogus")
