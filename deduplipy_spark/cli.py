@@ -106,6 +106,11 @@ def main(argv: list[str] | None = None) -> int:
         if ignored:
             runp.error(f"--model runs the model's saved config; "
                        f"{', '.join(ignored)} would be ignored")
+    elif args.cmd == "run":
+        try:
+            cfg = _config_from(args)
+        except ValueError as e:
+            runp.error(str(e))
     from deduplipy_spark.session import get_spark
 
     spark = get_spark("deduplipy-spark-cli")
@@ -121,7 +126,6 @@ def main(argv: list[str] | None = None) -> int:
         else:
             from deduplipy_spark.plans.pipeline import DedupPipeline
 
-            cfg = _config_from(args)
             out = DedupPipeline(spark, cfg).run(files)
         out.write.mode("overwrite").format(args.format).save(args.output)
         n = spark.read.format(args.format).load(args.output).count()

@@ -8,7 +8,8 @@ that a single config hash keys every checkpoint manifest — the "identical
 shingle/signature config" knob that the recall target is defined against.
 Values that only ever run at one setting stay module constants beside the
 code that uses them, as in the reference (SoftImpute convergence, CC round
-limit, SimHash widths).
+limit, SimHash widths); the driver-CC cutoff is derived from the driver heap
+at run time (``operators/components.auto_driver_max_edges``).
 """
 
 from __future__ import annotations
@@ -56,16 +57,6 @@ class EngineConfig:
     fill_missing: bool = True
     max_hac_size: int = 2000        # above this: PACk split on strong edges;
                                     # sub-components still above it: 1 cluster
-    # execution-only (excluded from config_hash): below this edge count the
-    # CC step runs driver-side union-find instead of the distributed loop
-    # (measured: the distributed loop's fixed multi-round cost was 51s for
-    # a 6.4M-edge graph at local[16] that the driver path handles in ~8s).
-    # None (default) derives the cutoff from the ACTUAL driver heap at run
-    # time — edges <= heap/512, i.e. ~25M at this repo's 12g driver, ~134M
-    # at a 64g production driver (operators/components.py
-    # auto_driver_max_edges); set an int to pin it, 0 to disable the
-    # driver path entirely.
-    driver_cc_max_edges: int | None = None
 
     # --- checkpointing ---
     checkpoint_dir: str | None = None
@@ -75,6 +66,12 @@ class EngineConfig:
     save_intermediate_steps: bool = False
 
     def __post_init__(self) -> None:
+        # a 0 or negative size is never a smaller setting, only a broken one
+        # (shingle_k < 1 gives every non-empty text the same signature)
+        for f in ("shingle_k", "bands", "rows_per_band", "band_cap",
+                  "max_hac_size"):
+            if getattr(self, f) < 1:
+                raise ValueError(f"{f} must be >= 1, got {getattr(self, f)!r}")
         if self.pair_strategy not in ("capped", "exact"):
             raise ValueError(f"pair_strategy must be 'capped' or 'exact', "
                              f"got {self.pair_strategy!r}")
@@ -103,7 +100,6 @@ class EngineConfig:
         d = asdict(self)
         d.pop("checkpoint_dir", None)       # location doesn't change semantics
         d.pop("save_intermediate_steps", None)
-        d.pop("driver_cc_max_edges", None)  # execution strategy, not semantics
         d["_kernel_version"] = KERNEL_VERSION
         blob = json.dumps(d, sort_keys=True, default=str).encode()
         return hashlib.sha256(blob).hexdigest()[:16]

@@ -284,9 +284,10 @@ class Deduplicator:
             blob = json.load(f)
         c = blob["config"]
         c["id_cols"] = tuple(c["id_cols"])
-        # models saved before the unused shuffle_partitions field was
-        # removed still carry it; it never entered the config hash
+        # models saved before the shuffle_partitions and driver_cc_max_edges
+        # fields were removed still carry them; neither entered the hash
         c.pop("shuffle_partitions", None)
+        c.pop("driver_cc_max_edges", None)
         # models saved while the strategy was a Deduplicator attribute
         # carry it at the top level
         c.setdefault("pair_strategy", blob.get("pair_strategy", "capped"))

@@ -292,9 +292,8 @@ def cluster_components(
     """(id, cluster_id, component, capped) per node of every scored component.
 
     `scored` = (id_1, id_2, score); `components` = (id, component, _csize)
-    from ``connected_components(with_sizes=True)``. Both are consumed more
-    than once here, so the caller passes them already cut
-    (``DedupPipeline.cluster`` does).
+    from ``connected_components``. Both are consumed more than once here,
+    so the caller passes them already cut (``DedupPipeline.cluster`` does).
 
     ``max_component_size``: the largest component's node count when the
     caller already knows it (connected_components' driver path computes it
@@ -348,9 +347,8 @@ def cluster_components(
     edges_big = scored.join(
         big.select(F.col("id").alias("id_1"), "component"), "id_1")
     strong = edges_big.where(F.col("score") >= cfg.cluster_threshold)
-    sub = connected_components(
-        strong.select("id_1", "id_2"), driver_max_edges=cfg.driver_cc_max_edges
-    ).select(F.col("id"), F.col("component").alias("_sub"))
+    sub = connected_components(strong.select("id_1", "id_2")).select(
+        F.col("id"), F.col("component").alias("_sub"))
     induced = (
         with_pair_sides(edges_big, sub, ["_sub"], "id")
         .where(F.col("_sub_1") == F.col("_sub_2"))

@@ -4,7 +4,10 @@ Replaces ``nx.connected_components`` (``deduplipy/clustering/clustering.py:36``)
 — a driver-memory graph — with an iterative DataFrame algorithm:
 min-label propagation with pointer-jumping (path compression), the
 DataFrame-only variant of Kiveris et al., "Connected Components in MapReduce
-and Beyond" (SoCC'14). Converges in O(log d) rounds.
+and Beyond" (SoCC'14). Converges in O(log d) rounds. Graphs up to
+`auto_driver_max_edges` edges take a driver-side union-find instead; above
+it, one loop (`_propagate`) runs frontier rounds and switches to classic
+all-nodes rounds when the graph's diameter keeps the frontier full.
 
 Scale notes:
 - Each round is two shuffles (neighbor-min groupBy + label-lookup join),
@@ -20,12 +23,17 @@ under any partitioning, so downstream cluster ids are stable for resume.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # distributed-loop round limit: min-label propagation with pointer jumping
 # converges in O(log d) rounds, so hitting it means a bug, not a big graph
 MAX_CC_ROUNDS = 50
+# frontier fraction above which the distributed loop switches to classic
+# all-nodes rounds (see _propagate): >90% of nodes still changing after the
+# grace rounds means the frontier machinery is pure overhead on top of a
+# full-graph round
+_FRONTIER_SWITCH = 0.9
 
 
 def _mem_bytes(s: str) -> int:
@@ -55,70 +63,51 @@ def auto_driver_max_edges(spark: SparkSession) -> int:
 
 
 def connected_components(edges: DataFrame,
-                         driver_max_edges: int | None = None,
-                         with_sizes: bool = False,
                          edge_count: int | None = None,
                          stats_out: dict | None = None) -> DataFrame:
-    """edges(id_1, id_2) -> (id, component) for every node appearing in edges.
+    """edges(id_1, id_2) -> (id, component, _csize) for every node appearing
+    in edges.
 
-    component = min node id reachable (the canonical representative).
-    ``with_sizes=True`` appends a ``_csize`` column (component node count) —
-    free on the driver path (one bincount), one extra window shuffle on the
-    distributed path. Downstream HAC gates its oversized-component split on
-    ``_csize`` without re-deriving sizes in a separate groupBy+join job.
+    component = min node id reachable (the canonical representative);
+    ``_csize`` = component node count — free on the driver path (one
+    bincount), one window shuffle on the distributed path (Catalyst prunes
+    it when the caller never reads it). Downstream HAC gates its
+    oversized-component split on ``_csize`` without re-deriving sizes in a
+    separate groupBy+join job.
 
-    Scale-adaptive (same spirit as AQE's runtime broadcast switch): below
-    `driver_max_edges` the edge list fits trivially on the driver (2M edges
-    = 32 MB) and a union-find there beats O(log d) Spark rounds of fixed
-    job overhead; above it, the distributed min-label loop runs. Both paths
-    produce identical output (component = min reachable id).
+    Scale-adaptive (same spirit as AQE's runtime broadcast switch): up to
+    `auto_driver_max_edges` (derived from the driver heap) the edge list
+    fits trivially on the driver and a union-find there beats O(log d)
+    Spark rounds of fixed job overhead (measured: 51s distributed vs ~8s on
+    the driver for a 6.4M-edge graph at local[16]); above it, the
+    distributed min-label loop (`_propagate`) runs. Both paths produce
+    identical output.
 
     ``edge_count``: known row count of `edges` (e.g. from a checkpoint
     manifest) — skips the size-gate count job entirely.
 
-    ``driver_max_edges=None`` derives the cutoff from the driver heap
-    (`auto_driver_max_edges`); 0/False disables the driver path outright.
-
     ``stats_out``: optional dict populated with facts this call learns for
-    free: ``n_edges`` (whenever the size gate counts, or edge_count is
-    passed) and ``max_component_size`` (driver path only — one extra
-    bincount next to the union-find). Downstream HAC uses them to skip
-    its big-component existence probe and to size its grouped-map
+    free: ``n_edges`` (always) and ``max_component_size`` (driver path only
+    — one extra bincount next to the union-find). Downstream HAC uses them
+    to skip its big-component existence probe and to size its grouped-map
     partition count; the distributed path leaves max_component_size unset
     (a global max there would be its own job, costing exactly what the
     skip saves).
-
-    The distributed loop runs in frontier form (VERDICT r4 #7, the
-    large-star optimization): only nodes whose label CHANGED last round
-    send neighbor/pointer offers, so once most labels freeze the per-round
-    joins see a small build side that AQE's runtime broadcast switch turns
-    into narrow map-side joins — no full-graph shuffle after the early
-    rounds. Measured trade (BENCH/NOTES.md): frontier wins 1.33x over the
-    classic all-nodes round on clique-shaped dedup graphs (diameter <= 2-3,
-    the shape band blocking produces); on high-diameter graphs every label
-    changes every round and the frontier never shrinks — the loop detects
-    that regime from the (already-counted) per-round change fraction and
-    HANDS OFF to classic rounds mid-run (``_FRONTIER_SWITCH``), so it stays
-    near the better variant on both shapes.
     """
-    if driver_max_edges is None:
-        driver_max_edges = auto_driver_max_edges(edges.sparkSession)
-    if driver_max_edges:
-        # size gate as a parallel count, NOT limit(N+1).toPandas(): a global
-        # limit executes as CollectLimit — the driver pulls partitions in
-        # serial rounds, so the probe got SLOWER with more cores (measured
-        # 0.6s at local[4] -> 2.9s at local[16] on a 400k-edge graph). Two
-        # fully-parallel jobs (count, then Arrow collect) beat one
-        # semi-serial one; when the pipeline checkpoints edges LAZILY, this
-        # count is also the job that materializes the cache, and a manifest
-        # row_count skips it altogether (edge_count).
-        n_edges = edge_count if edge_count is not None else edges.count()
-        if stats_out is not None:
-            stats_out["n_edges"] = n_edges
-        if n_edges <= driver_max_edges:
-            probe = edges.select("id_1", "id_2").toPandas()
-            return _driver_union_find_pdf(probe, edges.sparkSession, with_sizes,
-                                          stats_out)
+    # size gate as a parallel count, NOT limit(N+1).toPandas(): a global
+    # limit executes as CollectLimit — the driver pulls partitions in
+    # serial rounds, so the probe got SLOWER with more cores (measured
+    # 0.6s at local[4] -> 2.9s at local[16] on a 400k-edge graph). Two
+    # fully-parallel jobs (count, then Arrow collect) beat one
+    # semi-serial one; when the pipeline checkpoints edges LAZILY, this
+    # count is also the job that materializes the cache, and a manifest
+    # row_count skips it altogether (edge_count).
+    n_edges = edge_count if edge_count is not None else edges.count()
+    if stats_out is not None:
+        stats_out["n_edges"] = n_edges
+    if n_edges <= auto_driver_max_edges(edges.sparkSession):
+        probe = edges.select("id_1", "id_2").toPandas()
+        return _driver_union_find_pdf(probe, edges.sparkSession, stats_out)
     bidir = (
         edges.select(F.col("id_1").alias("src"), F.col("id_2").alias("dst"))
         .union(edges.select(F.col("id_2").alias("src"), F.col("id_1").alias("dst")))
@@ -133,7 +122,7 @@ def connected_components(edges: DataFrame,
     )
     base_ckpts = [_checkpoint_rdd(bidir), _checkpoint_rdd(labels)]
     try:
-        labels = _frontier_rounds(bidir, labels, MAX_CC_ROUNDS)
+        labels = _propagate(bidir, labels)
     finally:
         # converged labels are checkpoint-backed (and on the error path the
         # caller gets none) -> edge/init blocks are free-able; without the
@@ -141,21 +130,9 @@ def connected_components(edges: DataFrame,
         # full-graph-sized block sets in the long-lived session
         for c in base_ckpts:
             _free_rdd(c)
-    out = labels.select("id", F.col("comp").alias("component"))
-    if with_sizes:
-        from pyspark.sql import Window
-
-        out = out.withColumn(
-            "_csize", F.count(F.lit(1)).over(Window.partitionBy("component"))
-        )
-    return out
-
-
-# frontier fraction above which the adaptive distributed loop hands off to
-# classic all-nodes rounds (see _frontier_rounds): >90% of nodes still
-# changing after the grace rounds means the frontier machinery is pure
-# overhead on top of a full-graph round
-_FRONTIER_SWITCH = 0.9
+    return labels.select("id", F.col("comp").alias("component")).withColumn(
+        "_csize", F.count(F.lit(1)).over(Window.partitionBy("component"))
+    )
 
 _PRIVATE_API_WARNED: set = set()
 
@@ -182,7 +159,7 @@ def _warn_private_api_fallback(which: str) -> None:
 
 def _checkpoint_rdd(df: DataFrame):
     """JVM RDD backing a ``localCheckpoint()``-ed DataFrame (LogicalRDD.rdd)
-    so the iterative loops can free the PREVIOUS round's blocks as soon as
+    so the loop can free the PREVIOUS round's blocks as soon as
     the next round is materialized. Without this the rounds leak one full
     label-table cache each (nothing references it, but driver GC +
     ContextCleaner reclaim lazily) — measured: the 16M-edge chain bench
@@ -233,145 +210,119 @@ def _rebase(df: DataFrame) -> DataFrame:
         return df
 
 
-def _classic_rounds(bidir: DataFrame, labels: DataFrame,
-                    max_rounds: int, inherited_ckpt=None) -> DataFrame:
-    """All-nodes min-label rounds: every round re-aggregates EVERY node
-    (the high-diameter regime the frontier loop hands off to).
+def _propagate(bidir: DataFrame, labels: DataFrame) -> DataFrame:
+    """Min-label rounds over bidir (src, dst) from (id, comp=id) labels to
+    the converged (id, comp); each round body returns (id, comp, _chg).
 
-    ``inherited_ckpt``: the caller's last round's checkpoint blocks (the
-    adaptive frontier handoff) — freed once this loop's first round is
-    materialized, same lifecycle as this loop's own rounds."""
-    prev_ckpt = inherited_ckpt
+    Rounds start in frontier form (`_frontier_round`): once most labels
+    freeze, the per-round joins see a small build side that AQE turns into
+    map-side joins (measured 1.33x over classic rounds on clique-shaped
+    dedup graphs, BENCH/NOTES.md). On high-diameter graphs nearly every
+    node changes every round and frontier rounds lose ~1.38x, so from round
+    2 on a frontier still above ``_FRONTIER_SWITCH`` of all nodes switches
+    the loop to `_classic_round` for good (same output: min-label
+    propagation converges from any intermediate label state). The node
+    count is taken only when that test first needs it.
+
+    The change count is the one job per round: it materializes the lazy
+    checkpoint, after which the previous round is freed and `_rebase`
+    drops the chained plan stats. Labels only decrease, so the loop
+    terminates; `MAX_CC_ROUNDS` is the assert-style backstop.
+    """
+    n_nodes = None
+    frontier = True
+    changed = labels            # round 0: everyone announces its own id
+    prev_ckpt = None
     try:
-        for _ in range(max_rounds):
-            # 1. neighbor-min: every node adopts min(comp) over itself +
-            # neighbors. The node's OWN previous label rides along (own=true)
-            # so convergence falls out of the same aggregation — no per-round
-            # join-with-old-labels probe job (that probe was one join + count
-            # job per round, a fixed serial term that scales on no hardware).
-            neighbor_labels = bidir.join(
-                labels.withColumnRenamed("id", "dst"), "dst"
-            ).select(F.col("src").alias("id"), "comp")
-            tagged = labels.select(
-                "id", "comp", F.lit(True).alias("own")
-            ).unionByName(neighbor_labels.withColumn("own", F.lit(False)))
-            merged = tagged.groupBy("id").agg(
-                F.min("comp").alias("comp"),
-                # every id has exactly one own=true row (its previous label)
-                F.max(F.when(F.col("own"), F.col("comp"))).alias("old"),
-            )
-            # 2. pointer jumping: comp(v) <- comp(comp(v)) — halves chain depth
-            jump = merged.select(
-                F.col("id").alias("comp"), F.col("comp").alias("comp2"))
-            compressed = merged.join(jump, "comp", "left").select(
-                "id", F.coalesce("comp2", "comp").alias("comp"), "old"
-            )
-            # lazy checkpoint: the convergence count below is the action that
-            # materializes the round's result — one job per round instead of
-            # eager-checkpoint + probe (two)
-            compressed = compressed.localCheckpoint(eager=False)
-            changed = compressed.where(F.col("comp") != F.col("old")).count()
-            # this round is materialized -> last round's blocks are dead weight
+        for rnd in range(MAX_CC_ROUNDS):
+            upd = (_frontier_round(bidir, labels, changed, rnd == 0)
+                   if frontier else _classic_round(bidir, labels))
+            upd = upd.localCheckpoint(eager=False)
+            n_changed = upd.where("_chg").count()
             _free_rdd(prev_ckpt)
-            prev_ckpt = _checkpoint_rdd(compressed)
-            # drop the origin-stats chain BEFORE the next round builds on it
-            labels = _rebase(compressed).select("id", "comp")
-            if changed == 0:
+            prev_ckpt = _checkpoint_rdd(upd)
+            upd = _rebase(upd)
+            labels = upd.select("id", "comp")
+            if n_changed == 0:
                 return labels
+            if frontier:
+                changed = upd.where("_chg").select("id", "comp")
+                if rnd >= 2:
+                    if n_nodes is None:
+                        n_nodes = labels.count()    # invariant across rounds
+                    frontier = n_changed <= _FRONTIER_SWITCH * n_nodes
     except BaseException:
-        # mid-round failure: the loop's own last materialized round would
-        # otherwise stay cached in the session (the caller never sees it)
+        # mid-round failure: the last materialized round would otherwise
+        # stay cached in the session (the caller never sees it)
         _free_rdd(prev_ckpt)
         raise
     _free_rdd(prev_ckpt)
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    raise RuntimeError(
+        f"connected_components did not converge in {MAX_CC_ROUNDS} rounds")
 
 
-def _frontier_rounds(bidir: DataFrame, labels: DataFrame,
-                     max_rounds: int) -> DataFrame:
-    """Frontier min-label rounds (large-star style): only nodes whose label
-    changed last round emit offers, so late rounds move O(frontier) data.
-
-    Per round, a node can improve two ways, both sourced from the frontier:
+def _frontier_round(bidir: DataFrame, labels: DataFrame, changed: DataFrame,
+                    first: bool) -> DataFrame:
+    """One frontier round -> (id, comp, _chg). `changed` = the (id, comp)
+    rows whose label changed last round; a node can improve two ways, both
+    sourced from it:
     - neighbor offer: u changed -> u's new label is offered to every
-      neighbor of u (round 0 the frontier is ALL nodes, so every node's
-      initial label is offered once — the classic first round);
+      neighbor of u (the first round the frontier is ALL nodes, so every
+      node's initial label is offered once — the classic first round);
     - pointer jump:   u changed -> every v with comp(v) == u adopts u's new
       label (path compression along the label pointer).
 
     Fixpoint argument: every label change re-broadcasts, so when the
     frontier empties, label(v) <= label(u) holds across every edge in both
     directions => labels are constant per component; own-id offers make the
-    constant the component min. Labels only decrease, so termination is
-    guaranteed; max_rounds is the assert-style backstop.
-
-    Scale shape: the two frontier joins key on dst / comp with the frontier
-    as the SMALL side — AQE's runtime broadcast switch turns late rounds
-    into narrow map-side joins over the (checkpointed) edge and label
-    tables, instead of the classic loop's full two-shuffle re-aggregation
-    of every node every round.
+    constant the component min.
     """
-    # Adaptive regime switch (VERDICT r5 #4): frontier rounds win when the
-    # frontier decays geometrically (clique-shaped dedup graphs, measured
-    # 1.33x) but LOSE ~1.38x on high-diameter graphs where nearly every
-    # node keeps changing every round — the frontier joins then move the
-    # full graph PLUS the pointer-jump join overhead. The signal is free:
-    # n_changed is already counted per round. After two grace rounds, a
-    # frontier still covering > _FRONTIER_SWITCH of all nodes hands the
-    # loop to _classic_rounds (identical output: min-label propagation
-    # converges from any intermediate label state). The node count is taken
-    # only when the handoff test first needs it (a graph that converges in
-    # fewer rounds never pays that job): a scan of the already-materialized
-    # round checkpoint, cheap next to one round.
-    n_nodes = None
-    changed = labels            # round 0: everyone announces its own id
-    prev_ckpt = None
-    try:
-        for rnd in range(max_rounds):
-            offers = bidir.join(
-                changed.withColumnRenamed("id", "dst"), "dst"
-            ).select(F.col("src").alias("id"), "comp")
-            if rnd:
-                jumps = labels.select("id", F.col("comp").alias("_ptr")).join(
-                    changed.select(F.col("id").alias("_ptr"), "comp"), "_ptr"
-                ).select("id", "comp")
-                offers = offers.unionByName(jumps)
-            # round 0's pointer jump is skipped: every pointer is still the
-            # identity, so it would be a full-size self-join producing no-ops
-            cand = offers.groupBy("id").agg(F.min("comp").alias("_new"))
-            upd = labels.join(cand, "id", "left").select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("_new", "comp")).alias("comp"),
-                (F.coalesce("_new", "comp") < F.col("comp")).alias("_chg"),
-            ).localCheckpoint(eager=False)  # lazy: the count materializes
-            n_changed = upd.where("_chg").count()
-            # this round is materialized -> last round's blocks are dead weight
-            _free_rdd(prev_ckpt)
-            prev_ckpt = _checkpoint_rdd(upd)
-            # drop the origin-stats chain BEFORE the next round builds on it
-            upd = _rebase(upd)
-            changed = upd.where("_chg").select("id", "comp")
-            labels = upd.select("id", "comp")
-            if n_changed == 0:
-                return labels
-            if rnd < 2:
-                continue
-            if n_nodes is None:
-                n_nodes = labels.count()    # invariant across rounds
-            if n_changed > _FRONTIER_SWITCH * n_nodes:
-                # high-diameter regime: hand the checkpoint blocks to the
-                # classic loop (freed after its first materialized round)
-                return _classic_rounds(bidir, labels, max_rounds - rnd - 1,
-                                       inherited_ckpt=prev_ckpt)
-    except BaseException:
-        _free_rdd(prev_ckpt)    # see _classic_rounds: don't strand the round
-        raise
-    _free_rdd(prev_ckpt)
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    offers = bidir.join(
+        changed.withColumnRenamed("id", "dst"), "dst"
+    ).select(F.col("src").alias("id"), "comp")
+    # the first round's pointer jump is skipped: every pointer is still the
+    # identity, so it would be a full-size self-join producing no-ops
+    if not first:
+        jumps = labels.select("id", F.col("comp").alias("_ptr")).join(
+            changed.select(F.col("id").alias("_ptr"), "comp"), "_ptr"
+        ).select("id", "comp")
+        offers = offers.unionByName(jumps)
+    cand = offers.groupBy("id").agg(F.min("comp").alias("_new"))
+    return labels.join(cand, "id", "left").select(
+        "id",
+        F.least(F.col("comp"), F.coalesce("_new", "comp")).alias("comp"),
+        (F.coalesce("_new", "comp") < F.col("comp")).alias("_chg"),
+    )
 
 
-def _driver_union_find_pdf(pdf, spark, with_sizes: bool = False,
-                           stats_out: dict | None = None) -> DataFrame:
+def _classic_round(bidir: DataFrame, labels: DataFrame) -> DataFrame:
+    """One all-nodes round -> (id, comp, _chg): every node re-aggregates
+    (the high-diameter regime `_propagate` switches to)."""
+    # 1. neighbor-min: every node adopts min(comp) over itself + neighbors.
+    # The node's OWN previous label rides along (own=true) so the change
+    # flag falls out of the same aggregation — no join-with-old-labels
+    # probe job per round.
+    neighbor_labels = bidir.join(
+        labels.withColumnRenamed("id", "dst"), "dst"
+    ).select(F.col("src").alias("id"), "comp")
+    tagged = labels.select(
+        "id", "comp", F.lit(True).alias("own")
+    ).unionByName(neighbor_labels.withColumn("own", F.lit(False)))
+    merged = tagged.groupBy("id").agg(
+        F.min("comp").alias("comp"),
+        # every id has exactly one own=true row (its previous label)
+        F.max(F.when(F.col("own"), F.col("comp"))).alias("old"),
+    )
+    # 2. pointer jumping: comp(v) <- comp(comp(v)) — halves chain depth
+    jump = merged.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
+    return merged.join(jump, "comp", "left").select(
+        "id",
+        F.coalesce("comp2", "comp").alias("comp"),
+        (F.coalesce("comp2", "comp") != F.col("old")).alias("_chg"),
+    )
+
+
+def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None) -> DataFrame:
     """Vectorized min-label propagation with pointer jumping (numpy).
 
     Replaces the round-1 Python dict union-find: the per-edge interpreter
@@ -387,8 +338,7 @@ def _driver_union_find_pdf(pdf, spark, with_sizes: bool = False,
     if not len(pdf):
         if stats_out is not None:
             stats_out["max_component_size"] = 0
-        schema = "id long, component long" + (", _csize long" if with_sizes else "")
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], "id long, component long, _csize long")
     e1 = pdf["id_1"].to_numpy(dtype=np.int64)
     e2 = pdf["id_2"].to_numpy(dtype=np.int64)
     ids = np.unique(np.concatenate([e1, e2]))
@@ -405,10 +355,8 @@ def _driver_union_find_pdf(pdf, spark, with_sizes: bool = False,
             break
         labels = nxt
     out = pd.DataFrame({"id": ids, "component": ids[labels]})
-    if with_sizes or stats_out is not None:
-        counts = np.bincount(labels, minlength=ids.shape[0])
-        if with_sizes:
-            out["_csize"] = counts[labels].astype(np.int64)
-        if stats_out is not None:
-            stats_out["max_component_size"] = int(counts.max())
+    counts = np.bincount(labels, minlength=ids.shape[0])
+    out["_csize"] = counts[labels].astype(np.int64)
+    if stats_out is not None:
+        stats_out["max_component_size"] = int(counts.max())
     return spark.createDataFrame(out)

@@ -49,8 +49,7 @@ def greedy_set_cover(subsets: list, parent_set: set, recall: float = 1.0) -> lis
     return chosen
 
 
-def rule_coverage(pairs: DataFrame, y: DataFrame | None, col_names: list[str],
-                  rules=None) -> dict[int, set]:
+def rule_coverage(pairs: DataFrame, col_names: list[str]) -> dict[int, set]:
     """Distributed coverage evaluation: {rule_idx -> set of covered pair idx}.
 
     `pairs` columns: `{col}_1`, `{col}_2` per col in col_names, plus
@@ -58,11 +57,10 @@ def rule_coverage(pairs: DataFrame, y: DataFrame | None, col_names: list[str],
     A (col, rule) covers a pair when rule(col_1) == rule(col_2), both non-null
     (blocking.py:59-65).
     """
-    rules = rules if rules is not None else list(ALL_RULES)
     cover_cols = []
     idx = 0
     for col in col_names:
-        for rule in rules:
+        for rule in ALL_RULES:
             r1, r2 = rule(F.col(f"{col}_1")), rule(F.col(f"{col}_2"))
             cover_cols.append(
                 F.when(r1.isNotNull() & r2.isNotNull() & (r1 == r2), F.lit(idx))
@@ -79,11 +77,10 @@ def rule_coverage(pairs: DataFrame, y: DataFrame | None, col_names: list[str],
     return {int(r["rule_idx"]): set(r["covered"]) for r in rows}
 
 
-def select_rules(pairs: DataFrame, col_names: list[str], recall: float = 1.0,
-                 rules=None) -> list[tuple[str, int]]:
-    """Full fit: coverage + greedy cover -> [(col, rule_idx_within_col)]."""
-    rules = rules if rules is not None else list(ALL_RULES)
-    cov = rule_coverage(pairs, None, col_names, rules)
+def select_rules(pairs: DataFrame, col_names: list[str],
+                 recall: float = 1.0) -> list[tuple[str, int]]:
+    """Full fit: coverage + greedy cover -> [(col, ALL_RULES index)]."""
+    cov = rule_coverage(pairs, col_names)
     universe = set()
     for s in cov.values():
         universe |= s
@@ -95,8 +92,8 @@ def select_rules(pairs: DataFrame, col_names: list[str], recall: float = 1.0,
     for s in chosen:
         for i in order:
             if i not in used and cov[i] == s:
-                col = col_names[i // len(rules)]
-                out.append((col, i % len(rules)))
+                col = col_names[i // len(ALL_RULES)]
+                out.append((col, i % len(ALL_RULES)))
                 used.add(i)
                 break
     return out

@@ -152,24 +152,13 @@ def _verify_long_group(lb: bytes, shorts: list) -> list:
     return list(found)
 
 
-def _full_containment_rows(ids1, ids2, c1, c2, grouped: bool) -> tuple[list, list]:
+def _full_containment_rows(ids1, ids2, c1, c2) -> tuple[list, list]:
     """Full-containment (containment == 1.0) verify over pair lists.
 
     Returns (result_rows, leftover_indices): leftovers are the non-contained
     pairs, for the caller's partial-containment branch (if any).
     """
     rows, leftovers = [], []
-    if not grouped:
-        for j, (i1, i2, a, b) in enumerate(zip(ids1, ids2, c1, c2)):
-            a, b = (a or ""), (b or "")
-            if not a or not b:
-                continue
-            short, long_ = (a, b) if len(a) <= len(b) else (b, a)
-            if short in long_:
-                rows.append((i1, i2, 1.0))
-            else:
-                leftovers.append(j)
-        return rows, leftovers
     by_long: dict = {}
     for j, (i1, i2, a, b) in enumerate(zip(ids1, ids2, c1, c2)):
         a, b = (a or ""), (b or "")
@@ -284,18 +273,17 @@ def _partial_containment_rows(pairs: list, min_containment: float) -> list:
 def containment_pairs(
     candidates: DataFrame, files: DataFrame,
     id_col: str = "file_id", content_col: str = "content",
-    min_containment: float = 1.0, grouped: bool = True,
+    min_containment: float = 1.0,
 ) -> DataFrame:
     """Verify containment for candidate pairs: emits pairs where the shorter
     content occurs inside the longer (containment=1.0), or — when
     min_containment < 1 — where the longest common prefix/suffix covers that
     fraction of the shorter string.
 
-    ``grouped=True`` (default) verifies full containment with the anchored
-    rolling-hash pass above — each container is scanned once per Arrow
-    batch for all its candidate containees; ``grouped=False`` keeps the
-    per-pair C ``str.find`` loop (also the in-group fallback for small
-    groups). Identical output either way."""
+    Full containment is verified with the anchored rolling-hash pass above
+    — each container is scanned once per Arrow batch for all its candidate
+    containees; small groups and short containers fall back to a per-pair
+    C ``str.find`` (exact either way)."""
     from deduplipy_spark.operators.pairs import with_pair_sides
 
     joined = with_pair_sides(candidates, files, [content_col], id_col)
@@ -305,7 +293,7 @@ def containment_pairs(
         ids2 = batch["id_2"].tolist()
         c1 = batch[f"{content_col}_1"].tolist()
         c2 = batch[f"{content_col}_2"].tolist()
-        rows, leftovers = _full_containment_rows(ids1, ids2, c1, c2, grouped)
+        rows, leftovers = _full_containment_rows(ids1, ids2, c1, c2)
         if min_containment < 1.0 and leftovers:
             rows.extend(_partial_containment_rows(
                 [(ids1[j], ids2[j], (c1[j] or ""), (c2[j] or ""))

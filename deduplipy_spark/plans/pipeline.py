@@ -347,9 +347,6 @@ class DedupPipeline:
         manifest's) — skips the CC size-gate count.
         """
         cfg = self.cfg
-        # with_sizes: the HAC stage gates its oversized-component split on
-        # _csize; folding the size into this (already-materialized) output
-        # retires a per-run sizes groupBy+join+isEmpty job (VERDICT r2 #3)
         # cc_stats: the driver-CC path already knows the max component size
         # (one bincount); threading it through lets cluster_components skip
         # its big-component isEmpty probe — one driver job + two planning
@@ -359,9 +356,7 @@ class DedupPipeline:
         cc_stats: dict = {}
         comps = self._stage(
             "components",
-            lambda: connected_components(scored, cfg.driver_cc_max_edges,
-                                         with_sizes=True,
-                                         edge_count=n_edges,
+            lambda: connected_components(scored, edge_count=n_edges,
                                          stats_out=cc_stats),
         )
         return self._stage(

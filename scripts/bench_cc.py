@@ -1,13 +1,14 @@
 """Microbench: the distributed connected-components loop (VERDICT r4 #7).
 
-Two synthetic shapes at ~16M edges, driver path disabled so the
-distributed loop runs:
+Two synthetic shapes at ~16M edges, the driver-CC cutoff
+(``components.auto_driver_max_edges``) patched to 0 so the distributed
+loop runs:
 
 - "lsh":    the realistic dedup graph — many small cliques (low diameter,
             converges in ~3 frontier rounds).
 - "chain":  long paths (high diameter, many rounds) — every label keeps
-            changing, so the adaptive loop hands off from frontier to
-            classic rounds.
+            changing, so the loop switches from frontier to classic
+            rounds.
 
 Each shape times the shipped loop best-of-2 and checks its component
 count against the driver union-find path on the same edges.
@@ -28,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from deduplipy_spark.operators import components
 from deduplipy_spark.operators.components import (
     _checkpoint_rdd,
     connected_components,
@@ -104,16 +106,18 @@ def main() -> None:
         # best-of-2: single samples on a multi-tenant host are not
         # comparable (BENCH/NOTES.md)
         best = None
+        components.auto_driver_max_edges = lambda s: 0
         for _ in range(2):
             s0, t0 = _steal(), time.monotonic()
-            out = connected_components(e, driver_max_edges=0)
+            out = connected_components(e, edge_count=n)
             n_comp = out.select("component").distinct().count()
             dt = time.monotonic() - t0
             _drop_finished_caches(spark, keep=e)
             if best is None or dt < best["wall_sec"]:
                 best = {"wall_sec": round(dt, 2), "steal": _steal() - s0,
                         "components": n_comp}
-        driver = (connected_components(e, driver_max_edges=n)
+        components.auto_driver_max_edges = lambda s: n
+        driver = (connected_components(e, edge_count=n)
                   .select("component").distinct().count())
         print(json.dumps({"shape": shape, "edges": n, **best}), flush=True)
         assert best["components"] == driver, (best["components"], driver)

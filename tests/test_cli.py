@@ -31,3 +31,13 @@ def test_run_model_rejects_config_flags(tmp_path, capsys, flags):
               "--model", str(tmp_path / "model.json"), *flags])
     assert e.value.code == 2
     assert flags[0] in capsys.readouterr().err
+
+
+def test_run_rejects_invalid_config_before_spark(tmp_path, capsys):
+    """An invalid config value is a usage error (exit 2, naming the field),
+    not a run that puts every non-empty file in one cluster."""
+    with pytest.raises(SystemExit) as e:
+        main(["run", "--input", str(tmp_path / "in"),
+              "--output", str(tmp_path / "out"), "--shingle-k", "0"])
+    assert e.value.code == 2
+    assert "shingle_k" in capsys.readouterr().err

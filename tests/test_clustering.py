@@ -19,7 +19,8 @@ from deduplipy_spark.operators.agglomerate import (
     fill_missing_links,
     hierarchical_cluster_component,
 )
-from deduplipy_spark.operators.components import _classic_rounds, connected_components
+from deduplipy_spark.operators import components as C
+from deduplipy_spark.operators.components import connected_components
 
 FIXTURE = pd.DataFrame(
     [(0, 1, 0.90), (0, 2, 0.10), (0, 3, 0.10), (0, 4, 0.10), (1, 2, 0.10),
@@ -29,14 +30,12 @@ FIXTURE = pd.DataFrame(
 FIXTURE_EDGES = tuple(FIXTURE[c].to_numpy() for c in ("id_1", "id_2", "score"))
 
 
-def _bidir_labels(edges):
-    """(src, dst) both ways + (id, comp=id), checkpointed: the start state
-    that connected_components hands its distributed rounds."""
-    bidir = edges.selectExpr("id_1 as src", "id_2 as dst").union(
-        edges.selectExpr("id_2 as src", "id_1 as dst")).distinct().localCheckpoint()
-    labels = bidir.selectExpr("src as id").distinct().selectExpr(
-        "id", "id as comp").localCheckpoint()
-    return bidir, labels
+def _distributed(monkeypatch, switch):
+    """Force connected_components onto the distributed loop (cutoff 0) at
+    frontier-switch fraction `switch`: 2.0 never leaves frontier rounds,
+    -1.0 switches to classic rounds at round 2."""
+    monkeypatch.setattr(C, "auto_driver_max_edges", lambda s: 0)
+    monkeypatch.setattr(C, "_FRONTIER_SWITCH", switch)
 
 
 def partitions(ids, labels):
@@ -77,7 +76,7 @@ def test_fill_missing_links_no_missing_noop():
     np.testing.assert_almost_equal(res, matrix, decimal=2)
 
 
-def test_connected_components_vs_networkx(spark):
+def test_connected_components_vs_networkx(spark, monkeypatch):
     import networkx as nx
     import random
 
@@ -91,10 +90,6 @@ def test_connected_components_vs_networkx(spark):
     for i in range(1000, 1060):
         edges.add((i, i + 1))
     edf = spark.createDataFrame(sorted(edges), "id_1 long, id_2 long")
-    # exercise BOTH paths: the distributed loop and the driver union-find
-    got = connected_components(edf, driver_max_edges=0).toPandas()
-    got_driver = connected_components(edf).toPandas()
-
     g = nx.Graph()
     g.add_edges_from(edges)
     want = {}
@@ -102,47 +97,61 @@ def test_connected_components_vs_networkx(spark):
         rep = min(comp)
         for v in comp:
             want[v] = rep
-    got_map = dict(zip(got.id, got.component))
-    assert got_map == want
+    # exercise every path: the driver union-find, the distributed loop at
+    # its shipped switch, and with the switch to classic rounds forced
+    got_driver = connected_components(edf).toPandas()
     assert dict(zip(got_driver.id, got_driver.component)) == want
-    # the classic all-nodes rounds (the frontier loop's handoff target)
-    # must agree exactly too
-    got_classic = _classic_rounds(*_bidir_labels(edf), max_rounds=50).toPandas()
-    assert dict(zip(got_classic.id, got_classic.comp)) == want
+    for switch in (C._FRONTIER_SWITCH, -1.0):
+        _distributed(monkeypatch, switch)
+        got = connected_components(edf).toPandas()
+        assert dict(zip(got.id, got.component)) == want, switch
 
 
-def test_adaptive_frontier_handoff_on_chains(spark):
+def test_adaptive_frontier_handoff_on_chains(spark, monkeypatch):
     """r6: on a high-diameter graph the frontier loop's change fraction
-    stays ~1.0, so after the grace rounds it must HAND OFF to classic
+    stays ~1.0, so after the grace rounds it must switch to classic
     rounds (_FRONTIER_SWITCH) and still converge to exactly the right
-    labels. Pure chains guarantee the handoff path executes (every node
-    keeps changing until its chain converges)."""
+    labels. Pure chains guarantee the switch happens (every node keeps
+    changing until its chain converges)."""
     rows = []
     for c in range(3):
         base = c * 1000
         rows += [(base + i, base + i + 1) for i in range(200)]
     edf = spark.createDataFrame(rows, "id_1 long, id_2 long")
-    got = connected_components(edf, driver_max_edges=0).toPandas()
+    _distributed(monkeypatch, C._FRONTIER_SWITCH)
+    classic = []
+    orig = C._classic_round
+
+    def counted(*a):
+        classic.append(1)
+        return orig(*a)
+
+    monkeypatch.setattr(C, "_classic_round", counted)
+    got = connected_components(edf).toPandas()
+    assert classic, "the loop never switched to classic rounds"
     assert len(got) == 3 * 201
     assert (got.component == (got.id // 1000) * 1000).all()
 
 
-def test_frontier_rounds_count_nodes_only_for_handoff(spark):
-    """The node count feeds only the handoff test from round 2 on: a graph
+def test_frontier_rounds_count_nodes_only_for_handoff(spark, monkeypatch):
+    """The node count feeds only the switch test from round 2 on: a graph
     that converges by round 2 must not pay that driver job."""
-    from deduplipy_spark.operators.components import _frontier_rounds
-
     # a star converges in round 1, the 3-chain in round 2
     rows = [(0, i) for i in range(1, 6)] + [(10, 11), (11, 12)]
     bidir = spark.createDataFrame(rows + [(b, a) for a, b in rows],
                                   "src long, dst long")
     labels = bidir.selectExpr("src as id").distinct().selectExpr("id", "id as comp")
+    frame_cls = type(labels)        # the class that implements count()
+    real_count = frame_cls.count
 
-    def no_count():
-        raise AssertionError("node count on a graph converged by round 2")
+    def count(df):
+        # the change counts run on (id, comp, _chg); the node count on labels
+        if df.columns == ["id", "comp"]:
+            raise AssertionError("node count on a graph converged by round 2")
+        return real_count(df)
 
-    labels.count = no_count
-    got = _frontier_rounds(bidir, labels, max_rounds=10).toPandas()
+    monkeypatch.setattr(frame_cls, "count", count)
+    got = C._propagate(bidir, labels).toPandas()
     assert dict(zip(got.id, got.comp)) == {
         **{i: 0 for i in range(6)}, 10: 10, 11: 10, 12: 10}
 
@@ -150,7 +159,7 @@ def test_frontier_rounds_count_nodes_only_for_handoff(spark):
 def test_cluster_components_spark_matches_local(spark):
     cfg = EngineConfig(cluster_threshold=0.5)
     scored = spark.createDataFrame(FIXTURE, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, with_sizes=True)
+    comps = connected_components(scored)
     out = cluster_components(scored, comps, cfg).toPandas().sort_values("id")
     assert partitions(out.id, out.cluster_id) == [
         frozenset({0, 1}), frozenset({2}), frozenset({3}), frozenset({4})
@@ -180,7 +189,7 @@ def test_pack_style_split_of_oversized_component(spark):
         if c:                               # weak bridge to previous clique
             rows.append((base - 1, base, 0.15))
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, with_sizes=True)
+    comps = connected_components(scored)
     assert comps.select("component").distinct().count() == 1   # one giant comp
     out = cluster_components(scored, comps, cfg).toPandas()
     assert len(out) == n_clusters * size
@@ -202,7 +211,7 @@ def test_pack_split_keeps_weak_only_nodes_as_singletons(spark):
     # 5-node component: strong triangle {0,1,2}; 3 and 4 attached weakly
     rows = [(0, 1, 0.9), (1, 2, 0.9), (0, 2, 0.9), (2, 3, 0.2), (3, 4, 0.2)]
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, with_sizes=True)
+    comps = connected_components(scored)
     out = cluster_components(scored, comps, cfg).toPandas().set_index("id")
     assert out.cluster_id.loc[[0, 1, 2]].nunique() == 1
     assert out.cluster_id.loc[3] == 3 and out.cluster_id.loc[4] == 4
@@ -213,7 +222,7 @@ def test_component_size_cap(spark):
     # a 10-node clique -> capped, single cluster
     rows = [(i, j, 0.9) for i in range(10) for j in range(i + 1, 10)]
     scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
-    comps = connected_components(scored, with_sizes=True)
+    comps = connected_components(scored)
     out = cluster_components(scored, comps, cfg).toPandas()
     assert out.capped.all()
     assert (out.cluster_id == 0).all()
@@ -222,8 +231,6 @@ def test_component_size_cap(spark):
 def test_auto_driver_max_edges_scales_with_heap():
     """VERDICT r3 #7: the driver-CC cutoff derives from the driver heap
     (edges <= heap/512, floor 1M) instead of a fixed constant."""
-    from deduplipy_spark.operators import components as C
-
     assert C._mem_bytes("12g") == 12 << 30
     assert C._mem_bytes("512m") == 512 << 20
     assert C._mem_bytes("1024k") == 1 << 20
@@ -244,11 +251,9 @@ def test_auto_driver_max_edges_scales_with_heap():
 
 
 def test_small_heap_engages_distributed_cc(spark, monkeypatch):
-    """driver_max_edges=None wires through auto_driver_max_edges: with a
-    (simulated) tiny heap the driver union-find must NOT run — the
-    distributed min-label loop produces the components."""
-    from deduplipy_spark.operators import components as C
-
+    """The cutoff comes from auto_driver_max_edges: with a (simulated) tiny
+    heap the driver union-find must NOT run — the distributed min-label
+    loop produces the components."""
     monkeypatch.setattr(C, "auto_driver_max_edges", lambda s: 1)
 
     def boom(*a, **kw):
@@ -258,16 +263,14 @@ def test_small_heap_engages_distributed_cc(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_1 long, id_2 long")
     out = {r.id: r.component
-           for r in C.connected_components(edges, driver_max_edges=None).collect()}
+           for r in C.connected_components(edges).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_default_driver_max_edges_is_heap_derived(spark, monkeypatch):
-    """VERDICT r4 #4: the SIGNATURE default is None -> heap-derived, so a
+    """VERDICT r4 #4: the cutoff is heap-derived on every call, so a
     standalone caller (no EngineConfig) gets auto_driver_max_edges too,
     not a stale literal."""
-    from deduplipy_spark.operators import components as C
-
     calls = []
 
     def fake_auto(s):
@@ -282,17 +285,13 @@ def test_default_driver_max_edges_is_heap_derived(spark, monkeypatch):
     assert out == {1: 1, 2: 1, 3: 1}
 
 
-def test_distributed_rounds_keep_plan_stats_bounded(spark):
+def test_distributed_rounds_keep_plan_stats_bounded(spark, monkeypatch):
     """Catalyst preserves origin-plan STATISTICS through localCheckpoint,
     so per-round checkpoints chain the size estimates multiplicatively
     (~size^(2^round)) — on ~14-round graphs the driver then burns minutes
     per round multiplying >100k-digit BigIntegers inside stats visits
     (BENCH/NOTES.md round 5). _rebase must keep the final labels' estimate
     at a bounded magnitude no matter how many rounds ran."""
-    import pandas as pd
-
-    from deduplipy_spark.operators.components import connected_components
-
     # 4 chains x 33 nodes: needs ~6 doubling rounds — enough that an
     # unbounded estimate chain would exceed the threshold below by orders
     # of magnitude (the probe measured ~3 digits/round growth minimum)
@@ -300,11 +299,12 @@ def test_distributed_rounds_keep_plan_stats_bounded(spark):
     edges = spark.createDataFrame(
         pd.DataFrame(rows, columns=["id_1", "id_2"]))
     want = {c * 64 + i: c * 64 for c in range(4) for i in range(33)}
-    for name, out in (
-        ("frontier", connected_components(edges, driver_max_edges=0)),
-        ("classic", _classic_rounds(*_bidir_labels(edges), max_rounds=50)),
-    ):
-        got = {r[0]: r[1] for r in out.collect()}    # (id, component label)
+    # frontier-only, and switched to classic rounds at round 2: at the
+    # shipped switch both would run the same rounds on these chains
+    for name, switch in (("frontier", 2.0), ("classic", -1.0)):
+        _distributed(monkeypatch, switch)
+        out = connected_components(edges)
+        got = {r[0]: r[1] for r in out.collect()}    # (id, component, _csize)
         assert got == want, name
         size = int(
             out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

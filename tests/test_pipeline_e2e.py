@@ -156,17 +156,19 @@ def test_pipeline_cuts_follow_one_rule(spark, partitions):
     pipe.close()
 
 
-def test_pipeline_distributed_cc_matches_driver_path(spark):
-    """Run the FULL pipeline with the driver-CC shortcut disabled
-    (driver_cc_max_edges=0), so the components stage takes the distributed
-    frontier loop in situ — including the with_sizes window that gates the
-    HAC oversized-component split, which no oracle row exercises on the
-    distributed path. Cluster assignment must be identical to the default
+def test_pipeline_distributed_cc_matches_driver_path(spark, monkeypatch):
+    """Run the FULL pipeline with the driver-CC cutoff patched to 0, so the
+    components stage takes the distributed frontier loop in situ —
+    including the _csize window that gates the HAC oversized-component
+    split, which no oracle row exercises on the distributed path. Cluster assignment must be identical to the default
     (driver union-find) run: SURVEY §1.3.5 partition equality, min-id ids."""
     files = gen_files(spark, 300, 30, 5, partitions=8)
     base = (DedupPipeline(spark, EngineConfig()).run(files)
             .toPandas().sort_values("file_id", ignore_index=True))
-    dist = (DedupPipeline(spark, EngineConfig(driver_cc_max_edges=0))
+    from deduplipy_spark.operators import components
+
+    monkeypatch.setattr(components, "auto_driver_max_edges", lambda s: 0)
+    dist = (DedupPipeline(spark, EngineConfig())
             .run(files).toPandas().sort_values("file_id", ignore_index=True))
     pd.testing.assert_frame_equal(base, dist)
     assert base.cluster_id.nunique() < len(base)   # real merges happened

@@ -62,18 +62,20 @@ def test_config_change_invalidates_checkpoints(spark):
     assert os.path.getmtime(sig_manifest) > mtime_before   # recomputed
 
     # execution-only change does NOT invalidate
-    cfg3 = EngineConfig(checkpoint_dir=tmp, shingle_k=9, driver_cc_max_edges=0)
+    cfg3 = EngineConfig(checkpoint_dir=tmp + "/elsewhere", shingle_k=9)
     assert cfg2.config_hash() == cfg3.config_hash()
 
 
 def test_load_model_with_removed_shuffle_partitions(tmp_path):
     """Model JSON saved while EngineConfig still had the (never hashed)
-    shuffle_partitions field loads to the same config_hash."""
+    shuffle_partitions and driver_cc_max_edges fields loads to the same
+    config_hash."""
     from deduplipy_spark.deduplicator import Deduplicator
 
     Deduplicator(col_names=["name"]).save(str(tmp_path / "new.json"))
     blob = json.loads((tmp_path / "new.json").read_text())
     blob["config"]["shuffle_partitions"] = 32
+    blob["config"]["driver_cc_max_edges"] = 0
     (tmp_path / "old.json").write_text(json.dumps(blob))
 
     new = Deduplicator.load(str(tmp_path / "new.json"))

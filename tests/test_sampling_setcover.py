@@ -36,7 +36,7 @@ def test_select_rules_blocking_fixture(spark):
     from deduplipy_spark.functions.blocking_rules import ALL_RULES
     from deduplipy_spark.operators.set_cover import rule_coverage
 
-    cov = rule_coverage(pairs, None, ["name"])
+    cov = rule_coverage(pairs, ["name"])
     idx_of = {(c, i): c_i for c_i, (c, i) in
               enumerate((col, j) for col in ["name"] for j in range(len(ALL_RULES)))}
     covered = set()
