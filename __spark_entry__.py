@@ -290,8 +290,8 @@ def q_pair_mean_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocker = RuleBlocker({"content": [first_two_words]})
     cands = blocker.pairs(docs, EngineConfig(band_cap=100000))
     # two-step projection (r6): materialize the trimmed split once per row
-    # — word_ngrams' embedded split otherwise re-runs per gram inside the
-    # transform lambda (no CSE in lambda bodies); output identical
+    # — a split embedded in the per-gram transform lambda would re-run per
+    # gram (no CSE in lambda bodies); output identical
     feats = docs.select(
         "file_id",
         F.length(F.regexp_replace(F.col("content"), r"^\s+|\s+$", ""))

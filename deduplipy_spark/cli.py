@@ -24,7 +24,6 @@ import time
 
 def _add_config_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--shingle-k", type=int, default=None)
-    p.add_argument("--num-perm", type=int, default=None)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--rows-per-band", type=int, default=None)
     p.add_argument("--band-cap", type=int, default=None)
@@ -45,7 +44,7 @@ def _config_from(args) -> "EngineConfig":
 
     overrides = {
         f: getattr(args, f) for f in (
-            "shingle_k", "num_perm", "bands", "rows_per_band", "band_cap",
+            "shingle_k", "bands", "rows_per_band", "band_cap",
             "pair_strategy", "score_threshold", "cluster_threshold")
         if getattr(args, f) is not None
     }

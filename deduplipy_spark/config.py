@@ -39,7 +39,6 @@ class EngineConfig:
     # at quadratic pair volume — measured: 3.1M spurious vs 59k real pairs
     # on the 100k synthetic corpus)
     shingle_k: int = 7              # char-shingle width
-    num_perm: int = 128             # MinHash permutations = bands * rows_per_band
     bands: int = 16
     rows_per_band: int = 8
     minhash_seed: int = 42
@@ -75,11 +74,6 @@ class EngineConfig:
         if self.pair_strategy not in ("capped", "exact"):
             raise ValueError(f"pair_strategy must be 'capped' or 'exact', "
                              f"got {self.pair_strategy!r}")
-        if self.bands * self.rows_per_band != self.num_perm:
-            raise ValueError(
-                f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) must equal "
-                f"num_perm ({self.num_perm})"
-            )
         if self.num_perm & (self.num_perm - 1):
             import warnings
 
@@ -88,26 +82,29 @@ class EngineConfig:
             # power of two permanently empty — always densified duplicates
             # of lower bins, inflating false-positive band collisions
             warnings.warn(
-                f"num_perm={self.num_perm} is not a power of two: the "
-                f"one-permutation kernel's slots above "
+                f"num_perm = bands*rows_per_band = {self.num_perm} is not a "
+                f"power of two: the one-permutation kernel's slots above "
                 f"{1 << (self.num_perm.bit_length() - 1)} carry no independent "
-                f"information; use a power-of-two num_perm",
+                f"information; use a power-of-two bands*rows_per_band",
                 stacklevel=2,
             )
+
+    @property
+    def num_perm(self) -> int:
+        """MinHash signature width: one slot per (band, row)."""
+        return self.bands * self.rows_per_band
 
     def config_hash(self) -> str:
         """Stable hash over semantic fields (checkpoint manifests key on this)."""
         d = asdict(self)
         d.pop("checkpoint_dir", None)       # location doesn't change semantics
         d.pop("save_intermediate_steps", None)
+        # num_perm was a field until it became derived; hashing it keeps
+        # every checkpoint written before that change resumable
+        d["num_perm"] = self.num_perm
         d["_kernel_version"] = KERNEL_VERSION
         blob = json.dumps(d, sort_keys=True, default=str).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
-
-    @property
-    def lsh_threshold(self) -> float:
-        """Approximate Jaccard threshold of the (bands, rows) LSH scheme: (1/b)^(1/r)."""
-        return (1.0 / self.bands) ** (1.0 / self.rows_per_band)
 
 
 DEFAULT_CONFIG = EngineConfig()

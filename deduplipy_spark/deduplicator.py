@@ -288,6 +288,9 @@ class Deduplicator:
         # fields were removed still carry them; neither entered the hash
         c.pop("shuffle_partitions", None)
         c.pop("driver_cc_max_edges", None)
+        # ... and models saved while num_perm was a field carry it; it is
+        # now bands*rows_per_band, the only value the field ever allowed
+        num_perm = c.pop("num_perm", None)
         # models saved while the strategy was a Deduplicator attribute
         # carry it at the top level
         c.setdefault("pair_strategy", blob.get("pair_strategy", "capped"))
@@ -299,7 +302,12 @@ class Deduplicator:
                 raise ValueError(
                     f"{path}: config {key}={v!r} is no longer supported "
                     f"(only {only!r} is); refit the model")
-        dd = cls(col_names=blob["col_names"], config=EngineConfig(**c),
+        cfg = EngineConfig(**c)
+        if num_perm is not None and num_perm != cfg.num_perm:
+            raise ValueError(
+                f"{path}: saved config num_perm {num_perm!r} must equal "
+                f"bands*rows_per_band ({cfg.num_perm}); refit the model")
+        dd = cls(col_names=blob["col_names"], config=cfg,
                  field_info=blob.get("field_info"),
                  interaction=bool(blob.get("interaction", False)))
         dd.rules_selected = (

@@ -188,16 +188,6 @@ class NumpyLogit:
             "interaction": self.interaction,
         }
 
-    @classmethod
-    def from_params(cls, p: dict) -> "NumpyLogit":
-        m = cls(interaction=bool(p.get("interaction", False)))
-        m.mean_ = np.asarray(p["mean"], dtype=float)
-        m.std_ = np.asarray(p["std"], dtype=float)
-        m.coef_ = np.asarray(p["coef"], dtype=float)
-        m.intercept_ = float(p["intercept"])
-        m.fitted = True
-        return m
-
 
 def score_expr(params: dict, sim_col: str = "similarities") -> Column:
     """sigmoid(intercept + coef . features) as a pure Column expression —

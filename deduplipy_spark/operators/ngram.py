@@ -15,12 +15,11 @@ from pyspark.sql import functions as F
 
 
 def split_words(x: Column) -> Column:
-    """Trimmed whitespace split — the shared words array. Materialize this
-    in its OWN projection before calling `word_ngrams_from` on the
-    resulting column: lambda bodies get no common-subexpression
-    elimination, so a split referenced inside the per-gram transform
-    re-runs the regex split for every gram (the r6 text.py finding —
-    measured ~15x on the gram stage there)."""
+    """Trimmed whitespace split — the words array `word_ngrams_from` takes.
+    Always materialize it in its OWN projection first: lambda bodies get
+    no common-subexpression elimination, so a split referenced inside the
+    per-gram transform re-runs the regex split for every gram (the r6
+    text.py finding — measured ~15x on the gram stage there)."""
     return F.split(F.regexp_replace(x, r"^\s+|\s+$", ""), r"\s+")
 
 
@@ -34,15 +33,6 @@ def word_ngrams_from(words: Column, n: int = 3) -> Column:
     return F.when(F.size(words) >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_ngrams(x: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a string (array<string>); [] when < n words.
-
-    Single-expression convenience form — the embedded split re-runs per
-    gram (no CSE inside the lambda); hot paths should materialize
-    `split_words` in a projection and use `word_ngrams_from`."""
-    return word_ngrams_from(split_words(x), n)
 
 
 def jaccard_col(a: str = "grams_1", b: str = "grams_2") -> Column:

@@ -16,7 +16,8 @@ constant is unbeatable at that size.
 
 Scale notes: content must still be resident for this pass, so it runs
 BEFORE content is dropped, on capped candidate groups only; output is
-(id_1, id_2, containment) with containment = |overlap| / min(len).
+(id_1, id_2, containment) with containment always 1.0 (only full
+containment is reported).
 """
 
 from __future__ import annotations
@@ -152,13 +153,10 @@ def _verify_long_group(lb: bytes, shorts: list) -> list:
     return list(found)
 
 
-def _full_containment_rows(ids1, ids2, c1, c2) -> tuple[list, list]:
-    """Full-containment (containment == 1.0) verify over pair lists.
-
-    Returns (result_rows, leftover_indices): leftovers are the non-contained
-    pairs, for the caller's partial-containment branch (if any).
-    """
-    rows, leftovers = [], []
+def _full_containment_rows(ids1, ids2, c1, c2) -> list:
+    """Full-containment verify over pair lists: (id_1, id_2, 1.0) for every
+    pair whose shorter content occurs inside the longer."""
+    rows = []
     by_long: dict = {}
     for j, (i1, i2, a, b) in enumerate(zip(ids1, ids2, c1, c2)):
         a, b = (a or ""), (b or "")
@@ -185,8 +183,6 @@ def _full_containment_rows(ids1, ids2, c1, c2) -> tuple[list, list]:
         for j, i1, i2, s in small:
             if s in long_:
                 rows.append((i1, i2, 1.0))
-            else:
-                leftovers.append(j)
         if big:
             lb = long_.encode("utf-8", "surrogatepass")
             shorts = [(j, s.encode("utf-8", "surrogatepass"))
@@ -195,110 +191,29 @@ def _full_containment_rows(ids1, ids2, c1, c2) -> tuple[list, list]:
             for j, i1, i2, _ in big:
                 if j in hit:
                     rows.append((i1, i2, 1.0))
-                else:
-                    leftovers.append(j)
-    return rows, leftovers
-
-
-def _first_mismatch_per_segment(ne: np.ndarray, starts: np.ndarray,
-                                lens: np.ndarray) -> np.ndarray:
-    """For a flat boolean mismatch array partitioned into segments
-    [starts[i], starts[i]+lens[i]), return the offset of the first True in
-    each segment (== lens[i] when the segment is all-False). One
-    flatnonzero + one searchsorted — no per-segment Python."""
-    nz = np.flatnonzero(ne)
-    if nz.shape[0] == 0:
-        return lens.copy()
-    idx = np.searchsorted(nz, starts)
-    cand = nz[np.minimum(idx, nz.shape[0] - 1)]
-    hit = (idx < nz.shape[0]) & (cand < starts + lens)
-    return np.where(hit, cand - starts, lens)
-
-
-def _partial_containment_rows(pairs: list, min_containment: float) -> list:
-    """Grouped partial-containment scorer (VERDICT r4 #2): pairs is
-    [(i1, i2, a, b)] of NON-contained candidates; emits (id_1, id_2, cont)
-    where cont = (longest common prefix + longest common suffix) /
-    len(shorter) >= min_containment — identical semantics to the retired
-    per-pair loop.
-
-    Each container is decoded to UTF-32 ONCE per batch group and compared
-    against ALL its candidate shorts in two flat vectorized passes (prefix
-    and suffix), instead of re-encoding the container per pair: the flat
-    short concat is gathered against container positions with one fancy
-    index, and the first mismatch per segment falls out of one
-    flatnonzero+searchsorted. Cost per container ~ O(sum of short lens),
-    independent of pair count times container length."""
-    by_long: dict = {}
-    for i1, i2, a, b in pairs:
-        if len(a) <= len(b):
-            by_long.setdefault((i2, b), []).append((i1, i2, a))
-        else:
-            by_long.setdefault((i1, a), []).append((i1, i2, b))
-    rows: list = []
-    for (_, long_), shorts in by_long.items():
-        # surrogatepass: same defense as _full_containment_rows — a lone
-        # surrogate in content must not crash the UDF task
-        lc = np.frombuffer(
-            long_.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
-        scs = [np.frombuffer(s.encode("utf-32-le", "surrogatepass"),
-                             dtype=np.uint32)
-               for _, _, s in shorts]
-        lens = np.fromiter((c.shape[0] for c in scs), dtype=np.int64,
-                           count=len(scs))
-        starts = np.zeros(lens.shape[0], dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        flat = np.concatenate(scs) if scs else np.empty(0, np.uint32)
-        within = np.arange(flat.shape[0], dtype=np.int64) - np.repeat(
-            starts, lens)
-        p = _first_mismatch_per_segment(flat != lc[within], starts, lens)
-        # suffix window after the prefix: last (len - p) chars of each side,
-        # compared reversed so "first mismatch" = common-suffix length
-        rem = lens - p
-        rstarts = np.zeros(rem.shape[0], dtype=np.int64)
-        np.cumsum(rem[:-1], out=rstarts[1:])
-        rwithin = np.arange(int(rem.sum()), dtype=np.int64) - np.repeat(
-            rstarts, rem)
-        ends = np.repeat(starts + lens, rem)        # flat index past segment
-        short_rev = flat[ends - 1 - rwithin]
-        long_rev = lc[lc.shape[0] - 1 - rwithin]
-        s = _first_mismatch_per_segment(short_rev != long_rev, rstarts, rem)
-        cont = (p + s) / lens
-        for k in np.nonzero(cont >= min_containment)[0].tolist():
-            i1, i2, _ = shorts[k]
-            rows.append((i1, i2, round(min(float(cont[k]), 1.0), 6)))
     return rows
 
 
 def containment_pairs(
     candidates: DataFrame, files: DataFrame,
     id_col: str = "file_id", content_col: str = "content",
-    min_containment: float = 1.0,
 ) -> DataFrame:
-    """Verify containment for candidate pairs: emits pairs where the shorter
-    content occurs inside the longer (containment=1.0), or — when
-    min_containment < 1 — where the longest common prefix/suffix covers that
-    fraction of the shorter string.
+    """Verify containment for candidate pairs: emits (id_1, id_2, 1.0) for
+    each pair whose shorter content occurs inside the longer.
 
-    Full containment is verified with the anchored rolling-hash pass above
-    — each container is scanned once per Arrow batch for all its candidate
-    containees; small groups and short containers fall back to a per-pair
-    C ``str.find`` (exact either way)."""
+    Verified with the anchored rolling-hash pass above — each container is
+    scanned once per Arrow batch for all its candidate containees; small
+    groups and short containers fall back to a per-pair C ``str.find``
+    (exact either way)."""
     from deduplipy_spark.operators.pairs import with_pair_sides
 
     joined = with_pair_sides(candidates, files, [content_col], id_col)
 
     def verify(batch: pd.DataFrame) -> pd.DataFrame:
-        ids1 = batch["id_1"].tolist()
-        ids2 = batch["id_2"].tolist()
-        c1 = batch[f"{content_col}_1"].tolist()
-        c2 = batch[f"{content_col}_2"].tolist()
-        rows, leftovers = _full_containment_rows(ids1, ids2, c1, c2)
-        if min_containment < 1.0 and leftovers:
-            rows.extend(_partial_containment_rows(
-                [(ids1[j], ids2[j], (c1[j] or ""), (c2[j] or ""))
-                 for j in leftovers],
-                min_containment))
+        rows = _full_containment_rows(
+            batch["id_1"].tolist(), batch["id_2"].tolist(),
+            batch[f"{content_col}_1"].tolist(),
+            batch[f"{content_col}_2"].tolist())
         return pd.DataFrame(rows, columns=["id_1", "id_2", "containment"])
 
     def run(batches):

@@ -5,9 +5,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, tasks_per_core: int = 2) -> DataFrame:
-    """Round-robin repartition a DataFrame up to `tasks_per_core` tasks per
-    core when its current partitioning is below that — the shared defensive
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition a DataFrame up to two tasks per core when
+    its current partitioning is below that — the shared defensive
     guard in front of narrow-but-CPU-heavy passes (signature/fingerprint
     UDFs, per-doc gram explodes): scan splits are byte-based, python/gram
     cost is row-based, so a small or well-compressed local input can scan
@@ -16,7 +16,7 @@ def ensure_parallelism(df: DataFrame, tasks_per_core: int = 2) -> DataFrame:
     narrow gram/fingerprint stage on ONE core). A real deployment scans
     thousands of splits and never takes the branch. Returns `df` itself
     when it is already partitioned enough, so callers can test `is`."""
-    min_parts = df.sparkSession.sparkContext.defaultParallelism * tasks_per_core
+    min_parts = df.sparkSession.sparkContext.defaultParallelism * 2
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df

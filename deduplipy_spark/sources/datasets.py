@@ -7,10 +7,10 @@ dispatcher API:
 
     load_data(spark, kind='voters')  -> DataFrame(name, suburb, postcode)
     load_data(spark, kind='stoxx50') -> DataFrame(name)
-    load_data(spark, kind='code')    -> the code-file corpus (ours)
 
-CSV/parquet scans themselves are plain ``spark.read`` — shown in
-``read_table`` for completeness (SURVEY §2.1).
+CSV/parquet scans are plain ``spark.read`` (``cli run --format csv``);
+Excel scans are not needed (SURVEY §2.1), so the stoxx50 sheet's shape is
+synthesized rather than read.
 """
 
 from __future__ import annotations
@@ -82,132 +82,5 @@ def load_data(spark: SparkSession, kind: str = "voters", **kw) -> DataFrame:
         return spark.createDataFrame(voters_pandas(**kw))
     if kind == "stoxx50":
         return spark.createDataFrame(stoxx50_pandas(**kw))
-    if kind == "code":
-        from deduplipy_spark.sources.datagen import gen_files
-
-        return gen_files(spark, kw.pop("n_files", 1000),
-                         kw.pop("n_clusters", 100), **kw)
     raise ValueError(f"unknown dataset kind: {kind!r}")
 
-
-def _col_index(ref: str) -> int:
-    """'A'->0, 'B'->1, ..., 'AA'->26 from a cell ref like 'B37'."""
-    idx = 0
-    for ch in ref:
-        if not ch.isalpha():
-            break
-        idx = idx * 26 + (ord(ch.upper()) - ord("A") + 1)
-    return idx - 1
-
-
-def read_xlsx_pandas(path: str, sheet: int = 0,
-                     header: bool = True) -> pd.DataFrame:
-    """Minimal stdlib .xlsx reader (zipfile + ElementTree — no openpyxl).
-
-    Covers the reference's demo-data need (deduplipy/datasets.py:7-11 reads
-    a one-column stoxx50 sheet): shared strings, inline strings, numbers and
-    blanks on the N-th worksheet, first row as header. Not a general Excel
-    engine (no dates/styles/formula results beyond cached values)."""
-    import xml.etree.ElementTree as ET
-    import zipfile
-
-    ns = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
-    with zipfile.ZipFile(path) as z:
-        shared: list[str] = []
-        if "xl/sharedStrings.xml" in z.namelist():
-            root = ET.fromstring(z.read("xl/sharedStrings.xml"))
-            for si in root.findall("m:si", ns):
-                shared.append("".join(t.text or "" for t in si.iter(
-                    "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}t")))
-        # numeric sort: lexicographic order puts sheet10.xml before
-        # sheet2.xml, mapping the sheet index to the wrong worksheet in
-        # workbooks with 10+ sheets
-        import re as _re
-
-        def _sheet_no(n: str) -> int:
-            m = _re.search(r"sheet(\d+)", n)
-            return int(m.group(1)) if m else 0
-
-        sheets = sorted(
-            (n for n in z.namelist()
-             if n.startswith("xl/worksheets/sheet") and n.endswith(".xml")),
-            key=_sheet_no,
-        )
-        root = ET.fromstring(z.read(sheets[sheet]))
-        rows: list[dict[int, object]] = []
-        for row in root.iter(
-                "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}row"):
-            cells: dict[int, object] = {}
-            for c in row:
-                ref = c.get("r") or ""
-                ci = _col_index(ref) if ref else len(cells)
-                t = c.get("t")
-                v = c.find("m:v", ns)
-                ist = c.find("m:is", ns)
-                if t == "s" and v is not None:
-                    cells[ci] = shared[int(v.text)]
-                elif t == "inlineStr" and ist is not None:
-                    cells[ci] = "".join(x.text or "" for x in ist.iter(
-                        "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}t"))
-                elif v is not None and v.text is not None:
-                    try:
-                        f = float(v.text)
-                        cells[ci] = int(f) if f.is_integer() else f
-                    except ValueError:
-                        cells[ci] = v.text
-            rows.append(cells)
-    if not rows:
-        return pd.DataFrame()
-    width = max(max(r) + 1 for r in rows if r) if any(rows) else 0
-    table = [[r.get(i) for i in range(width)] for r in rows]
-    if header:
-        cols = [str(c) if c is not None else f"col{i}"
-                for i, c in enumerate(table[0])]
-        return pd.DataFrame(table[1:], columns=cols)
-    return pd.DataFrame(table)
-
-
-def read_table(spark: SparkSession, path: str, fmt: str = "parquet",
-               **options) -> DataFrame:
-    """Generic scan helper: parquet/csv/json/orc (SURVEY §2.1 CSV scan
-    -> spark.read.csv(header=True)).
-
-    Excel (the reference's stoxx50 .xlsx loader, deduplipy/datasets.py:7-11)
-    has no core-Spark data source: a pandas engine is used when installed,
-    else the stdlib reader above covers simple sheets (the demo-data shape).
-    Either way the sheet is DRIVER-memory (like the reference) — convert to
-    parquet for anything big.
-    """
-    if fmt in ("excel", "xlsx", "xls"):
-        try:
-            import pandas as _pd
-
-            pdf = _pd.read_excel(path, **options)   # needs openpyxl/xlrd
-        except ImportError:
-            # translate pandas-style options to the stdlib fallback's
-            # (sheet, header) signature; anything else (dtype=, usecols=, ...)
-            # is pandas-engine-only and silently dropping it would change
-            # results, so reject loudly
-            fb: dict = {}
-            if "sheet_name" in options or "sheet" in options:
-                sheet = options.pop("sheet_name", options.pop("sheet", 0))
-                if not isinstance(sheet, int):
-                    raise ValueError(
-                        "stdlib xlsx fallback selects sheets by integer index "
-                        f"only (got sheet_name={sheet!r}); install openpyxl "
-                        "for named sheets")
-                fb["sheet"] = sheet
-            if "header" in options:
-                fb["header"] = options.pop("header") is not None
-            if options:
-                raise ValueError(
-                    f"stdlib xlsx fallback does not support options "
-                    f"{sorted(options)}; install openpyxl for the full "
-                    f"pandas Excel engine")
-            pdf = read_xlsx_pandas(path, **fb)
-        return spark.createDataFrame(pdf)
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        options.setdefault("header", "true")
-        options.setdefault("inferSchema", "true")
-    return reader.options(**options).load(path)

@@ -141,27 +141,22 @@ class TableIO:
         return self.write(stage, df_fn(), **kw)
 
     def write_bucketed(self, stage: str, df: DataFrame, bucket_cols: list[str],
-                       sort_cols: list[str] | None = None,
                        n_buckets: int = 32) -> DataFrame:
-        """Bucketed (and optionally sorted) stage table, with the same
-        manifest contract as ``write`` (resume-able).
+        """Bucketed stage table, with the same manifest contract as
+        ``write`` (resume-able).
 
         Bucketing persists a hash partitioning: every downstream operator
         keyed on `bucket_cols` — the band-key window/groupBy of the pair
         generator, or an equi-join on file_id — reads the table WITHOUT a
-        shuffle (no Exchange in the plan; with `sort_cols` the window's sort
-        disappears too). This is the co-located-join layout the north rule
-        asks for; in prod the same call site targets an Iceberg table with a
-        bucket partition transform. Requires a session catalog (saveAsTable).
+        shuffle (no Exchange in the plan). This is the co-located-join
+        layout the north rule asks for; in prod the same call site targets
+        an Iceberg table with a bucket partition transform. Requires a
+        session catalog (saveAsTable).
         """
         name = self.table_name(stage)
-        writer = (
-            df.write.mode("overwrite").format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.option("path", self._path(stage)).saveAsTable(name)
+        (df.write.mode("overwrite").format("parquet")
+         .bucketBy(n_buckets, *bucket_cols)
+         .option("path", self._path(stage)).saveAsTable(name))
         out = self.spark.table(name)
         self._finish(stage, out)
         return out

@@ -10,18 +10,23 @@ loop runs:
             changing, so the loop switches from frontier to classic
             rounds.
 
-Each shape times the shipped loop best-of-2 and checks its component
-count against the driver union-find path on the same edges.
+Each shape times the shipped loop SAMPLES times after one untimed
+warm-up run, and checks every run's component count against the driver
+union-find path on the same edges. One sample says little on a shared
+host (two best-of-2 runs of the same code at 200000 chain edges gave
+16.84 s and 11.88 s), so the spread is reported beside the centre.
 
 Usage: python scripts/bench_cc.py [n_edges] [shape ...]
-(local[N] from SPARK_GRAFT_CPUS). Prints one JSON line per shape with wall
-seconds, host steal ticks and component count.
+(local[N] from SPARK_GRAFT_CPUS). Prints one JSON line per shape with the
+min, median and interquartile range of the wall seconds, every sample's
+wall seconds and host steal ticks, and the component count.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -35,6 +40,8 @@ from deduplipy_spark.operators.components import (
     connected_components,
 )
 from deduplipy_spark.session import get_spark
+
+SAMPLES = 5
 
 
 def edges_lsh(spark, n_edges: int):
@@ -70,7 +77,7 @@ def edges_chain(spark, n_edges: int, chain_len: int = 4096):
 def _drop_finished_caches(spark, keep) -> None:
     """Free the finished run's final-label checkpoint blocks (the rounds
     free their own intermediates since round 5, but the RETURNED labels
-    stay cached for the caller — here 4 paired runs x 16M rows would
+    stay cached for the caller — here SAMPLES runs x 16M rows would
     accumulate). Keeps only the shared input's blocks."""
     jrdd = _checkpoint_rdd(keep)
     if jrdd is None:
@@ -103,24 +110,29 @@ def main() -> None:
         e = (edges_lsh if shape == "lsh" else edges_chain)(spark, n_edges)
         e = e.repartition(32).localCheckpoint()     # input cost excluded
         n = e.count()
-        # best-of-2: single samples on a multi-tenant host are not
-        # comparable (BENCH/NOTES.md)
-        best = None
         components.auto_driver_max_edges = lambda s: 0
-        for _ in range(2):
+        walls, steals, comps = [], [], []
+        # run 0 is an untimed warm-up: at 200000 edges the first distributed
+        # run of a shape took 2.7x (lsh) and 1.2x (chain) the median of the
+        # next four
+        for k in range(1 + SAMPLES):
             s0, t0 = _steal(), time.monotonic()
             out = connected_components(e, edge_count=n)
-            n_comp = out.select("component").distinct().count()
-            dt = time.monotonic() - t0
+            comps.append(out.select("component").distinct().count())
+            if k:
+                walls.append(round(time.monotonic() - t0, 2))
+                steals.append(_steal() - s0)
             _drop_finished_caches(spark, keep=e)
-            if best is None or dt < best["wall_sec"]:
-                best = {"wall_sec": round(dt, 2), "steal": _steal() - s0,
-                        "components": n_comp}
         components.auto_driver_max_edges = lambda s: n
         driver = (connected_components(e, edge_count=n)
                   .select("component").distinct().count())
-        print(json.dumps({"shape": shape, "edges": n, **best}), flush=True)
-        assert best["components"] == driver, (best["components"], driver)
+        q1, _, q3 = statistics.quantiles(walls, n=4)
+        print(json.dumps({
+            "shape": shape, "edges": n, "min_sec": min(walls),
+            "median_sec": statistics.median(walls),
+            "iqr_sec": round(q3 - q1, 2), "wall_sec": walls,
+            "steal": steals, "components": driver}), flush=True)
+        assert comps == [driver] * (1 + SAMPLES), (comps, driver)
     spark.stop()
 
 

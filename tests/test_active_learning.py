@@ -237,12 +237,6 @@ def test_deduplicator_save_load_roundtrips_model(tmp_path):
     assert dd2.rules_selected == [("name", 3), ("name", 5)]
     assert dd2.field_info == {"name": ["adjusted_ratio"]}
     assert dd2.model_params == dd.model_params
-    # the restored params drive the same probabilities
-    from deduplipy_spark.operators.active_learning import NumpyLogit as NL
-
-    m2 = NL.from_params(dd2.model_params)
-    X = np.array([[95.0], [20.0], [55.0]])
-    np.testing.assert_allclose(m2.predict_proba(X), m.predict_proba(X))
 
 def test_fit_predict_e2e_interaction_true(spark):
     """VERDICT r2 #3 done-criterion: the interaction=True journey (scale ->

@@ -59,14 +59,6 @@ def test_score_expr_matches_numpy_interaction(spark):
     np.testing.assert_allclose(got, want, atol=1e-9)
 
 
-def test_params_roundtrip_preserves_interaction():
-    X, y = _xor_data(n=100)
-    m = NumpyLogit(interaction=True).fit(X, y)
-    m2 = NumpyLogit.from_params(m.params())
-    np.testing.assert_allclose(m2.predict_proba(X), m.predict_proba(X))
-    assert m2.interaction is True
-
-
 def test_score_expr_rejects_mismatched_coef():
     p = {"mean": [0.0, 0.0], "std": [1.0, 1.0], "coef": [1.0, 1.0],
          "intercept": 0.0, "interaction": True}   # needs 3 coefs

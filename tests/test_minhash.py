@@ -53,15 +53,6 @@ def test_shingle_hashes_edge_cases():
             == shingle_hashes_raw("hello world", 5)).all()
 
 
-def test_lsh_threshold_math():
-    cfg = EngineConfig()
-    # (1/16)^(1/8) ~= 0.71 — code-tuned: background boilerplate similarity
-    # (~0.15) stays out, near-dup mutations (>0.8) collide w.h.p.
-    assert 0.6 < cfg.lsh_threshold < 0.8
-    loose = EngineConfig(bands=32, rows_per_band=4)
-    assert 0.3 < loose.lsh_threshold < 0.5
-
-
 def test_spark_signatures_and_pairs(spark):
     cfg = EngineConfig(band_cap=50)
     from deduplipy_spark.ids import with_identity

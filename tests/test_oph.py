@@ -111,11 +111,12 @@ def test_oph_seed_rekeys_signatures():
 
 def test_oph_nonpow2_num_perm_warns():
     """EngineConfig warns when oph binning cannot use every slot
-    independently (ADVICE r3: silent degradation for num_perm=96)."""
+    independently (ADVICE r3: silent degradation for 16 bands x 6 rows =
+    96 slots)."""
     import warnings
 
     with pytest.warns(UserWarning, match="not a.*power of two"):
-        EngineConfig(num_perm=96, bands=16, rows_per_band=6)
+        EngineConfig(bands=16, rows_per_band=6)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        EngineConfig(num_perm=128, bands=16, rows_per_band=8)
+        EngineConfig(bands=16, rows_per_band=8)

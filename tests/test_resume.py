@@ -148,8 +148,7 @@ def test_bucketed_bands_skip_pair_gen_shuffle(spark):
     io = TableIO(spark, tmp, cfg.config_hash())
     try:
         bucketed = io.write_bucketed("bands_bucketed", bands,
-                                     bucket_cols=["band_key"],
-                                     sort_cols=["band_key", "id"])
+                                     bucket_cols=["band_key"])
         pairs = candidate_pairs(bucketed, cfg)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         # plans print top-down: everything AFTER the Window line is its

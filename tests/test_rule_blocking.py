@@ -48,9 +48,9 @@ def test_pairs_golden(spark):
 
 def test_voters_fixture_rules_and_excel_shim(spark):
     """VERDICT r1 #9: rule behavior over the voters-shaped synthesized
-    fixture (reference demo: 1,746-row typo-ridden voter_names.csv) + the
-    Excel-scan parity shim's documented failure mode."""
-    from deduplipy_spark.sources.datasets import load_data, read_table
+    fixture (reference demo: 1,746-row typo-ridden voter_names.csv) and
+    the synthesized stoxx50 shape that stands in for the Excel sheet."""
+    from deduplipy_spark.sources.datasets import load_data
 
     voters = load_data(spark, kind="voters", n=300)
     assert voters.columns == ["name", "suburb", "postcode"]
@@ -76,9 +76,6 @@ def test_voters_fixture_rules_and_excel_shim(spark):
     ).toPandas()
     assert fp.fingerprint.str.endswith((":0", ":1")).all()
 
-    # stoxx50-shaped demo loads; the raw Excel path fails loudly with guidance
+    # stoxx50-shaped demo loads
     stoxx = load_data(spark, kind="stoxx50")
     assert stoxx.columns == ["name"] and stoxx.count() == 45
-    import pytest as _pytest
-    with _pytest.raises((NotImplementedError, Exception)):
-        read_table(spark, "/nonexistent/stoxx.xlsx", fmt="excel")

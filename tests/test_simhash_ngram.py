@@ -4,7 +4,11 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from deduplipy_spark.config import EngineConfig
-from deduplipy_spark.operators.ngram import ngram_jaccard_pairs, word_ngrams
+from deduplipy_spark.operators.ngram import (
+    ngram_jaccard_pairs,
+    split_words,
+    word_ngrams_from,
+)
 from deduplipy_spark.operators.simhash import (
     _token_hashes,
     simhash_of_hashes,
@@ -109,7 +113,9 @@ def test_simhash_pairs_spark(spark):
 def test_word_ngrams_expr(spark):
     df = spark.createDataFrame([(0, "a b c d"), (1, "a b"), (2, "")],
                                "id long, t string")
-    out = df.select("id", word_ngrams(F.col("t"), 3).alias("g")).orderBy("id").toPandas()
+    words = df.select("id", split_words(F.col("t")).alias("w"))
+    out = words.select("id", word_ngrams_from(F.col("w"), 3).alias("g")) \
+        .orderBy("id").toPandas()
     assert list(out.g[0]) == ["a b c", "b c d"]
     assert list(out.g[1]) == []
     assert list(out.g[2]) == []
