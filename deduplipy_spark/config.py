@@ -86,7 +86,8 @@ class EngineConfig:
                 f"power of two: the one-permutation kernel's slots above "
                 f"{1 << (self.num_perm.bit_length() - 1)} carry no independent "
                 f"information; use a power-of-two bands*rows_per_band",
-                stacklevel=2,
+                # 1 = here, 2 = the dataclass __init__, 3 = the caller
+                stacklevel=3,
             )
 
     @property

@@ -45,6 +45,66 @@ SOFTIMPUTE_CONVERGENCE = 0.01
 # convergence on the missing entries)
 # ---------------------------------------------------------------------------
 
+# Golub-Kahan-Lanczos steps of the first attempt at the kept singular
+# triplets; doubled until they converge, with the full SVD past n/2 steps
+_GKL_STEPS = 30
+# Ritz residual bound, relative to the largest singular value, under which a
+# Lanczos triplet counts as converged
+_GKL_TOL = 1e-12
+
+
+def _kept_triplets(X: np.ndarray):
+    """(U, s, Vt) of the singular triplets of X above ``s.max() / 50`` — the
+    only ones SoftImpute's shrink keeps — by Golub-Kahan-Lanczos
+    bidiagonalization with full reorthogonalization from a fixed-seed start
+    vector. ``None`` when the full SVD is the cheaper or the only certain
+    route: small X, a flat spectrum (more than half the Ritz values kept),
+    an invariant Krylov subspace (a repeated singular value would be found
+    once), or no convergence within n/2 steps.
+
+    Converged means every kept Ritz value's residual bound ``beta_k *
+    |P[k-1, i]|`` is <= _GKL_TOL * s1 and at least one converged Ritz value
+    lies below the shrink, so no kept value is still unresolved above it.
+    """
+    rows, cols = X.shape
+    if min(rows, cols) <= 2 * _GKL_STEPS:
+        return None
+    limit = min(rows, cols) // 2
+    U = np.empty((rows, limit))
+    V = np.empty((cols, limit + 1))
+    alpha = np.empty(limit)
+    beta = np.empty(limit)
+    v0 = np.random.default_rng(0).standard_normal(cols)
+    V[:, 0] = v0 / np.linalg.norm(v0)
+    done, steps = 0, _GKL_STEPS
+    while True:
+        for j in range(done, steps):
+            u = X @ V[:, j]
+            if j:
+                u -= beta[j - 1] * U[:, j - 1]
+            u -= U[:, :j] @ (U[:, :j].T @ u)
+            alpha[j] = np.linalg.norm(u)
+            U[:, j] = u / alpha[j]
+            v = X.T @ U[:, j] - alpha[j] * V[:, j]
+            v -= V[:, :j + 1] @ (V[:, :j + 1].T @ v)
+            beta[j] = np.linalg.norm(v)
+            if min(alpha[j], beta[j]) <= _GKL_TOL * alpha[0]:
+                return None
+            V[:, j + 1] = v / beta[j]
+        done = steps
+        B = np.diag(alpha[:steps]) + np.diag(beta[:steps - 1], 1)
+        P, s, Qt = np.linalg.svd(B)
+        kept = s > s[0] / 50.0
+        if 2 * kept.sum() > steps:
+            return None
+        ok = beta[steps - 1] * np.abs(P[-1]) <= _GKL_TOL * s[0]
+        if ok[kept].all() and (ok & ~kept).any():
+            return (U[:, :steps] @ P[:, kept], s[kept],
+                    Qt[kept] @ V[:, :steps].T)
+        steps *= 2
+        if steps > limit:
+            return None
+
 
 def soft_impute(X: np.ndarray,
                 convergence_threshold: float = SOFTIMPUTE_CONVERGENCE,
@@ -57,7 +117,11 @@ def soft_impute(X: np.ndarray,
     X_filled = X.copy()
     X_filled[missing] = np.broadcast_to(col_means, X.shape)[missing]
     for _ in range(max_iters):
-        U, s, Vt = np.linalg.svd(X_filled, full_matrices=False)
+        top = _kept_triplets(X_filled)
+        if top is None:
+            U, s, Vt = np.linalg.svd(X_filled, full_matrices=False)
+        else:
+            U, s, Vt = top
         shrink = s.max() / 50.0
         s_thresh = np.maximum(s - shrink, 0.0)
         X_rec = (U * s_thresh) @ Vt

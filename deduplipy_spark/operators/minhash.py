@@ -183,7 +183,7 @@ _SLOT_MASK = np.uint64(0xFFFFFFFF)
 
 def truncate_sig(sig: np.ndarray) -> np.ndarray:
     """Low-32-bit slot truncation (uint32). Every downstream consumer tests
-    slot EQUALITY only (band-key hashing, zip_with estimator), where a
+    slot EQUALITY only (band-key hashing, the scoring kernel), where a
     32-bit collision adds ~2^-32 bias per slot — immaterial — while halving
     the signature row through every checkpoint, shuffle, and join (the
     scoring joins are the pipeline's biggest exchange; measured
@@ -239,16 +239,3 @@ def band_keys(signatures: DataFrame, cfg: EngineConfig, id_col: str = "file_id")
         F.col(id_col).alias("id"),
         F.explode(F.array(*bands)).alias("band_key"),
     )
-
-
-def estimated_jaccard_col(sig1: str = "sig_1", sig2: str = "sig_2"):
-    """Unbiased Jaccard estimate = fraction of equal signature slots.
-
-    Pure Column expression (zip_with + filter + size): stays in codegen,
-    no UDF on the pair hot path.
-    """
-    eq = F.filter(
-        F.zip_with(F.col(sig1), F.col(sig2), lambda x, y: (x == y).cast("int")),
-        lambda v: v == 1,
-    )
-    return F.size(eq) / F.size(F.col(sig1))

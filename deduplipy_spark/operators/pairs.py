@@ -17,7 +17,8 @@ Why this shape at 100 TB:
   shape collected the full membership first and capped after, which is an
   executor-OOM at scale; VERDICT r1 "What's wrong #1").
 - Pair combinations are generated by a nested `transform` Column expression
-  inside codegen — no UDF, no self-join, output <= cap^2/2 per band.
+  (interpreted: `ArrayTransform` is `CodegenFallback`) — no UDF, no
+  self-join, output <= cap^2/2 per band.
 - Star members (rank > cap) each emit ONE edge to the band minimum id:
   output stays linear in band size but connectivity is preserved — a hot
   band can never be silently severed into disconnected clusters.
@@ -43,7 +44,7 @@ def with_pair_sides(pairs: DataFrame, table: DataFrame, cols: list[str],
                     id_col: str = "file_id") -> DataFrame:
     """Join `cols` of `table` (keyed by `id_col`) onto both ends of an
     (id_1, id_2) pair table as ``<col>_1`` / ``<col>_2`` — the names the
-    pair metrics (`estimated_jaccard_col`, `jaccard_col`, ...) default to."""
+    pair metrics (`jaccard_col`, ...) and the scoring kernel read."""
     for s in ("1", "2"):
         side = table.select(F.col(id_col).alias(f"id_{s}"),
                             *[F.col(c).alias(f"{c}_{s}") for c in cols])

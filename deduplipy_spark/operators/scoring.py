@@ -8,18 +8,58 @@ reference's exact-equality override (all fields equal ⇒ score 1.0,
 
 Scale notes: candidates carry only ids; signatures join back via two equi
 joins on id (sort-merge / shuffled-hash; AQE may broadcast the smaller side).
-Score math is a pure Column expression (zip_with) — no Python on the pair
-hot path.
+The score is one numpy kernel per Arrow batch (`mapInArrow`) over the
+joined rows: the signature lists are read zero-copy as (rows, num_perm)
+int32 matrices. It is not a Column expression because the one that fits,
+``size(filter(zip_with(...)))``, runs interpreted: ``ZipWith`` and
+``ArrayFilter`` are ``CodegenFallback`` in Spark 4, so each pair would cost
+2 * num_perm boxed lambda calls.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
-from deduplipy_spark.operators.minhash import estimated_jaccard_col
 from deduplipy_spark.operators.pairs import with_pair_sides
+
+def _slots(sigs: pa.Array, num_perm: int) -> np.ndarray:
+    """A list<int32> column with no nulls as a zero-copy (rows, num_perm)
+    view of its values buffer; raises ValueError on any other width."""
+    offsets = sigs.offsets.to_numpy()
+    widths = np.diff(offsets)
+    bad = widths != num_perm
+    if bad.any():
+        raise ValueError(
+            f"signature width {int(widths[bad][0])} != num_perm {num_perm}")
+    # .values ignores the array's slice offset; offsets[0] carries it
+    values = sigs.values.to_numpy()[offsets[0]:offsets[-1]]
+    return values.reshape(-1, num_perm)
+
+
+def slot_agreement_scores(batches: Iterator[pa.RecordBatch], num_perm: int,
+                          threshold: float) -> Iterator[pa.RecordBatch]:
+    """(id_1, id_2, score) batches from (id_1, id_2, sig_1, sig_2) batches:
+    score = equal slots / num_perm (the unbiased MinHash Jaccard estimate),
+    rows below `threshold` or with a null signature dropped."""
+    for batch in batches:
+        s1, s2 = batch.column("sig_1"), batch.column("sig_2")
+        if s1.null_count or s2.null_count:
+            batch = batch.filter(pc.and_(s1.is_valid(), s2.is_valid()))
+            s1, s2 = batch.column("sig_1"), batch.column("sig_2")
+        score = (_slots(s1, num_perm) == _slots(s2, num_perm)).sum(axis=1) \
+            / num_perm
+        keep = pa.array(score >= threshold)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("id_1").filter(keep), batch.column("id_2").filter(keep),
+             pa.array(score).filter(keep)],
+            names=["id_1", "id_2", "score"])
 
 
 def score_pairs(candidates: DataFrame, signatures: DataFrame,
@@ -31,12 +71,14 @@ def score_pairs(candidates: DataFrame, signatures: DataFrame,
     share a sha — the exact class collapses in the sha pre-pass (pipeline)
     or via column equality (learned path).
     """
-    scored = (
+    num_perm, threshold = cfg.num_perm, cfg.score_threshold
+    return (
         with_pair_sides(candidates, signatures, ["sig"])
-        .withColumn("score", estimated_jaccard_col())
-        .select("id_1", "id_2", "score")
+        .select("id_1", "id_2", "sig_1", "sig_2")
+        .mapInArrow(
+            lambda batches: slot_agreement_scores(batches, num_perm, threshold),
+            "id_1 long, id_2 long, score double")
     )
-    return scored.where(F.col("score") >= F.lit(cfg.score_threshold))
 
 
 def score_histogram(scored: DataFrame, bin_width: float = 0.05) -> DataFrame:

@@ -9,7 +9,7 @@ Mirrors ``Deduplicator.predict`` (``deduplipy/deduplicator/deduplicator.py:
  4. bands           JVM band-key explode               (narrow)
  5. candidates      capped band groupBy + combinations (1-2 shuffles;
                     cfg.pair_strategy="exact": salted split, pairs.py)
- 6. scoring         sig joins + zip_with estimate      (2 joins)
+ 6. scoring         sig joins + Arrow slot-agreement   (2 joins)
                     (exact-sha override lives in the pre-pass, not here)
  7. components      iterative min-label propagation    (looped)
  8. HAC             groupBy(component).applyInPandas   (1 shuffle)

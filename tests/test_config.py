@@ -54,3 +54,16 @@ def test_load_model_saved_with_num_perm(tmp_path):
     assert dd.cfg.config_hash() == "23d9806f45dc287a"
     with pytest.raises(ValueError, match="num_perm"):
         Deduplicator.load(_saved_model(tmp_path, 96))
+
+
+def test_power_of_two_warning_names_the_caller():
+    """The non-power-of-two warning points at the line that built the
+    config, not at the dataclass-generated __init__."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        EngineConfig(bands=16, rows_per_band=6)
+    [w] = caught
+    assert "power of two" in str(w.message)
+    assert w.filename == __file__
