@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from deduplipy_spark.config import EngineConfig
 from deduplipy_spark.operators.pairs import with_pair_sides
 
+
 def _slots(sigs: pa.Array, num_perm: int) -> np.ndarray:
     """A list<int32> column with no nulls as a zero-copy (rows, num_perm)
     view of its values buffer; raises ValueError on any other width."""
