@@ -3,7 +3,7 @@
 From-scratch re-imagining of hokkiefrank/deduplipy's block→score→cluster
 pipeline (see SURVEY.md) over code-file tables at cluster scale: char-shingle
 MinHash/LSH blocking, distributed connected components, per-component
-agglomerative clustering via applyInPandas, checkpoint/resume.
+agglomerative clustering via mapInPandas, checkpoint/resume.
 """
 
 from deduplipy_spark.config import DEFAULT_CONFIG, EngineConfig

@@ -10,8 +10,11 @@ edges (``fill_missing_edges.py:8-35``), run CENTROID-linkage agglomeration on
 in this env; goldens from the reference's fixtures pass, see
 tests/test_clustering.py).
 
-Distribution shape: ``scored_pairs ⋈ components`` → ``groupBy(component).
-applyInPandas`` — one Arrow batch per component, embarrassingly parallel.
+Distribution shape: ``scored_pairs ⋈ components`` →
+``repartitionById(_slot)`` → ``mapInPandas``, grouping by component inside
+each task — embarrassingly parallel. The driver-CC path places components
+largest first by size² on no more tasks than components
+(``connected_components``' ``_slot``).
 Components larger than ``max_hac_size`` (dense n² matrices don't scale past
 a few thousand nodes) are first split PACk-style (Monath et al., VLDB'22):
 connected components over their edges at or above ``cluster_threshold``,
@@ -27,12 +30,15 @@ not label equality).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplipy_spark.config import EngineConfig
+from deduplipy_spark.partitioning import hac_tasks
 
 # SoftImpute stopping rule: relative RMSE change of the imputed entries
 # (reference ``deduplipy/config.py:4``)
@@ -158,42 +164,64 @@ def fill_missing_links(
 
 def centroid_linkage(dist: np.ndarray) -> list[tuple[int, int, float, int]]:
     """Return merge list [(a, b, height, new_size)]; a,b index clusters
-    (0..n-1 = leaves, n+i = i-th merge), heights may be non-monotonic."""
+    (0..n-1 = leaves, n+i = i-th merge), heights may be non-monotonic.
+
+    Müllner's "generic" algorithm (arXiv:1109.2378) on a symmetric `dist`:
+    D2 stays in place with dead columns at inf, and each row caches its
+    minimum and lowest argmin. A merge rescans only the merged row and
+    the rows whose cached neighbour was one of the two merged slots; every
+    other row compares its cache with the one new column. O(n²) for most
+    inputs, against the O(n³) of copying the live submatrix per merge.
+
+    Ties: the lowest row whose cached minimum is the global minimum, with
+    its lowest argmin — the pair a row-major argmin over the live
+    submatrix picks (a deterministic stand-in for scipy's scan order).
+    """
     n = dist.shape[0]
+    if n < 2:
+        return []
     D2 = dist.astype(float) ** 2
     np.fill_diagonal(D2, np.inf)
-    active = {i: (i, 1) for i in range(n)}   # slot -> (cluster id, size)
+    ids = list(range(n))                 # slot -> cluster id
+    sizes = [1] * n                      # slot -> cluster size
+    nbr = D2.argmin(axis=1)              # lowest argmin per row; -1 = dead
+    mins = D2.min(axis=1)
     merges: list[tuple[int, int, float, int]] = []
-    next_id = n
-    slots = list(range(n))
-    for _ in range(n - 1):
-        # global-min pair among active slots (ties -> lowest slot pair, as a
-        # deterministic stand-in for scipy's scan order)
-        sub = D2[np.ix_(slots, slots)]
-        flat = np.argmin(sub)
-        ii, jj = divmod(flat, len(slots))
-        if ii > jj:
-            ii, jj = jj, ii
-        si, sj = slots[ii], slots[jj]
-        ci, ni = active[si]
-        cj, nj = active[sj]
+    for next_id in range(n, 2 * n - 1):
+        si = int(mins.argmin())
+        sj = int(nbr[si])                # si < sj: row sj holds the same min
+        ni, nj = sizes[si], sizes[sj]
+        dij = float(D2[si, sj])
         # clamp: float error in the LW recurrence can leave D2 slightly
         # negative; sqrt would yield NaN heights, which cut_merges treats as
         # above-threshold (silent over-split)
-        h = float(np.sqrt(max(D2[si, sj], 0.0)))
-        # Lance-Williams centroid update into slot si (vectorized over slots)
-        others = np.array([sk for sk in slots if sk not in (si, sj)], dtype=int)
-        if others.size:
-            d2 = (ni * D2[si, others] + nj * D2[sj, others]) / (ni + nj) - (
-                ni * nj * D2[si, sj]
-            ) / (ni + nj) ** 2
-            np.maximum(d2, 0.0, out=d2)
-            D2[si, others] = d2
-            D2[others, si] = d2
-        merges.append((ci, cj, h, ni + nj))
-        active[si] = (next_id, ni + nj)
-        next_id += 1
-        slots.remove(sj)
+        h = math.sqrt(max(dij, 0.0))
+        merges.append((ids[si], ids[sj], h, ni + nj))
+        if next_id == 2 * n - 2:
+            break                        # the last merge updates nothing
+        ids[si], sizes[si] = next_id, ni + nj
+        # Lance-Williams centroid update into slot si; dead and merged
+        # columns come out inf (inf * size stays inf)
+        d2 = (ni * D2[si] + nj * D2[sj]) / (ni + nj) - (
+            ni * nj * dij
+        ) / (ni + nj) ** 2
+        np.maximum(d2, 0.0, out=d2)
+        d2[si] = d2[sj] = np.inf
+        D2[si] = d2
+        D2[:, si] = d2
+        D2[:, sj] = np.inf                # row sj is never read again
+        mins[sj], nbr[sj] = np.inf, -1
+        # rows whose cached neighbour moved or died, si itself included
+        # (its neighbour was sj): rescan
+        stale = np.flatnonzero((nbr == si) | (nbr == sj))
+        sub = D2[stale]
+        nbr[stale] = sub.argmin(axis=1)
+        mins[stale] = sub.min(axis=1)
+        # every other row: the new column si may now be its (lowest) min; a
+        # rescanned row already holds it, so it never counts as better
+        better = (d2 < mins) | ((d2 == mins) & (nbr > si))
+        np.copyto(nbr, si, where=better)
+        np.copyto(mins, d2, where=better)
     return merges
 
 
@@ -268,38 +296,33 @@ def hierarchical_cluster_component(
 
 
 def _agglomerate_grouped(edges: DataFrame, cfg: EngineConfig,
-                         n_edges: int | None = None) -> DataFrame:
-    """Grouped HAC over (id_1, id_2, score, group, component) edges.
+                         n_slots: int) -> DataFrame:
+    """Grouped HAC over (id_1, id_2, score, group, component, _slot) edges.
 
-    mapInPandas over group-partitioned data, grouping INSIDE the batch:
+    The rows of HAC task k are those with ``_slot == k``, ``0 <= _slot <
+    n_slots``, and a group never spans slots. ``repartitionById`` places
+    them: the edge table is small in BYTES (AQE would coalesce a hash
+    exchange to ~1 partition) but large in PYTHON WORK, and an explicit
+    partition count is exempt from AQE coalescing. The callers size
+    `n_slots` in whole tasks of work (`partitioning.hac_tasks`, and no
+    more slots than components on the driver-CC path): every Python task pays
+    ~0.13 s before its body starts (partitioning's module docstring), so
+    on hot_bands the hash placement's 8 tasks for 3 components ran 5
+    empty tasks at 0.11-0.22 s each and put two components in one.
+
+    mapInPandas over the placed partitions, grouping INSIDE the batch:
     dedup graphs have millions of TINY components, and per-group Arrow
     exchanges (applyInPandas) cost more than the numpy work — one pandas
     groupby per partition is ~3x cheaper. Batches of one partition are
-    concatenated first (a group never spans partitions, but Arrow may
-    split a partition into several batches).
+    concatenated first (Arrow may split a partition into several batches).
     """
     cluster_threshold = cfg.cluster_threshold
     fill_missing = cfg.fill_missing
     max_size = cfg.max_hac_size
-
-    # Explicit repartition by group: the edge table is small in BYTES
-    # (AQE would coalesce it to ~1 post-shuffle partition) but large in
-    # PYTHON WORK (one numpy HAC per group) — user-specified numPartitions
-    # is exempt from AQE coalescing, so every core gets groups. Measured:
-    # 40s -> ~2s on 10k components at 32 cores.
-    # When the caller knows the edge count (the CC size-gate already
-    # counted it), size the partition count to the data instead of the
-    # constant 2 waves: a few-thousand-edge graph on 64 python tasks pays
-    # ~64 Arrow round trips for microseconds of numpy each (r6; guide §2
-    # scale-adaptive partitioning). Conservative 1000 edges/task floor —
-    # HAC is O(n^3) per component, so tasks stay small, and the cap is
-    # unchanged at 2 waves of the cores for big graphs.
-    cores2 = edges.sparkSession.sparkContext.defaultParallelism * 2
-    if n_edges is None:
-        n_parts = cores2
-    else:
-        n_parts = max(1, min(cores2, -(-int(n_edges) // 1000)))
-    edges = edges.repartition(n_parts, "group")
+    # int, as repartitionById requires: a session without Arrow turns the
+    # driver path's int32 pandas column into a long
+    edges = edges.repartitionById(
+        n_slots, F.col("_slot").cast("int")).drop("_slot")
 
     def agglomerate_partition(batches):
         chunks = list(batches)
@@ -352,24 +375,29 @@ def cluster_components(
     scored: DataFrame, components: DataFrame, cfg: EngineConfig,
     max_component_size: int | None = None,
     n_edges: int | None = None,
+    n_slots: int | None = None,
 ) -> DataFrame:
     """(id, cluster_id, component, capped) per node of every scored component.
 
-    `scored` = (id_1, id_2, score); `components` = (id, component, _csize)
-    from ``connected_components``. Both are consumed more than once here,
-    so the caller passes them already cut (``DedupPipeline.cluster`` does).
+    `scored` = (id_1, id_2, score); `components` = (id, component, _csize,
+    _slot) from ``connected_components``. Both are consumed more than once
+    here, so the caller passes them already cut (``DedupPipeline.cluster``
+    does).
 
     ``max_component_size``: the largest component's node count when the
     caller already knows it (connected_components' driver path computes it
     for free). When it proves every component fits ``max_hac_size``, the
-    whole big-component branch — including its driver-side isEmpty probe
-    job and the planning of the sub-split dataflow — is skipped outright
-    (guide §7.3: fewer driver barriers). ``None`` keeps the probe.
+    whole big-component branch — including the planning of the sub-split
+    dataflow — is skipped outright (guide §7.3: fewer driver barriers);
+    when it proves a bigger one exists, the branch runs without its
+    driver-side isEmpty probe job. ``None`` keeps the probe.
 
-    ``n_edges``: known scored-edge count (the CC size gate counts it
-    anyway) — sizes the grouped-map partition count to the data instead
-    of a constant two waves (see _agglomerate_grouped). ``None`` keeps
-    the constant.
+    ``n_slots``: the range of the components' ``_slot`` column
+    (connected_components reports it as ``stats_out["hac_slots"]``); the
+    grouped HAC then runs one task per slot. ``None`` (e.g. components
+    read back from a checkpoint) hash-places the components over
+    ``hac_tasks(n_edges)`` tasks instead, `n_edges` being the known
+    scored-edge count or ``None``.
 
     Components up to ``max_hac_size`` get exact per-component HAC in one
     grouped-map batch. LARGER components (round-1 behavior: one-cluster
@@ -387,22 +415,27 @@ def cluster_components(
                  and max_component_size <= cfg.max_hac_size)
     small = components if all_small else components.where(
         F.col("_csize") <= cfg.max_hac_size)
+    if n_slots is None:
+        n_slots = hac_tasks(scored.sparkSession, n_edges)
+        small = small.withColumn(
+            "_slot", F.pmod(F.hash("component"), F.lit(n_slots)))
     edges_small = (
         scored.join(
-            small.select(F.col("id").alias("id_1"), "component"), "id_1"
-        )
+            small.select(F.col("id").alias("id_1"), "component", "_slot"),
+            "id_1")
         .select("id_1", "id_2", "score", "component",
-                F.col("component").alias("group"))
+                F.col("component").alias("group"), "_slot")
     )
-    out = _agglomerate_grouped(edges_small, cfg, n_edges=n_edges)
+    out = _agglomerate_grouped(edges_small, cfg, n_slots)
     if all_small:
         return out
 
     big = components.where(
         F.col("_csize") > cfg.max_hac_size).select("id", "component")
     # cheap probe: big components are rare; skip the whole sub-path when
-    # none exist (a limit-1 scan of the already-materialized components)
-    if big.isEmpty():
+    # none exist (a limit-1 scan of the already-materialized components).
+    # A known max_component_size above the cap already proves one exists.
+    if max_component_size is None and big.isEmpty():
         return out
 
     from deduplipy_spark.operators.components import connected_components
@@ -419,7 +452,10 @@ def cluster_components(
         .select("id_1", "id_2", "score", "component",
                 F.col("_sub_1").alias("group"))
     )
-    out_big = _agglomerate_grouped(induced, cfg)
+    n_big = hac_tasks(scored.sparkSession, None)
+    out_big = _agglomerate_grouped(
+        induced.withColumn("_slot", F.pmod(F.hash("group"), F.lit(n_big))),
+        cfg, n_big)
     # big-component nodes with no strong edge: singleton clusters
     lonely = (
         big.join(sub.select("id"), "id", "left_anti")

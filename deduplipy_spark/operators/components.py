@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from deduplipy_spark.partitioning import hac_tasks, largest_first_slots
+
 # distributed-loop round limit: min-label propagation with pointer jumping
 # converges in O(log d) rounds, so hitting it means a bug, not a big graph
 MAX_CC_ROUNDS = 50
@@ -65,8 +67,8 @@ def auto_driver_max_edges(spark: SparkSession) -> int:
 def connected_components(edges: DataFrame,
                          edge_count: int | None = None,
                          stats_out: dict | None = None) -> DataFrame:
-    """edges(id_1, id_2) -> (id, component, _csize) for every node appearing
-    in edges.
+    """edges(id_1, id_2) -> (id, component, _csize, _slot) for every node
+    appearing in edges.
 
     component = min node id reachable (the canonical representative);
     ``_csize`` = component node count — free on the driver path (one
@@ -74,6 +76,16 @@ def connected_components(edges: DataFrame,
     it when the caller never reads it). Downstream HAC gates its
     oversized-component split on ``_csize`` without re-deriving sizes in a
     separate groupBy+join job.
+
+    ``_slot`` = the component's grouped-HAC task, in
+    ``[0, stats_out["hac_slots"])``. The driver path holds every
+    component's size, so it places components largest first by size² (the
+    dense HAC's cost grows at least that fast; `largest_first_slots`) over
+    min(`hac_tasks`, number of components) slots: no slot is empty and the
+    biggest components never share one while a slot is free. The
+    distributed path keeps hash placement, ``pmod(hash(component), n)``
+    over `hac_tasks` slots (a size-aware placement there would be its own
+    job).
 
     Scale-adaptive (same spirit as AQE's runtime broadcast switch): up to
     `auto_driver_max_edges` (derived from the driver heap) the edge list
@@ -87,12 +99,12 @@ def connected_components(edges: DataFrame,
     manifest) — skips the size-gate count job entirely.
 
     ``stats_out``: optional dict populated with facts this call learns for
-    free: ``n_edges`` (always) and ``max_component_size`` (driver path only
-    — one extra bincount next to the union-find). Downstream HAC uses them
-    to skip its big-component existence probe and to size its grouped-map
-    partition count; the distributed path leaves max_component_size unset
-    (a global max there would be its own job, costing exactly what the
-    skip saves).
+    free: ``n_edges`` and ``hac_slots`` (always) and ``max_component_size``
+    (driver path only — one extra bincount next to the union-find).
+    Downstream HAC uses them to skip its big-component existence probe and
+    to place its grouped-map tasks; the distributed path leaves
+    max_component_size unset (a global max there would be its own job,
+    costing exactly what the skip saves).
     """
     # size gate as a parallel count, NOT limit(N+1).toPandas(): a global
     # limit executes as CollectLimit — the driver pulls partitions in
@@ -105,9 +117,10 @@ def connected_components(edges: DataFrame,
     n_edges = edge_count if edge_count is not None else edges.count()
     if stats_out is not None:
         stats_out["n_edges"] = n_edges
-    if n_edges <= auto_driver_max_edges(edges.sparkSession):
+    spark = edges.sparkSession
+    if n_edges <= auto_driver_max_edges(spark):
         probe = edges.select("id_1", "id_2").toPandas()
-        return _driver_union_find_pdf(probe, edges.sparkSession, stats_out)
+        return _driver_union_find_pdf(probe, spark, stats_out)
     bidir = (
         edges.select(F.col("id_1").alias("src"), F.col("id_2").alias("dst"))
         .union(edges.select(F.col("id_2").alias("src"), F.col("id_1").alias("dst")))
@@ -130,8 +143,13 @@ def connected_components(edges: DataFrame,
         # full-graph-sized block sets in the long-lived session
         for c in base_ckpts:
             _free_rdd(c)
-    return labels.select("id", F.col("comp").alias("component")).withColumn(
-        "_csize", F.count(F.lit(1)).over(Window.partitionBy("component"))
+    n_slots = hac_tasks(spark, n_edges)
+    if stats_out is not None:
+        stats_out["hac_slots"] = n_slots
+    return labels.select(
+        "id", F.col("comp").alias("component"),
+        F.count(F.lit(1)).over(Window.partitionBy("comp")).alias("_csize"),
+        F.pmod(F.hash("comp"), F.lit(n_slots)).alias("_slot"),
     )
 
 _PRIVATE_API_WARNED: set = set()
@@ -337,8 +355,9 @@ def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None) -> DataFra
 
     if not len(pdf):
         if stats_out is not None:
-            stats_out["max_component_size"] = 0
-        return spark.createDataFrame([], "id long, component long, _csize long")
+            stats_out.update(max_component_size=0, hac_slots=1)
+        return spark.createDataFrame(
+            [], "id long, component long, _csize long, _slot int")
     e1 = pdf["id_1"].to_numpy(dtype=np.int64)
     e2 = pdf["id_2"].to_numpy(dtype=np.int64)
     ids = np.unique(np.concatenate([e1, e2]))
@@ -357,6 +376,12 @@ def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None) -> DataFra
     out = pd.DataFrame({"id": ids, "component": ids[labels]})
     counts = np.bincount(labels, minlength=ids.shape[0])
     out["_csize"] = counts[labels].astype(np.int64)
+    roots = np.flatnonzero(counts)
+    n_slots = min(hac_tasks(spark, len(pdf)), roots.shape[0])
+    slot = np.zeros(ids.shape[0], dtype=np.int32)
+    slot[roots] = largest_first_slots(counts[roots].astype(np.int64) ** 2, n_slots)
+    out["_slot"] = slot[labels]
     if stats_out is not None:
-        stats_out["max_component_size"] = int(counts.max())
+        stats_out.update(max_component_size=int(counts.max()),
+                         hac_slots=n_slots)
     return spark.createDataFrame(out)

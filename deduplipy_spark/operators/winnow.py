@@ -52,10 +52,10 @@ def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4,
     their grams (so every non-empty doc with >= k chars fingerprints).
 
     The dataflow is fully narrow, so an under-partitioned input (one
-    parquet split) would pin every doc's hashing to one core: repartition
-    defensively to 2 tasks/core first, exactly like DedupPipeline does for
-    its signature UDF. A real deployment scans thousands of splits and
-    never takes this branch.
+    parquet split) would pin every doc's hashing to one core: below one
+    partition per core, repartition defensively to one task per core first,
+    exactly like DedupPipeline does for its signature UDF. A real
+    deployment scans thousands of splits and never takes this branch.
     """
     from deduplipy_spark.partitioning import ensure_parallelism
 

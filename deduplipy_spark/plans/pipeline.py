@@ -12,7 +12,7 @@ Mirrors ``Deduplicator.predict`` (``deduplipy/deduplicator/deduplicator.py:
  6. scoring         sig joins + Arrow slot-agreement   (2 joins)
                     (exact-sha override lives in the pre-pass, not here)
  7. components      iterative min-label propagation    (looped)
- 8. HAC             groupBy(component).applyInPandas   (1 shuffle)
+ 8. HAC             mapInPandas over slot-placed edges (1 shuffle)
  9. assignment      exact members ⟕ near-dup clusters  (broadcast-able joins)
 
 Every stage can checkpoint through TableIO (manifest keyed by config hash →
@@ -200,11 +200,15 @@ class DedupPipeline:
             self.spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.enabled",
                 str(waves == 1).lower())
-        # Defensive repartition in front of the signature UDF (>= 2
-        # tasks/core: a 1.3-wave schedule idles a third of the cluster).
-        # NOTE the session already splits file scans at 8MB (session.py)
-        # precisely so this shuffle — a measured flat ~4s I/O floor moving
-        # the full content bytes — stays a last resort for non-file inputs.
+        # Defensive repartition in front of the signature UDF, only when
+        # the input has fewer partitions than cores, and then to one task
+        # per core: each Python task pays ~0.13 s before its UDF body
+        # starts (partitioning.py), so a second wave of small signature
+        # tasks cost more than it balanced. The session splits file scans
+        # at 8MB with a 1MB open cost (session.py), so a small file input
+        # already scans into one split per core and this shuffle — a
+        # measured flat ~4s I/O floor moving the full content bytes on big
+        # inputs — stays a last resort for non-file inputs.
         parted = ensure_parallelism(files)
         ident_full = with_identity(parted, cfg.id_cols, cfg.content_col)
         if parted is not files:
@@ -213,8 +217,8 @@ class DedupPipeline:
             # defensive repartition exchange of the full content run twice
             # (guide §2.4; measured: two concurrent ~0.9s scan+shuffle jobs
             # on the 50k corpus, r6 event-log profile). Gated on the
-            # repartition path, which only fires for inputs smaller than
-            # 2 partitions/core (<~512MB locally) — a real deployment scans
+            # repartition path, which only fires for inputs with fewer
+            # partitions than cores — a real deployment scans
             # thousands of splits, never repartitions, and never caches
             # content; there the double scan is the intended trade (re-read
             # cheap columnar input rather than cache/shuffle content).
@@ -352,7 +356,8 @@ class DedupPipeline:
         # its big-component isEmpty probe — one driver job + two planning
         # gaps per run (guide §7.3; measured ~0.3s on the 50k corpus).
         # Checkpoint resumes and the distributed CC path leave it unset and
-        # keep the probe.
+        # keep the probe. hac_slots is the range of the components' _slot
+        # column, the HAC task count; a resume leaves it unset too.
         cc_stats: dict = {}
         comps = self._stage(
             "components",
@@ -363,5 +368,6 @@ class DedupPipeline:
             "clusters_nd", lambda: cluster_components(
                 scored, comps, cfg,
                 max_component_size=cc_stats.get("max_component_size"),
-                n_edges=cc_stats.get("n_edges", n_edges))
+                n_edges=cc_stats.get("n_edges", n_edges),
+                n_slots=cc_stats.get("hac_slots"))
         )

@@ -1,5 +1,5 @@
 """Clustering goldens from the reference, replayed through our numpy HAC and
-the Spark applyInPandas path.
+the Spark mapInPandas path.
 
 - F2: tests/test_clustering/clustering_fixture.csv → partitions {0,1},{2},{3},{4}
   at cluster_threshold=0.5 and {0,1},{2,3},{4} at 0.4
@@ -215,6 +215,70 @@ def test_pack_split_keeps_weak_only_nodes_as_singletons(spark):
     out = cluster_components(scored, comps, cfg).toPandas().set_index("id")
     assert out.cluster_id.loc[[0, 1, 2]].nunique() == 1
     assert out.cluster_id.loc[3] == 3 and out.cluster_id.loc[4] == 4
+
+
+def test_known_oversized_component_skips_the_probe(spark, monkeypatch):
+    """A driver-known max_component_size above max_hac_size already proves
+    a big component exists: the PACk branch runs without the isEmpty
+    probe job, with the same result."""
+    cfg = EngineConfig(max_hac_size=4, cluster_threshold=0.5,
+                       fill_missing=False)
+    rows = [(0, 1, 0.9), (1, 2, 0.9), (0, 2, 0.9), (2, 3, 0.2), (3, 4, 0.2)]
+    scored = spark.createDataFrame(rows, "id_1 long, id_2 long, score double")
+    stats: dict = {}
+    comps = connected_components(scored, stats_out=stats)
+    assert stats["max_component_size"] == 5
+
+    def probe(self):
+        raise AssertionError("isEmpty probe ran")
+
+    monkeypatch.setattr(type(comps), "isEmpty", probe)   # classic DataFrame
+    out = cluster_components(
+        scored, comps, cfg, max_component_size=stats["max_component_size"],
+    ).toPandas().set_index("id")
+    assert out.cluster_id.loc[[0, 1, 2]].nunique() == 1
+    assert out.cluster_id.loc[3] == 3 and out.cluster_id.loc[4] == 4
+
+
+def _ladder(base: int, size: int, score: float = 0.9):
+    """Connected `size`-node component, ~3 edges per node."""
+    return [(base + i, base + j, score) for i in range(size)
+            for j in range(i + 1, min(i + 4, size))]
+
+
+def test_driver_cc_places_hac_largest_first(spark):
+    """Driver-CC placement: the three largest components (400/380/360
+    nodes) land on distinct HAC slots, there are never more slots than
+    components, and every HAC partition holds a component."""
+    from pyspark.sql import functions as F
+
+    cfg = EngineConfig(cluster_threshold=0.5, fill_missing=False)
+    big = [0, 10_000, 20_000]
+    rows = (_ladder(big[0], 400) + _ladder(big[1], 380)
+            + _ladder(big[2], 360))
+    small = [(30_000 + 10 * k, 30_000 + 10 * k + 1, 0.9) for k in range(12)]
+    small += _ladder(40_000, 3) + _ladder(40_010, 3)
+    for edges, n_comps in ((rows, 3), (rows + small, 17)):
+        scored = spark.createDataFrame(
+            edges, "id_1 long, id_2 long, score double")
+        stats: dict = {}
+        comps = connected_components(scored, stats_out=stats).toPandas()
+        n_slots = stats["hac_slots"]
+        assert comps.component.nunique() == n_comps
+        assert n_slots == min(-(-len(edges) // 1000), n_comps)
+        slot_of = comps.groupby("component")._slot.first()
+        assert slot_of.loc[big].nunique() == 3
+        assert slot_of.between(0, n_slots - 1).all()
+        out = cluster_components(
+            scored, spark.createDataFrame(comps), cfg,
+            max_component_size=stats["max_component_size"],
+            n_slots=n_slots,
+        ).withColumn("p", F.spark_partition_id()).toPandas()
+        assert len(out) == len(comps)
+        per_part = out.groupby("p").component.nunique()
+        assert sorted(per_part.index) == list(range(n_slots))  # none empty
+        assert out[out.component.isin(big)].groupby(
+            "component").p.first().nunique() == 3
 
 
 def test_component_size_cap(spark):

@@ -128,12 +128,12 @@ def test_stage_caches_are_per_instance(spark):
     b.close()
 
 
-@pytest.mark.parametrize("partitions", [4, 16])
+@pytest.mark.parametrize("partitions", [4, 8, 16])
 def test_pipeline_cuts_follow_one_rule(spark, partitions):
     """Without TableIO checkpoints, run() cuts exactly the multi-consumer
     relations, all at MEMORY_AND_DISK_DESER: the five reused stages, the
     ranked band window, and the identity table when the input was
-    repartitioned (4 partitions on 8 cores is; 16 is not)."""
+    repartitioned (4 partitions on 8 cores is; 8 and 16 are not)."""
     files = gen_files(spark, 80, 8, partitions=partitions)
     pipe = DedupPipeline(spark, EngineConfig())
     pipe.run(files).count()
@@ -144,7 +144,7 @@ def test_pipeline_cuts_follow_one_rule(spark, partitions):
         ["file_id", "sig"],                         # signatures
         ["band_key", "id", "rn", "band_min"],       # ranked band window
         ["id_1", "id_2", "score"],                  # scored_pairs
-        ["id", "component", "_csize"],              # components
+        ["id", "component", "_csize", "_slot"],     # components
     ]
     repartitioned = ensure_parallelism(files) is not files
     assert repartitioned == (partitions == 4)       # both sides of the gate
@@ -154,6 +154,20 @@ def test_pipeline_cuts_follow_one_rule(spark, partitions):
     assert all(df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
                for df in pipe._cached)
     pipe.close()
+
+
+@pytest.mark.parametrize("offset", [-7, -1, 0, 8])
+def test_ensure_parallelism_fills_one_wave(spark, offset):
+    """Below one partition per core the input is round-robined to exactly
+    one task per core; at or above it, it is returned as is."""
+    cores = spark.sparkContext.defaultParallelism
+    n = cores + offset                      # 1, cores-1, cores, 2*cores
+    df = spark.range(100, numPartitions=n)
+    out = ensure_parallelism(df)
+    if n < cores:
+        assert out.rdd.getNumPartitions() == cores
+    else:
+        assert out is df
 
 
 def test_pipeline_distributed_cc_matches_driver_path(spark, monkeypatch):

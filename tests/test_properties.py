@@ -165,6 +165,120 @@ def test_cut_merges_matches_member_list_cut(data):
                 == _cut_merges_members(merges, n, t)).all(), (merges, t)
 
 
+def _centroid_linkage_submatrix(dist):
+    """The O(n³) centroid linkage that the cached-neighbour version
+    replaced: copies the live submatrix on every merge and takes its
+    row-major argmin."""
+    n = dist.shape[0]
+    D2 = dist.astype(float) ** 2
+    np.fill_diagonal(D2, np.inf)
+    active = {i: (i, 1) for i in range(n)}   # slot -> (cluster id, size)
+    merges = []
+    next_id = n
+    slots = list(range(n))
+    for _ in range(n - 1):
+        sub = D2[np.ix_(slots, slots)]
+        flat = np.argmin(sub)
+        ii, jj = divmod(flat, len(slots))
+        if ii > jj:
+            ii, jj = jj, ii
+        si, sj = slots[ii], slots[jj]
+        ci, ni = active[si]
+        cj, nj = active[sj]
+        h = float(np.sqrt(max(D2[si, sj], 0.0)))
+        others = np.array([sk for sk in slots if sk not in (si, sj)], dtype=int)
+        if others.size:
+            d2 = (ni * D2[si, others] + nj * D2[sj, others]) / (ni + nj) - (
+                ni * nj * D2[si, sj]
+            ) / (ni + nj) ** 2
+            np.maximum(d2, 0.0, out=d2)
+            D2[si, others] = d2
+            D2[others, si] = d2
+        merges.append((ci, cj, h, ni + nj))
+        active[si] = (next_id, ni + nj)
+        next_id += 1
+        slots.remove(sj)
+    return merges
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_centroid_linkage_matches_submatrix_oracle(data):
+    """Identical merge lists (pairs, heights, sizes) to the submatrix
+    oracle on continuous, 1/4-grid tie-heavy and 0/1 matrices; the 0/1
+    ones break the triangle inequality, so the Lance-Williams update goes
+    negative and is clamped."""
+    from deduplipy_spark.operators.agglomerate import centroid_linkage
+
+    n = data.draw(st.integers(min_value=3, max_value=200))
+    kind = data.draw(st.sampled_from(["random", "grid", "clamp"]))
+    rng = np.random.default_rng(
+        data.draw(st.integers(min_value=0, max_value=2**32 - 1)))
+    D = rng.random((n, n))
+    if kind == "grid":
+        D = np.round(D * 4) / 4
+    elif kind == "clamp":
+        D = (D < 0.5).astype(float)
+    D = np.triu(D, 1) + np.triu(D, 1).T
+    assert centroid_linkage(D) == _centroid_linkage_submatrix(D)
+
+
+def test_centroid_linkage_tie_on_the_new_column():
+    """Leaves 1 and 2 merge first; the merged cluster then lies exactly as
+    far from leaf 0 as leaf 3 does (5-12-13 triangle, exact in binary).
+    Row 0 cached leaf 3 as its neighbour, and the lowest-argmin tie rule
+    must move it to the new column, which has the lower slot."""
+    from deduplipy_spark.operators.agglomerate import centroid_linkage
+
+    D = np.array([[0, 13 / 16, 13 / 16, 12 / 16],
+                  [13 / 16, 0, 10 / 16, 1],
+                  [13 / 16, 10 / 16, 0, 1],
+                  [12 / 16, 1, 1, 0]])
+    merges = centroid_linkage(D)
+    assert merges == _centroid_linkage_submatrix(D)
+    assert merges[:2] == [(1, 2, 0.625, 2), (0, 4, 0.75, 3)]
+
+
+def test_centroid_linkage_n2000_under_one_second():
+    import time
+
+    from deduplipy_spark.operators.agglomerate import centroid_linkage
+
+    D = np.random.default_rng(0).random((2000, 2000))
+    D = np.triu(D, 1) + np.triu(D, 1).T
+    best = np.inf
+    for _ in range(2):
+        t0 = time.perf_counter()
+        merges = centroid_linkage(D)
+        best = min(best, time.perf_counter() - t0)
+    assert len(merges) == 1999
+    assert best < 1.0, best
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.data())
+def test_largest_first_slots_fills_every_slot_near_level(data):
+    """The n_slots heaviest items take distinct slots, no slot is empty,
+    and no slot ends above LPT's bound: the heaviest item, or the mean
+    load plus the heaviest item left after the first n_slots."""
+    from deduplipy_spark.partitioning import largest_first_slots
+
+    w = np.array(data.draw(st.lists(
+        st.integers(min_value=1, max_value=10**12), min_size=1,
+        max_size=80)), dtype=np.int64)
+    n_slots = data.draw(st.integers(min_value=1, max_value=len(w)))
+    slot = largest_first_slots(w, n_slots)
+    assert slot.dtype == np.int32
+    assert slot.min() >= 0 and slot.max() < n_slots
+    assert (np.bincount(slot, minlength=n_slots) >= 1).all()
+    order = np.argsort(-w, kind="stable")
+    assert (slot[order[:n_slots]] == np.arange(n_slots)).all()
+    load = np.bincount(slot, weights=w.astype(float), minlength=n_slots)
+    tail_max = w[order[n_slots:]].max() if len(w) > n_slots else 0
+    bound = max(w.max(), w.sum() / n_slots + tail_max)
+    assert load.max() <= bound * (1 + 1e-9), (load, bound)
+
+
 @settings(max_examples=50, deadline=None)
 @given(st.data())
 def test_greedy_set_cover_reaches_recall(data):
