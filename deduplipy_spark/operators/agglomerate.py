@@ -12,9 +12,10 @@ tests/test_clustering.py).
 
 Distribution shape: ``scored_pairs ⋈ components`` →
 ``repartitionById(_slot)`` → ``mapInPandas``, grouping by component inside
-each task — embarrassingly parallel. The driver-CC path places components
-largest first by size² on no more tasks than components
-(``connected_components``' ``_slot``).
+each task — embarrassingly parallel. The driver-CC path deals components
+out largest first on no more tasks than components
+(``connected_components``' ``_slot``); otherwise components are
+hash-placed.
 Components larger than ``max_hac_size`` (dense n² matrices don't scale past
 a few thousand nodes) are first split PACk-style (Monath et al., VLDB'22):
 connected components over their edges at or above ``cluster_threshold``,
@@ -379,8 +380,8 @@ def cluster_components(
 ) -> DataFrame:
     """(id, cluster_id, component, capped) per node of every scored component.
 
-    `scored` = (id_1, id_2, score); `components` = (id, component, _csize,
-    _slot) from ``connected_components``. Both are consumed more than once
+    `scored` = (id_1, id_2, score); `components` = (id, component, _csize)
+    from ``connected_components``, plus ``_slot`` on its driver path. Both are consumed more than once
     here, so the caller passes them already cut (``DedupPipeline.cluster``
     does).
 
@@ -394,8 +395,9 @@ def cluster_components(
 
     ``n_slots``: the range of the components' ``_slot`` column
     (connected_components reports it as ``stats_out["hac_slots"]``); the
-    grouped HAC then runs one task per slot. ``None`` (e.g. components
-    read back from a checkpoint) hash-places the components over
+    grouped HAC then runs one task per slot. ``None`` (components from
+    the distributed CC path or read back from a checkpoint) hash-places
+    the components over
     ``hac_tasks(n_edges)`` tasks instead, `n_edges` being the known
     scored-edge count or ``None``.
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from deduplipy_spark.partitioning import hac_tasks, largest_first_slots
+from deduplipy_spark.partitioning import hac_tasks
 
 # distributed-loop round limit: min-label propagation with pointer jumping
 # converges in O(log d) rounds, so hitting it means a bug, not a big graph
@@ -66,8 +66,9 @@ def auto_driver_max_edges(spark: SparkSession) -> int:
 
 def connected_components(edges: DataFrame,
                          edge_count: int | None = None,
-                         stats_out: dict | None = None) -> DataFrame:
-    """edges(id_1, id_2) -> (id, component, _csize, _slot) for every node
+                         stats_out: dict | None = None,
+                         max_hac_size: int | None = None) -> DataFrame:
+    """edges(id_1, id_2) -> (id, component, _csize[, _slot]) for every node
     appearing in edges.
 
     component = min node id reachable (the canonical representative);
@@ -77,15 +78,16 @@ def connected_components(edges: DataFrame,
     oversized-component split on ``_csize`` without re-deriving sizes in a
     separate groupBy+join job.
 
-    ``_slot`` = the component's grouped-HAC task, in
+    ``_slot`` (driver path only) = the component's grouped-HAC task, in
     ``[0, stats_out["hac_slots"])``. The driver path holds every
-    component's size, so it places components largest first by size² (the
-    dense HAC's cost grows at least that fast; `largest_first_slots`) over
-    min(`hac_tasks`, number of components) slots: no slot is empty and the
-    biggest components never share one while a slot is free. The
-    distributed path keeps hash placement, ``pmod(hash(component), n)``
-    over `hac_tasks` slots (a size-aware placement there would be its own
-    job).
+    component's size, so it deals the components that fit `max_hac_size`
+    (all of them when it is ``None``) out largest first, rank modulo
+    min(`hac_tasks`, their count) slots: no slot is empty and the biggest
+    components never share one. Components above `max_hac_size` take no
+    HAC slot (they sit on slot 0, which the grouped HAC never reads for
+    them). The distributed path returns no ``_slot``, and
+    ``cluster_components`` hash-places its components (a size-aware
+    placement there would be its own job).
 
     Scale-adaptive (same spirit as AQE's runtime broadcast switch): up to
     `auto_driver_max_edges` (derived from the driver heap) the edge list
@@ -99,12 +101,12 @@ def connected_components(edges: DataFrame,
     manifest) — skips the size-gate count job entirely.
 
     ``stats_out``: optional dict populated with facts this call learns for
-    free: ``n_edges`` and ``hac_slots`` (always) and ``max_component_size``
+    free: ``n_edges`` (always), ``max_component_size`` and ``hac_slots``
     (driver path only — one extra bincount next to the union-find).
     Downstream HAC uses them to skip its big-component existence probe and
-    to place its grouped-map tasks; the distributed path leaves
-    max_component_size unset (a global max there would be its own job,
-    costing exactly what the skip saves).
+    to place its grouped-map tasks; the distributed path leaves both unset
+    (a global max there would be its own job, costing exactly what the
+    skip saves).
     """
     # size gate as a parallel count, NOT limit(N+1).toPandas(): a global
     # limit executes as CollectLimit — the driver pulls partitions in
@@ -117,10 +119,10 @@ def connected_components(edges: DataFrame,
     n_edges = edge_count if edge_count is not None else edges.count()
     if stats_out is not None:
         stats_out["n_edges"] = n_edges
-    spark = edges.sparkSession
-    if n_edges <= auto_driver_max_edges(spark):
+    if n_edges <= auto_driver_max_edges(edges.sparkSession):
         probe = edges.select("id_1", "id_2").toPandas()
-        return _driver_union_find_pdf(probe, spark, stats_out)
+        return _driver_union_find_pdf(probe, edges.sparkSession, stats_out,
+                                      max_hac_size)
     bidir = (
         edges.select(F.col("id_1").alias("src"), F.col("id_2").alias("dst"))
         .union(edges.select(F.col("id_2").alias("src"), F.col("id_1").alias("dst")))
@@ -143,13 +145,8 @@ def connected_components(edges: DataFrame,
         # full-graph-sized block sets in the long-lived session
         for c in base_ckpts:
             _free_rdd(c)
-    n_slots = hac_tasks(spark, n_edges)
-    if stats_out is not None:
-        stats_out["hac_slots"] = n_slots
-    return labels.select(
-        "id", F.col("comp").alias("component"),
-        F.count(F.lit(1)).over(Window.partitionBy("comp")).alias("_csize"),
-        F.pmod(F.hash("comp"), F.lit(n_slots)).alias("_slot"),
+    return labels.select("id", F.col("comp").alias("component")).withColumn(
+        "_csize", F.count(F.lit(1)).over(Window.partitionBy("component"))
     )
 
 _PRIVATE_API_WARNED: set = set()
@@ -340,7 +337,8 @@ def _classic_round(bidir: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None) -> DataFrame:
+def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None,
+                           max_hac_size: int | None = None) -> DataFrame:
     """Vectorized min-label propagation with pointer jumping (numpy).
 
     Replaces the round-1 Python dict union-find: the per-edge interpreter
@@ -376,10 +374,15 @@ def _driver_union_find_pdf(pdf, spark, stats_out: dict | None = None) -> DataFra
     out = pd.DataFrame({"id": ids, "component": ids[labels]})
     counts = np.bincount(labels, minlength=ids.shape[0])
     out["_csize"] = counts[labels].astype(np.int64)
+    # HAC placement: deal the components that fit max_hac_size out largest
+    # first, so the n_slots biggest take one slot each and none is empty
     roots = np.flatnonzero(counts)
-    n_slots = min(hac_tasks(spark, len(pdf)), roots.shape[0])
+    if max_hac_size is not None:
+        roots = roots[counts[roots] <= max_hac_size]
+    n_slots = max(1, min(hac_tasks(spark, len(pdf)), roots.shape[0]))
+    roots = roots[np.argsort(-counts[roots], kind="stable")]
     slot = np.zeros(ids.shape[0], dtype=np.int32)
-    slot[roots] = largest_first_slots(counts[roots].astype(np.int64) ** 2, n_slots)
+    slot[roots] = np.arange(roots.shape[0]) % n_slots
     out["_slot"] = slot[labels]
     if stats_out is not None:
         stats_out.update(max_component_size=int(counts.max()),

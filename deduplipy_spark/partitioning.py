@@ -10,7 +10,6 @@ Python stages in whole waves and never add a task that has no work.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 # scored edges per grouped-HAC task below which a task's numpy work is
@@ -19,25 +18,31 @@ HAC_EDGES_PER_TASK = 1000
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a DataFrame to one task per core when it has
-    fewer partitions than cores — the shared defensive guard in front of
-    narrow-but-CPU-heavy passes (signature/fingerprint UDFs, per-doc gram
-    explodes): scan splits are byte-based, python/gram cost is row-based,
-    so a small or well-compressed local input can scan into fewer
-    partitions than cores and pin the whole pass to them (measured in r6:
-    the single-split sf0.1 documents table ran every narrow
-    gram/fingerprint stage on ONE core).
+    """Round-robin repartition a DataFrame to one task per core when its
+    partitions would not fill whole waves of the cores: fewer partitions
+    than cores, or between one and two waves (cores < n < 2 * cores). It is
+    the shared defensive guard in front of narrow-but-CPU-heavy passes
+    (signature/fingerprint UDFs, per-doc gram explodes): scan splits are
+    byte-based, python/gram cost is row-based, so a small or
+    well-compressed local input can scan into fewer partitions than cores
+    and pin the whole pass to them (measured in r6: the single-split sf0.1
+    documents table ran every narrow gram/fingerprint stage on ONE core).
 
     One task per core: a second wave of small Python tasks pays the fixed
     per-task cost (module docstring) again for little balance. On the
     2,400-file hot_bands input, 8 signature tasks over 4 scan splits each
-    did ~0.03 s of hashing behind ~0.2 s of task time. File inputs already
-    scan into about one split per core (Spark sizes splits at
-    max(openCostInBytes, input bytes / cores)), so they keep their scan
-    partitions and skip the content shuffle. Returns `df` itself when it
-    is already partitioned enough, so callers can test `is`."""
+    did ~0.03 s of hashing behind ~0.2 s of task time. Between one and two
+    waves, a full wave plus a partial one idles cores: the signature stage
+    over 40,000 files with 6x content took 6.4 s on 5 partitions kept, 5.2
+    s repartitioned to 4 and 6.0 s to 8 (local[4], BENCH/NOTES.md). File
+    inputs already scan into about one split per core (Spark sizes splits
+    at max(openCostInBytes, input bytes / cores)), so they usually keep
+    their scan partitions and skip the content shuffle. Returns `df`
+    itself when it is already partitioned in whole waves, so callers can
+    test `is`."""
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
+    n = df.rdd.getNumPartitions()
+    if n < 2 * cores and n != cores:
         return df.repartition(cores)
     return df
 
@@ -52,31 +57,3 @@ def hac_tasks(spark: SparkSession, n_edges: int | None) -> int:
         return cores2
     return max(1, min(cores2, -(-int(n_edges) // HAC_EDGES_PER_TASK)))
 
-
-def largest_first_slots(weights: np.ndarray, n_slots: int) -> np.ndarray:
-    """Place items on `n_slots` slots largest first; returns each item's
-    slot as int32. The `n_slots` heaviest items (ties by position) take one
-    slot each, heaviest on slot 0. The rest, still heaviest first, fill the
-    slots' gaps up to one common water level in slot order, so a slot ends
-    at most one tail item above that level, the bound of LPT's greedy
-    least-loaded pick. Vectorized: a Python heap step per item, as LPT
-    takes it, cost 0.40 s per million components, twice the driver
-    union-find that sizes them. Needs positive weights and at least
-    `n_slots` items, and then no slot is empty."""
-    order = np.argsort(-np.asarray(weights), kind="stable")
-    w = np.asarray(weights, dtype=np.float64)
-    out = np.empty(w.shape[0], dtype=np.int32)
-    head, tail = order[:n_slots], order[n_slots:]
-    out[head] = np.arange(n_slots)
-    if tail.size:
-        load = w[head]                       # descending by slot
-        up = load[::-1]
-        # level over the k lightest slots; the first one that does not
-        # reach the next slot's load is the water level
-        levels = (w[tail].sum() + np.cumsum(up)) / np.arange(1, n_slots + 1)
-        level = levels[np.argmax(np.append(levels[:-1] <= up[1:], True))]
-        gap_end = np.cumsum(np.maximum(level - load, 0.0))
-        mid = np.cumsum(w[tail]) - w[tail] / 2
-        out[tail] = np.minimum(
-            np.searchsorted(gap_end, mid, side="right"), n_slots - 1)
-    return out

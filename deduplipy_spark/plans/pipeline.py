@@ -201,8 +201,9 @@ class DedupPipeline:
                 "spark.sql.adaptive.coalescePartitions.enabled",
                 str(waves == 1).lower())
         # Defensive repartition in front of the signature UDF, only when
-        # the input has fewer partitions than cores, and then to one task
-        # per core: each Python task pays ~0.13 s before its UDF body
+        # the input's partitions do not fill whole waves of the cores
+        # (fewer than cores, or between one and two waves), and then to one
+        # task per core: each Python task pays ~0.13 s before its UDF body
         # starts (partitioning.py), so a second wave of small signature
         # tasks cost more than it balanced. The session splits file scans
         # at 8MB with a 1MB open cost (session.py), so a small file input
@@ -218,7 +219,7 @@ class DedupPipeline:
             # (guide §2.4; measured: two concurrent ~0.9s scan+shuffle jobs
             # on the 50k corpus, r6 event-log profile). Gated on the
             # repartition path, which only fires for inputs with fewer
-            # partitions than cores — a real deployment scans
+            # than two waves of partitions — a real deployment scans
             # thousands of splits, never repartitions, and never caches
             # content; there the double scan is the intended trade (re-read
             # cheap columnar input rather than cache/shuffle content).
@@ -356,13 +357,15 @@ class DedupPipeline:
         # its big-component isEmpty probe — one driver job + two planning
         # gaps per run (guide §7.3; measured ~0.3s on the 50k corpus).
         # Checkpoint resumes and the distributed CC path leave it unset and
-        # keep the probe. hac_slots is the range of the components' _slot
-        # column, the HAC task count; a resume leaves it unset too.
+        # keep the probe. hac_slots is the range of the driver path's _slot
+        # column, the HAC task count; both also leave it unset and
+        # cluster_components hash-places the components instead.
         cc_stats: dict = {}
         comps = self._stage(
             "components",
             lambda: connected_components(scored, edge_count=n_edges,
-                                         stats_out=cc_stats),
+                                         stats_out=cc_stats,
+                                         max_hac_size=cfg.max_hac_size),
         )
         return self._stage(
             "clusters_nd", lambda: cluster_components(

@@ -247,25 +247,32 @@ def _ladder(base: int, size: int, score: float = 0.9):
 
 
 def test_driver_cc_places_hac_largest_first(spark):
-    """Driver-CC placement: the three largest components (400/380/360
-    nodes) land on distinct HAC slots, there are never more slots than
-    components, and every HAC partition holds a component."""
+    """Driver-CC placement: the three largest components that fit
+    max_hac_size (400/380/360 nodes) land on distinct HAC slots, there are
+    never more slots than such components, and every HAC partition holds
+    one. A 600-node component above max_hac_size takes no slot: it goes
+    through the PACk split instead."""
     from pyspark.sql import functions as F
 
-    cfg = EngineConfig(cluster_threshold=0.5, fill_missing=False)
+    cfg = EngineConfig(cluster_threshold=0.5, fill_missing=False,
+                       max_hac_size=500)
     big = [0, 10_000, 20_000]
     rows = (_ladder(big[0], 400) + _ladder(big[1], 380)
             + _ladder(big[2], 360))
     small = [(30_000 + 10 * k, 30_000 + 10 * k + 1, 0.9) for k in range(12)]
     small += _ladder(40_000, 3) + _ladder(40_010, 3)
-    for edges, n_comps in ((rows, 3), (rows + small, 17)):
+    huge = _ladder(50_000, 600)
+    for edges, n_fit, n_over in ((rows, 3, 0), (rows + small, 17, 0),
+                                 (rows + small + huge, 17, 1)):
         scored = spark.createDataFrame(
             edges, "id_1 long, id_2 long, score double")
         stats: dict = {}
-        comps = connected_components(scored, stats_out=stats).toPandas()
+        comps = connected_components(
+            scored, stats_out=stats, max_hac_size=cfg.max_hac_size,
+        ).toPandas()
         n_slots = stats["hac_slots"]
-        assert comps.component.nunique() == n_comps
-        assert n_slots == min(-(-len(edges) // 1000), n_comps)
+        assert comps.component.nunique() == n_fit + n_over
+        assert n_slots == min(-(-len(edges) // 1000), n_fit)
         slot_of = comps.groupby("component")._slot.first()
         assert slot_of.loc[big].nunique() == 3
         assert slot_of.between(0, n_slots - 1).all()
@@ -275,7 +282,8 @@ def test_driver_cc_places_hac_largest_first(spark):
             n_slots=n_slots,
         ).withColumn("p", F.spark_partition_id()).toPandas()
         assert len(out) == len(comps)
-        per_part = out.groupby("p").component.nunique()
+        fit = out[out.component != 50_000]     # the grouped HAC's rows
+        per_part = fit.groupby("p").component.nunique()
         assert sorted(per_part.index) == list(range(n_slots))  # none empty
         assert out[out.component.isin(big)].groupby(
             "component").p.first().nunique() == 3

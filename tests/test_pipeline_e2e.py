@@ -156,15 +156,16 @@ def test_pipeline_cuts_follow_one_rule(spark, partitions):
     pipe.close()
 
 
-@pytest.mark.parametrize("offset", [-7, -1, 0, 8])
+@pytest.mark.parametrize("offset", [-7, -1, 0, 1, 8])
 def test_ensure_parallelism_fills_one_wave(spark, offset):
-    """Below one partition per core the input is round-robined to exactly
-    one task per core; at or above it, it is returned as is."""
+    """Below one partition per core, and between one and two waves, the
+    input is round-robined to exactly one task per core; at one wave or at
+    two and more it is returned as is."""
     cores = spark.sparkContext.defaultParallelism
-    n = cores + offset                      # 1, cores-1, cores, 2*cores
+    n = cores + offset              # 1, cores-1, cores, cores+1, 2*cores
     df = spark.range(100, numPartitions=n)
     out = ensure_parallelism(df)
-    if n < cores:
+    if n < 2 * cores and n != cores:
         assert out.rdd.getNumPartitions() == cores
     else:
         assert out is df

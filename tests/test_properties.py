@@ -255,30 +255,6 @@ def test_centroid_linkage_n2000_under_one_second():
     assert best < 1.0, best
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.data())
-def test_largest_first_slots_fills_every_slot_near_level(data):
-    """The n_slots heaviest items take distinct slots, no slot is empty,
-    and no slot ends above LPT's bound: the heaviest item, or the mean
-    load plus the heaviest item left after the first n_slots."""
-    from deduplipy_spark.partitioning import largest_first_slots
-
-    w = np.array(data.draw(st.lists(
-        st.integers(min_value=1, max_value=10**12), min_size=1,
-        max_size=80)), dtype=np.int64)
-    n_slots = data.draw(st.integers(min_value=1, max_value=len(w)))
-    slot = largest_first_slots(w, n_slots)
-    assert slot.dtype == np.int32
-    assert slot.min() >= 0 and slot.max() < n_slots
-    assert (np.bincount(slot, minlength=n_slots) >= 1).all()
-    order = np.argsort(-w, kind="stable")
-    assert (slot[order[:n_slots]] == np.arange(n_slots)).all()
-    load = np.bincount(slot, weights=w.astype(float), minlength=n_slots)
-    tail_max = w[order[n_slots:]].max() if len(w) > n_slots else 0
-    bound = max(w.max(), w.sum() / n_slots + tail_max)
-    assert load.max() <= bound * (1 + 1e-9), (load, bound)
-
-
 @settings(max_examples=50, deadline=None)
 @given(st.data())
 def test_greedy_set_cover_reaches_recall(data):
